@@ -208,52 +208,44 @@ def insert_statements(
 
     # Global contiguous row index WITHOUT a single-partition window (a
     # Window.orderBy with no partitionBy funnels every tuple through one
-    # task — spills/OOMs on large tables). Instead, the distributed
-    # zipWithIndex shape, all in DataFrame ops:
-    #   1. range-partition on _ord (distributed sort into ordered ranges;
-    #      RangePartitioner's sampling is deterministically seeded, so the
-    #      count job and the final job see identical boundaries),
-    #   2. per-partition counts -> cumulative offsets (a metadata-sized
-    #      collect: one row per partition, like AQE stats),
-    #   3. index = partition offset + intra-partition row_number, where
-    #      the window now parallelises across partitions.
-    n_part = max(1, tuples.rdd.getNumPartitions())
-    if n_part == 1:
-        # single-split input (the tiny-table case): a global order is a
-        # partition-local sort, so skip the range sampler AND the
-        # per-partition count collect — two whole Spark jobs of fixed
-        # overhead PER TABLE, which dominate a many-small-tables catalog
-        # export (tools/bench_catalog.py: ~1 s/table before this path).
-        # The empty-window Exchange SinglePartition is a no-op here:
-        # the input already IS one partition.
-        w = Window.partitionBy(F.lit(0)).orderBy("_ord")
-        idx = F.row_number().over(w) - F.lit(1)
-        batched = tuples.select(
-            "t",
-            idx.alias("_idx"),
-            F.floor(idx / F.lit(batch_size)).alias("_batch"),
+    # task — spills/OOMs on large tables):
+    #   1. one job range-partitions on _ord and collects each range's
+    #      row count and max _ord (one row per partition),
+    #   2. those maxes become FIXED bucket bounds for the final job, and
+    #      each bucket's offset is the running count before it,
+    #   3. index = bucket offset + row_number within the bucket.
+    # The bounds must be collected values: RangePartitioner seeds its
+    # sample with the RDD id, so a second repartitionByRange in the final
+    # job would cut different ranges than the ones counted (INSERTs over
+    # batch_size). Equal keys share a range and NULLs sort first, so
+    # bucket i holds exactly range i's rows.
+    n_part = tuples.rdd.getNumPartitions()
+    if n_part > 1:
+        ranges = (
+            tuples.repartitionByRange(n_part, F.col("_ord"))
+            .withColumn("_pid", F.spark_partition_id())
+            .groupBy("_pid")
+            .agg(F.count(F.lit(1)).alias("_n"), F.max("_ord").alias("_max"))
+            .collect()
         )
-    else:
-        ranged = tuples.repartitionByRange(n_part, F.col("_ord")).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-        counts = (
-            ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
-        )
-        offsets, acc = [], 0
-        for r in sorted(counts, key=lambda r: r["_pid"]):
-            offsets.append((r["_pid"], acc))
+        off = F.when(F.col("_ord").isNull(), F.lit(0))
+        acc = 0
+        for r in sorted(ranges, key=lambda r: r["_pid"]):
+            if r["_max"] is not None:  # a NULL max is the all-NULL first range
+                off = off.when(F.col("_ord") <= F.lit(r["_max"]), F.lit(acc))
             acc += r["_n"]
-        if not offsets:
-            offsets = [(0, 0)]
-        off_df = df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-        w = Window.partitionBy("_pid").orderBy("_ord")
-        idx = F.col("_off") + F.row_number().over(w) - F.lit(1)
-        batched = ranged.join(F.broadcast(off_df), "_pid").select(
-            "t",
-            idx.alias("_idx"),
-            F.floor(idx / F.lit(batch_size)).alias("_batch"),
-        )
+        tuples = tuples.withColumn("_off", off)
+    else:
+        # single-split input (the tiny-table case): a global order is a
+        # partition-local sort, so skip the range sampler AND the count
+        # collect — two whole Spark jobs of fixed overhead PER TABLE,
+        # which dominate a many-small-tables catalog export
+        # (tools/bench_catalog.py: ~1 s/table before this path)
+        tuples = tuples.withColumn("_off", F.lit(0))
+    w = Window.partitionBy("_off").orderBy("_ord")
+    batched = tuples.select(
+        "t", (F.col("_off") + F.row_number().over(w) - 1).alias("_idx")
+    ).withColumn("_batch", F.floor(F.col("_idx") / F.lit(batch_size)))
     # collect_list order is not guaranteed after the groupBy shuffle;
     # sort each batch's <=batch_size tuples by their global index
     batch_body = F.concat_ws(

@@ -30,6 +30,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import release_registry, scoped_conf
+
 SHINGLE_K = 3
 NUM_HASHES = 16
 # banding theory: candidate threshold ~ (1/b)^(1/r); b=8, r=2 -> ~0.35,
@@ -320,9 +322,8 @@ def lsh_candidate_pairs(
         )
         out = full.unionByName(star).distinct()
         # materialise before releasing the sized relation both branches
-        # read; r15: last-call-released (was a bare persist — one
-        # stranded candidate relation per hot-bucket call)
-        out = _registry_persist(_HOTBUCKET_PERSISTS, out)
+        # read
+        out = release_registry("dedup.lsh_candidate_pairs")(out)
         out.count()
         return out
     finally:
@@ -376,28 +377,6 @@ def verify_jaccard_sided(
     )
 
 
-# last-call-released registries (r15, the _NGRAM_PERSISTS pattern —
-# VERDICT r14 #5's leak class): the returned DataFrames consume these
-# persists lazily, so each call releases the PREVIOUS call's cache; a
-# previously-returned DF that is still held simply recomputes.
-_MINHASH_PERSISTS: "list[DataFrame]" = []
-_SCREEN_PERSISTS: "list[DataFrame]" = []
-_HOTBUCKET_PERSISTS: "list[DataFrame]" = []
-
-
-def _registry_persist(registry: "list[DataFrame]", df: DataFrame) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    while registry:
-        try:
-            registry.pop().unpersist()
-        except Exception:
-            pass
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    registry.append(df)
-    return df
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -424,9 +403,7 @@ def minhash_lsh_pairs(
     """
     shingled = shingles(df, text_col, id_col)
     if persist:
-        # r15: last-call-released (was a bare persist — one stranded
-        # shingle-sized cached relation per call)
-        shingled = _registry_persist(_MINHASH_PERSISTS, shingled)
+        shingled = release_registry("dedup.minhash_lsh_pairs")(shingled)
     mode = _resolve_mode(mode)
     sig = minhash_signature(shingled, mode=mode)
     cands = lsh_candidate_pairs(sig, mode=mode, max_bucket=max_bucket)
@@ -535,10 +512,10 @@ def minhash_lsh_incremental(
             # shingle relations are cached, so the finally-unpersist
             # below cannot force a re-shingle and a per-call caller
             # (the streaming screen runs this once per micro-batch)
-            # does not accumulate shingle-sized cached blocks. r15:
-            # last-call-released — the small result itself also must
-            # not accumulate across micro-batches
-            out = _registry_persist(_SCREEN_PERSISTS, out)
+            # does not accumulate shingle-sized cached blocks; the
+            # small result itself must not accumulate across
+            # micro-batches either
+            out = release_registry("dedup.minhash_lsh_incremental")(out)
             out.count()
         return out
     finally:
@@ -776,8 +753,6 @@ def _screen_new_vs_landed(
     corpus still multiplies every epoch's verify work by B. Run
     exact_dedup (or the capped batch operator) over the corpus BEFORE
     seeding the index — a deduplicated landed side has no hot bands."""
-    from pyspark.storagelevel import StorageLevel
-
     banded_new = banded_signature(minhash_signature(sh_new, mode=mode), mode=mode)
     cands = (
         banded_new.alias("a")
@@ -795,9 +770,8 @@ def _screen_new_vs_landed(
         F.max("jaccard").alias("best_jaccard"),
     )
     if materialize:
-        # r15: last-call-released (accumulated one small cached relation
-        # per micro-batch in the streaming screen)
-        out = _registry_persist(_SCREEN_PERSISTS, out)
+        # the streaming screen calls this once per micro-batch
+        out = release_registry("dedup.screen_new_vs_landed")(out)
         out.count()
     return out
 
@@ -1143,11 +1117,10 @@ def compact_minhash_index_bucketed(
             f"keep_batches — a kept epoch cannot double as the fold "
             f"target; pass a different batch label"
         )
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_auto = spark.conf.get(auto_key)
-    spark.conf.set(auto_key, "false")
     staged = []
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+    ):
         keep = list(keep_batches)
         new_batch = (
             F.when(F.col("batch").isin(keep), F.col("batch")).otherwise(
@@ -1179,8 +1152,6 @@ def compact_minhash_index_bucketed(
                 w = w.option("path", f"{path}/{leaf}_c{uuid.uuid4().hex[:8]}")
             w.saveAsTable(tmp)
             staged.append((table, tmp))
-    finally:
-        spark.conf.set(auto_key, prev_auto)
     # swap only after BOTH staged writes committed, so a failure above
     # leaves the live index untouched; external tables keep their files
     # across DROP, so the replaced location is deleted explicitly or
@@ -1481,12 +1452,6 @@ def duck_minhash_incremental_sql(
 # ---------------------------------------------------------------------------
 
 
-# persisted relations of the LAST ngram_jaccard_pairs call, released on
-# the next invocation — bounds cache residency at one call's worth in a
-# long-lived session (see the in-function comment)
-_NGRAM_PERSISTS: list[DataFrame] = []
-
-
 class NgramFallbackWarning(UserWarning):
     """ngram_jaccard_pairs' adaptive df-cap degraded to quantile mode:
     the corpus has NO shingle under the absolute max_df, so candidate
@@ -1556,26 +1521,14 @@ def ngram_jaccard_pairs(
     See PERFORMANCE.md "Measured scaling" for the head-to-head numbers
     that motivated keeping both.
     """
+    # numpy scalars reach SQL text below; their repr is not SQL
+    threshold, fallback_quantile = float(threshold), float(fallback_quantile)
+    if max_df_quantile is not None:
+        max_df_quantile = float(max_df_quantile)
     if mode == "prefix":
         return ngram_jaccard_pairs_prefix(df, text_col, id_col, threshold)
-    shingled = shingles(df, text_col, id_col)
-    from pyspark.storagelevel import StorageLevel
-
-    # last-call-released persist cap (same pattern as the resample
-    # query's _RESAMPLE_PERSISTS): the returned DataFrame is lazy, so
-    # the caches cannot be dropped inside this call — but without a cap
-    # every invocation in a long-lived session would leave two cached
-    # relations behind. Each call releases the previous call's pair
-    # before registering its own, so at most one invocation's caches
-    # are ever resident. unpersist on a stopped session must not kill
-    # the new query.
-    while _NGRAM_PERSISTS:
-        try:
-            _NGRAM_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-    shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-    _NGRAM_PERSISTS.append(shingled)
+    keep = release_registry("dedup.ngram_jaccard_pairs")
+    shingled = keep(shingles(df, text_col, id_col))
     # shingle-set size rides the inverted index (one extra int through
     # the existing shuffle, no extra join): Jaccard >= t implies
     # min(|A|,|B|) >= t * max(|A|,|B|), so size-incompatible pairs are
@@ -1592,12 +1545,7 @@ def ngram_jaccard_pairs(
     # cliff guard added the second consumer). Cardinality is #distinct
     # shingles — the corpus dictionary, orders of magnitude below the
     # inverted index the operator already materialises.
-    dfs = (
-        inv.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("df_count"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    _NGRAM_PERSISTS.append(dfs)
+    dfs = keep(inv.groupBy("sh").agg(F.count(F.lit(1)).alias("df_count")))
     if max_df_quantile is not None:
         # one-row exact quantile of the df distribution, broadcast into
         # the filter — scale-relative stop-shingle cap
@@ -1761,25 +1709,13 @@ def ngram_containment_pairs(
     Scale shape: identical to the Jaccard index — one persisted shingle
     relation, one df dictionary, the 8-byte hashed-shingle self-join
     bounded by rare-bucket sizes, verification only on surviving pairs."""
-    shingled = shingles(df, text_col, id_col)
-    from pyspark.storagelevel import StorageLevel
-
-    while _NGRAM_PERSISTS:
-        try:
-            _NGRAM_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-    shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-    _NGRAM_PERSISTS.append(shingled)
+    threshold, fallback_quantile = float(threshold), float(fallback_quantile)
+    keep = release_registry("dedup.ngram_containment_pairs")
+    shingled = keep(shingles(df, text_col, id_col))
     inv = shingled.select(
         "id", F.size("s").alias("n"), F.explode("s").alias("sh")
     )
-    dfs = (
-        inv.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("df_count"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    _NGRAM_PERSISTS.append(dfs)
+    dfs = keep(inv.groupBy("sh").agg(F.count(F.lit(1)).alias("df_count")))
     capval = _adaptive_df_cap(
         dfs, max_df, fallback_quantile, "ngram_containment_pairs"
     )
@@ -1913,20 +1849,12 @@ def ngram_jaccard_pairs_prefix(
     id) — all key-partitioned, nothing quadratic in the corpus; the
     rank shuffle is the measured extra cost the default path avoids.
     """
-    shingled = shingles(df, text_col, id_col)
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
-    # r15: routed through the shared release registry — the prefix-mode
-    # persist was bare (one stranded cached relation per call; the
-    # bitext leak class, VERDICT r14 #5)
-    while _NGRAM_PERSISTS:
-        try:
-            _NGRAM_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-    shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-    _NGRAM_PERSISTS.append(shingled)
+    threshold = float(threshold)
+    shingled = release_registry("dedup.ngram_jaccard_pairs_prefix")(
+        shingles(df, text_col, id_col)
+    )
     inv = shingled.select(
         "id", F.size("s").alias("n"), F.explode("s").alias("sh")
     )
@@ -2230,12 +2158,6 @@ def simhash_wide(
     )
 
 
-# last-call-released persist cap for simhash_wide_near_pairs (same
-# pattern as _NGRAM_PERSISTS): at most one invocation's banded relation
-# stays cached in a long-lived session
-_SIMHASH_PERSISTS: list[DataFrame] = []
-
-
 def simhash_wide_near_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -2257,10 +2179,7 @@ def simhash_wide_near_pairs(
     Measured at sf0.1: 1.0 s -> 0.55 s median. The cached relation is
     3 small rows per doc (two longs + two ints) with MEMORY_AND_DISK
     spill, i.e. the operator's own output-scale materialisation, and
-    it is released on the next call via the same last-call-released
-    cap as ngram_jaccard_pairs."""
-    from pyspark.storagelevel import StorageLevel
-
+    it is released on the next call (:func:`release_registry`)."""
     sh = simhash_wide(df, text_col, id_col).select("doc_id", "simhash")
     mask = (1 << WIDE_BAND_BITS) - 1
     band_structs = ", ".join(
@@ -2268,14 +2187,9 @@ def simhash_wide_near_pairs(
         f"& {mask} AS band_val)"
         for b in range(WIDE_BANDS)
     )
-    banded = sh.select("doc_id", "simhash", F.expr(f"inline(array({band_structs}))"))
-    while _SIMHASH_PERSISTS:
-        try:
-            _SIMHASH_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    _SIMHASH_PERSISTS.append(banded)
+    banded = release_registry("dedup.simhash_wide_near_pairs")(
+        sh.select("doc_id", "simhash", F.expr(f"inline(array({band_structs}))"))
+    )
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(

@@ -25,27 +25,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
-# last-call-released persist cap for the bitext candidate relations
-# (r15, the _NGRAM_PERSISTS pattern): the returned DataFrame consumes
-# the persisted candidates lazily, so they cannot be unpersisted inside
-# the call — each call releases the PREVIOUS call's cache instead, so a
-# long-lived session (CLI/notebook) holds at most one invocation's
-# cached relation. unpersist on a stopped session must not kill the new
-# query. The bench clearCache()s anyway; this is session hygiene.
-_BITEXT_PERSISTS: "list[DataFrame]" = []
-
-
-def _bitext_persist(df: DataFrame) -> DataFrame:
-    while _BITEXT_PERSISTS:
-        try:
-            _BITEXT_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _BITEXT_PERSISTS.append(df)
-    return df
+from ..session import release_registry
 
 
 # ---------------------------------------------------------------------------
@@ -1962,7 +1943,7 @@ def mutual_top1_pairs(
     # TWICE per call. Post-projection rows are (id, id, cosine) — the
     # float arrays are projected away, so the cached bytes are pair-count
     # x 24B, MEMORY_AND_DISK so big cells spill instead of OOM.
-    cand = _bitext_persist(
+    cand = release_registry("similarity.mutual_top1_pairs")(
         a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine"))
     )
     w_a = Window.partitionBy("a_id").orderBy(
@@ -2042,7 +2023,7 @@ def bitext_margin_pairs(
     # cosine) rows (arrays projected away before the cache). The
     # mutuality check is a key join of the two grid-sized aggregates.
     # Plan-gated in tests/test_plans.py.
-    cand = _bitext_persist(
+    cand = release_registry("similarity.bitext_margin_pairs")(
         a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine"))
     )
     w_a = Window.partitionBy("a_id").orderBy(

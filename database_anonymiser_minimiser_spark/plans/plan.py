@@ -24,6 +24,7 @@ from ..config import Config, TableConfig
 from ..functions.rules import validate_rules
 from ..operators.anonymise import anonymise
 from ..operators.minimise import minimise
+from ..session import scoped_conf
 from ..sources.parquet import ParquetSource
 from .. import dump as dump_mod
 from .topo import sort_tables_by_dependency
@@ -42,33 +43,18 @@ from .topo import sort_tables_by_dependency
 _WIDE_CODEGEN_MAX = 200
 
 
-class _wide_codegen:
+def _wide_codegen(spark: SparkSession, max_width: int):
     """Raise spark.sql.codegen.maxFields for the duration of an export
     whose widest masked table is in the (100, 200] win window; restore
     the previous value after. Narrow tables are unaffected by a raised
     limit (maxFields only gates whether codegen is ATTEMPTED for plans
     wider than it), so one export-wide setting equals the per-table
     optimum."""
-
-    _KEY = "spark.sql.codegen.maxFields"
-
-    def __init__(self, spark: SparkSession, max_width: int) -> None:
-        self.spark = spark
-        self.active = 100 < max_width <= _WIDE_CODEGEN_MAX
-        self.width = max_width
-
-    def __enter__(self):
-        if self.active:
-            self.prev = self.spark.conf.get(self._KEY, None)
-            self.spark.conf.set(self._KEY, str(self.width + 10))
-        return self
-
-    def __exit__(self, *exc) -> None:
-        if self.active:
-            if self.prev is None:
-                self.spark.conf.unset(self._KEY)
-            else:
-                self.spark.conf.set(self._KEY, self.prev)
+    active = 100 < max_width <= _WIDE_CODEGEN_MAX
+    return scoped_conf(
+        spark,
+        {"spark.sql.codegen.maxFields": str(max_width + 10)} if active else {},
+    )
 
 
 @dataclass

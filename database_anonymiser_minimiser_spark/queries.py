@@ -35,6 +35,7 @@ from .dump import duckdb_literal_sql, row_tuple_column
 from .functions.faker_deterministic import FAKER_FUNCTIONS
 from .operators.anonymise import anonymise
 from .operators.minimise import minimise, retain_after_date, retain_count
+from .session import release_registry
 from .sources.parquet import read_parquet_table
 
 TABLES = [
@@ -62,7 +63,11 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return read_parquet_table(spark, f"{sf_dir}/{table}.parquet")
 
 
-_FAN_OUT_MEMO: "dict[tuple, int]" = {}
+# session -> {(semanticHash, defaultParallelism): split count}; weak
+# keys so a stopped session's entries die with it
+_FAN_OUT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, int]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _fan_out(df: DataFrame) -> DataFrame:
@@ -83,48 +88,23 @@ def _fan_out(df: DataFrame) -> DataFrame:
     (21 ms, analysis only). The decision is result-INVARIANT (repartition
     or not never changes what a caller computes), so a stale memo entry
     after an in-session file swap costs at worst one suboptimal exchange,
-    never correctness; the memo is bounded and dies with the process."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
+    never correctness; the memo is bounded and dies with its session."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    memo = _FAN_OUT_MEMO.setdefault(df.sparkSession, {})
     try:
-        key = (id(df.sparkSession), df.semanticHash(), n)
+        key = (df.semanticHash(), n)
     except Exception:
         key = None
-    parts = _FAN_OUT_MEMO.get(key) if key is not None else None
+    parts = memo.get(key) if key is not None else None
     if parts is None:
         parts = df.rdd.getNumPartitions()
         if key is not None:
-            if len(_FAN_OUT_MEMO) >= 256:
-                _FAN_OUT_MEMO.clear()
-            _FAN_OUT_MEMO[key] = parts
+            if len(memo) >= 256:
+                memo.clear()
+            memo[key] = parts
     if parts >= n:
         return df
     return df.repartition(n)
-
-
-# per-query last-call-released persist registry (the generalised form of
-# the resample/ngram/simhash caps): a query whose returned-lazy plan
-# consumes one relation TWICE persists it here; the NEXT invocation of
-# the same query releases the previous call's cache first, so a
-# long-lived session holds at most one call's worth per query key.
-_QUERY_PERSISTS: dict[str, list[DataFrame]] = {}
-
-
-def _cap_persist(key: str, df: DataFrame) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK), releasing whatever the previous
-    call under ``key`` persisted. unpersist on a dead session must not
-    kill the new query (harness restarts Spark between calls)."""
-    from pyspark.storagelevel import StorageLevel
-
-    stash = _QUERY_PERSISTS.setdefault(key, [])
-    while stash:
-        try:
-            stash.pop().unpersist()
-        except Exception:
-            pass
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    stash.append(out)
-    return out
 
 
 def register(name: str, oracle: str | None = None):
@@ -4990,7 +4970,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a 1-row cross join. Both sums stay decimal-exact end-to-end; the
     threshold comparison happens in double on both engines after the
     identical decimal→string→double surface."""
-    from pyspark import StorageLevel
     li = load(spark, sf_dir, "lineitem")
     n = load(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 3)
     s = (
@@ -4999,11 +4978,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey")
     )
     dec = lambda col: F.col(col).cast("decimal(18,2)")
-    # r15: routed through the last-call-released registry (was a bare
-    # persist — every call in a long-lived session stranded one cached
-    # relation; the bitext leak class, VERDICT r14 #5)
-    pv = _cap_persist(
-        "q11_important_stock",
+    pv = release_registry("queries.q11_important_stock")(
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .groupBy(F.col("l_partkey").alias("p_partkey"))
         .agg(
@@ -5060,8 +5035,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     )
-    rev = _cap_persist(
-        "q15", li.groupBy("l_suppkey").agg(_dec_revenue().alias("total_revenue"))
+    rev = release_registry("queries.q15")(
+        li.groupBy("l_suppkey").agg(_dec_revenue().alias("total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -5233,8 +5208,7 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(substr(translate(md5(CAST(text AS STRING)), 'abcdef', '012345'), 1, 6) AS BIGINT) % 10"
     )
     flagged = docs.withColumn("is_new", samp == 0)
-    sh_all = _cap_persist(
-        "dedup_minhash_incremental",
+    sh_all = release_registry("queries.dedup_minhash_incremental")(
         _dd.shingles(flagged, extra_cols=["is_new"]),
     )
     return _dd.minhash_lsh_incremental(
@@ -5318,18 +5292,13 @@ def q20_excess_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted partials (same diamond pattern as q11), then the excess
     pairs semi-join into supplier. Quantities stay decimal-exact; the
     1.5x threshold compares doubles built identically on both engines."""
-    from pyspark import StorageLevel
-
     li = load(spark, sf_dir, "lineitem")
     p = (
         load(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%widget%"))
         .select("p_partkey")
     )
-    # r15: routed through the last-call-released registry (was a bare
-    # persist — one stranded cached relation per call; bitext leak class)
-    supplied = _cap_persist(
-        "q20_excess_supply",
+    supplied = release_registry("queries.q20_excess_supply")(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("l_suppkey", "l_partkey")
         .agg(
@@ -5508,13 +5477,12 @@ def q_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (the median aggregate and the join side), so the full
     text-scoring scan ran twice per action. Persist the PROJECTED
     (doc_id, lang, q) rows — ~20 B/row, orders of magnitude under the
-    text bytes the second scan re-tokenised — via the last-call-released
-    registry (a within-query intermediate, not a cross-run cache)."""
+    text bytes the second scan re-tokenised — via release_registry (a
+    within-query intermediate, not a cross-run cache)."""
     from .operators.textstats import quality_score_column
 
     docs = load(spark, sf_dir, "documents")
-    scored = _cap_persist(
-        "quality_quantile_filter",
+    scored = release_registry("queries.quality_quantile_filter")(
         docs.select(
             "doc_id", "lang", quality_score_column(F.col("text")).alias("q")
         ),
@@ -5933,22 +5901,6 @@ def _bpe_learn_from_words(words: DataFrame) -> "list[tuple]":
     return merges
 
 
-# last persisted (word, freq) relation of a tokenizer encode query —
-# released on the next invocation (the returned DataFrame consumes it
-# lazily, so it cannot be dropped inside the call; the cap keeps a
-# long-lived session at one invocation's cache, the _NGRAM_PERSISTS /
-# _RESAMPLE_PERSISTS pattern)
-_TOKENIZER_PERSISTS: "list[DataFrame]" = []
-
-
-def _release_tokenizer_persists() -> None:
-    while _TOKENIZER_PERSISTS:
-        try:
-            _TOKENIZER_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-
-
 @register("bpe_encode_token_count")
 def q_bpe_encode_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE SERVING: learn the first 8 merges (bpe_learn_merges), then
@@ -5967,17 +5919,14 @@ def q_bpe_encode_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterative trainer). Exact gate in tests/test_bpe_learn.py: the
     independent pure-Python reference learns the same merges, encodes
     every document, and must match every per-doc count."""
-    from pyspark.storagelevel import StorageLevel
-
-    _release_tokenizer_persists()
+    keep = release_registry("queries.bpe_encode_token_count")
     docs = load(spark, sf_dir, "documents")
     # ONE (word, freq) relation feeds BOTH the trainer's iterations and
     # the encode-side vocabulary (r14: the old shape re-derived the
     # distinct words from the corpus a second time — an extra corpus
     # explode + distinct shuffle — for the broadcast build; the word set
     # is identical by construction, so the result is unchanged).
-    words = _bpe_word_freqs(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    _TOKENIZER_PERSISTS.append(words)
+    words = keep(_bpe_word_freqs(docs))
     merges = _bpe_learn_from_words(words)  # K rows (bounded)
 
     doc_words = docs.select(
@@ -6044,18 +5993,15 @@ def q_unigram_encode_token_count(
     broadcast-join back to the corpus (the bpe_encode_token_count
     shape). Rows-only BY DESIGN; exact per-doc gate in
     tests/test_unigram.py via the independent reference."""
-    from pyspark.storagelevel import StorageLevel
-
     from .operators import unigram as U
 
-    _release_tokenizer_persists()
+    keep = release_registry("queries.unigram_encode_token_count")
     docs = load(spark, sf_dir, "documents")
     # ONE persisted (word, freq) relation serves the trainer's EM
     # iterations AND the encode-side segmentation input (r14: the old
     # shape re-exploded + re-distincted the corpus for the broadcast
     # build; identical word set by construction, result unchanged)
-    words = U.word_freqs(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    _TOKENIZER_PERSISTS.append(words)
+    words = keep(U.word_freqs(docs))
     vocab = U.train_unigram(docs, words=words)
     return U.unigram_token_counts(docs, vocab, words=words)
 
@@ -7186,26 +7132,6 @@ def q_funnel_windowed_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# last persisted sparse aggregate of the resample query — released on
-# the next invocation so repeated calls hold at most one cached relation
-_RESAMPLE_PERSISTS: list[DataFrame] = []
-
-
-def _release_resample_persists() -> None:
-    """Release the previous resample-family call's persist (its returned
-    DF, if still held, just recomputes). Best-effort: the stashed DF may
-    belong to an already-STOPPED SparkSession (harness restarted Spark
-    between calls) and unpersist must not kill the new query. r15: the
-    interpolate/locf members now release too — previously only
-    resample_hourly_dense did, so repeated interpolate/locf calls
-    accumulated one cached relation each (the bitext leak class)."""
-    while _RESAMPLE_PERSISTS:
-        try:
-            _RESAMPLE_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-
-
 @register(
     "events_interpolate_hourly",
     """
@@ -7263,8 +7189,7 @@ def q_events_interpolate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     IGNORE-NULLS windows shuffle only grid-sized rows keyed by type."""
     ev = load(spark, sf_dir, "events")
     d = F.col("value").cast("decimal(18,6)")
-    _release_resample_persists()
-    m = (
+    m = release_registry("queries.events_interpolate_hourly")(
         ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h"), "event_type")
         .agg(
             (
@@ -7272,9 +7197,7 @@ def q_events_interpolate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count(F.lit(1))
             ).alias("y")
         )
-        .persist()
     )
-    _RESAMPLE_PERSISTS.append(m)
     m.count()
     bounds = m.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     grid = bounds.select(
@@ -7353,8 +7276,7 @@ def q_events_locf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     forward-looking window."""
     ev = load(spark, sf_dir, "events")
     d = F.col("value").cast("decimal(18,6)")
-    _release_resample_persists()
-    m = (
+    m = release_registry("queries.events_locf_hourly")(
         ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h"), "event_type")
         .agg(
             (
@@ -7362,9 +7284,7 @@ def q_events_locf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count(F.lit(1))
             ).alias("y")
         )
-        .persist()
     )
-    _RESAMPLE_PERSISTS.append(m)
     m.count()
     bounds = m.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     grid = bounds.select(
@@ -7418,23 +7338,13 @@ def q_events_resample_hourly_dense(spark: SparkSession, sf_dir: str) -> DataFram
     driver materialisation — and the gap-fill joins broadcast.
     Plan-gated: zero parquet scans in the final plan (all three inputs
     read the in-memory relation), no sort-merge join."""
-    # cap the cache footprint at ONE relation across repeated calls:
-    # the previous call's persist is released here (its returned DF, if
-    # still held, just recomputes) — repeated grading/bench invocations
-    # must not accumulate cached blocks. Best-effort: the stashed DF may
-    # belong to an already-STOPPED SparkSession (harness restarted
-    # Spark between calls), in which case unpersist raises on a dead
-    # context and must not kill the new query
-    _release_resample_persists()
-    counts = (
+    counts = release_registry("queries.events_resample_hourly_dense")(
         load(spark, sf_dir, "events")
         .groupBy(
             F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
     )
-    _RESAMPLE_PERSISTS.append(counts)
     counts.count()  # materialise the single corpus scan
     bounds = counts.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     grid = bounds.select(

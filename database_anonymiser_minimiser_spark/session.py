@@ -18,8 +18,11 @@ from __future__ import annotations
 
 import os
 import warnings
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 
 def _existing_session() -> SparkSession | None:
@@ -136,6 +139,76 @@ def configure_for_determinism(spark: SparkSession) -> SparkSession:
     session we did not build (the driver passes its own)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+# key -> the DataFrames the last call under that key persisted. Plain
+# (not weak) keys: each value holds its session strongly, so a weak
+# session key would never be collected anyway.
+_HELD: dict[str, list[DataFrame]] = {}
+
+
+def release_registry(key: str) -> Callable[[DataFrame], DataFrame]:
+    """Release the previous call's caches under ``key``, return ``keep``.
+
+    For operators whose returned (lazy) plan reads a persisted relation:
+    the cache cannot be dropped inside the call, so each call releases
+    the PREVIOUS call's instead. A long-lived session (CLI, notebook,
+    streaming screen) then holds at most one call's caches per key; a
+    previously returned DataFrame that is still held just recomputes.
+    ``keep(df)`` persists ``df`` (MEMORY_AND_DISK) under ``key`` and
+    returns it. Use one key per function. Unpersist on a stopped
+    session must not kill the new call, so its failures are swallowed.
+    """
+    held = _HELD.setdefault(key, [])
+    while held:
+        try:
+            held.pop().unpersist()
+        except Exception:
+            pass
+
+    def keep(df: DataFrame) -> DataFrame:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        held.append(df)
+        return df
+
+    return keep
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set runtime ``conf`` keys for the body; on exit (raised or not)
+    restore each previous value, or unset keys that were not set."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def child_session(spark: SparkSession, overrides: dict[str, str]) -> SparkSession:
+    """A ``newSession()`` carrying the caller's runtime conf plus
+    ``overrides``, for work whose conf must not leak into queries
+    compiled concurrently on ``spark`` (the streaming canaries). The
+    child shares the SparkContext and the cache but not temp views:
+    a memory-sink table started on it is read through the child."""
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    child = spark.newSession()
+    # constructing a session re-points the global RDD.toDF at it; point
+    # it back so the caller's rdd.toDF() stays on the caller's session
+    _monkey_patch_RDD(spark)
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            child.conf.set(k, v)
+    for k, v in overrides.items():
+        child.conf.set(k, v)
+    return child
 
 
 def deployment_profile(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import TimestampNTZType
 
+from ..session import child_session
 from ..sources.parquet import _nanos_timestamp_columns, convert_ns_columns
 
 
@@ -218,27 +219,22 @@ def run_streaming_tumbling(
     this can share the batch oracle. The state-partition override (see
     :func:`_bounded_state_partitions`) is result-invariant — exact
     integer counts keyed by (window, event_type) do not depend on how
-    groups are partitioned — and is restored after the bounded run."""
-    ev = read_events_stream(spark, sf_dir)
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(int(old_parts), _bounded_state_partitions())),
+    groups are partitioned — and lives on a child session, so queries
+    compiled meanwhile on ``spark`` keep its own partition count."""
+    child = child_session(
+        spark, {"spark.sql.shuffle.partitions": str(_bounded_state_partitions())}
     )
-    try:
-        q = (
-            tumbling_counts(ev, width)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
+    name = f"tumbling_{uuid.uuid4().hex[:8]}"
+    q = (
+        tumbling_counts(read_events_stream(child, sf_dir), width)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return child.table(name)
 
 
 def run_streaming_with_watermark(

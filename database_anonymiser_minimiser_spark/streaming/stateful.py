@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import child_session
+
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, last_event_us bigint"
 STATE_SCHEMA = "n bigint, last_us bigint"
 
@@ -183,30 +185,28 @@ def run_stateful_totals(
     for i in range(n_splits):
         pq.write_table(tbl.slice(i * step, step), os.path.join(split_dir, f"part{i}.parquet"))
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(split_dir).schema
+    totals_fn = running_user_totals
+    overrides = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+    if impl == "transformWithState":
+        totals_fn = running_user_totals_tws
+        # transformWithState only runs on the RocksDB state store
+        # (SPARK-46815 operator family); the default HDFS-backed provider
+        # crashes the stateful worker. Set on a child session so the
+        # caller's later streams keep their provider.
+        overrides["spark.sql.streaming.stateStore.providerClass"] = (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        )
+    child = child_session(spark, overrides)
+    schema = child.read.parquet(split_dir).schema
     ns_cols = _nanos_timestamp_columns(Path(os.path.join(split_dir, "part0.parquet")))
     stream = (
-        spark.readStream.schema(schema)
+        child.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(split_dir)
     )
     stream = convert_ns_columns(stream, ns_cols)
 
-    totals_fn = running_user_totals
-    _provider_key = "spark.sql.streaming.stateStore.providerClass"
-    _prev_provider = spark.conf.get(_provider_key, None)
-    if impl == "transformWithState":
-        totals_fn = running_user_totals_tws
-        # transformWithState only runs on the RocksDB state store
-        # (SPARK-46815 operator family); the default HDFS-backed provider
-        # crashes the stateful worker. Restored in the finally below so
-        # later streams in the same session keep their provider.
-        spark.conf.set(
-            _provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
     name = f"stateful_{uuid.uuid4().hex[:8]}"
     writer = (
         totals_fn(stream)
@@ -246,11 +246,6 @@ def run_stateful_totals(
             q = writer.trigger(availableNow=True).start()
             q.awaitTermination()
     finally:
-        if impl == "transformWithState":
-            if _prev_provider is None:
-                spark.conf.unset(_provider_key)
-            else:
-                spark.conf.set(_provider_key, _prev_provider)
         # the query has terminated (or failed) by here; the split-file
         # source dir is no longer tailed — remove it so repeated runs do
         # not accumulate full event-table copies (the memory-sink table
@@ -263,7 +258,7 @@ def run_stateful_totals(
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    emissions = spark.table(name)
+    emissions = child.table(name)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         emissions.withColumn("rn", F.row_number().over(w))
@@ -364,6 +359,21 @@ def run_streaming_heavy_hitters(
     tbl = pq.read_table(src, columns=["user_id", "event_id"])
     split_dir = _fresh_split_dir("dbmask_hh_")
     name = f"hh_{uuid.uuid4().hex[:8]}"
+    # bounded-state rule (see events._bounded_state_partitions):
+    # the state key domain is HH_SHARDS (= 4) shards, so sizing the
+    # stateful exchange at the session default only multiplies
+    # state-store and Python-worker overhead by empty partitions —
+    # per micro-batch, times n_splits batches. Result-invariant
+    # (per-shard grouping is unchanged); set on a child session.
+    from .events import _bounded_state_partitions
+
+    child = child_session(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(_bounded_state_partitions()),
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+        },
+    )
     try:
         step = (tbl.num_rows + n_splits - 1) // n_splits
         for i in range(n_splits):
@@ -372,48 +382,30 @@ def run_streaming_heavy_hitters(
                 os.path.join(split_dir, f"part{i}.parquet"),
             )
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = spark.read.parquet(split_dir).schema
+        schema = child.read.parquet(split_dir).schema
         ns_cols = _nanos_timestamp_columns(
             Path(os.path.join(split_dir, "part0.parquet"))
         )
         stream = (
-            spark.readStream.schema(schema)
+            child.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(split_dir)
         )
         stream = convert_ns_columns(stream, ns_cols)
-
-        # bounded-state rule (r15, see events._bounded_state_partitions):
-        # the state key domain is HH_SHARDS (= 4) shards, so sizing the
-        # stateful exchange at the session default only multiplies
-        # state-store and Python-worker overhead by empty partitions —
-        # per micro-batch, times n_splits batches. Result-invariant
-        # (per-shard grouping is unchanged); restored after the run.
-        from .events import _bounded_state_partitions
-
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(int(old_parts), _bounded_state_partitions())),
+        q = (
+            running_shard_heavy_hitters(stream)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
         )
-        try:
-            q = (
-                running_shard_heavy_hitters(stream)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        q.awaitTermination()
 
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        emissions = spark.table(name)
+        emissions = child.table(name)
         w = Window.partitionBy("shard").orderBy(F.col("n_seen").desc())
         final = (
             emissions.withColumn("rn", F.row_number().over(w))
@@ -427,7 +419,7 @@ def run_streaming_heavy_hitters(
         rows = final.collect()
         return spark.createDataFrame(rows, final.schema)
     finally:
-        spark.catalog.dropTempView(name)
+        child.catalog.dropTempView(name)
         shutil.rmtree(split_dir, ignore_errors=True)
 
 

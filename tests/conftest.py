@@ -19,19 +19,36 @@ logging.raiseExceptions = False
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def _full_tier(config) -> bool:
+    """The full tier runs when asked for (``SPARK_GRAFT_FULL_SUITE``),
+    when ``-m`` or ``-k`` picks tests itself, or when any argument is a
+    node id (``file::test``): a test selected explicitly always runs."""
+    return bool(
+        os.environ.get("SPARK_GRAFT_FULL_SUITE")
+        or config.getoption("-m")
+        or config.getoption("-k")
+        or any("::" in a for a in config.args)
+    )
+
+
+def pytest_report_header(config):
+    if _full_tier(config):
+        return "spark-graft test tier: full"
+    return "spark-graft test tier: default (slow tests deselected)"
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    # -q hides the header; the tier still belongs in the run output
+    terminalreporter.write_line(pytest_report_header(config))
+
+
 def pytest_collection_modifyitems(config, items):
-    """Default tier vs full tier (r15, VERDICT r14 #2): the suite grew
-    past the grading harness's pytest window (~33 min wall; the r14
-    verify run was TRUNCATED at ~89% with zero failures), so the
-    heaviest tests — 10x-scale golden twins, long fuzz loops, multi-run
-    e2e drives, each a SCALE/FUZZ TWIN of a default-tier correctness
-    gate that still runs — are marked ``slow`` and deselected by
-    default (~14 min saved). ``SPARK_GRAFT_FULL_SUITE=1`` runs
-    everything; builder closing runs use it (see OPTIMIZATION_r15.md).
-    Explicit ``-m`` on the command line overrides this hook entirely."""
-    if os.environ.get("SPARK_GRAFT_FULL_SUITE"):
-        return
-    if config.getoption("-m"):
+    """Default tier vs full tier: the heaviest tests — 10x-scale golden
+    twins, long fuzz loops, multi-run e2e drives, each a SCALE/FUZZ TWIN
+    of a default-tier correctness gate that still runs — are marked
+    ``slow`` and deselected in the default tier, so the suite fits a
+    ~33 min pytest window. See :func:`_full_tier` for what runs them."""
+    if _full_tier(config):
         return
     selected, deselected = [], []
     for item in items:

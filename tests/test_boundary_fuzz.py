@@ -435,3 +435,50 @@ def test_tdigest_gate_band_headroom_on_corpus(sf_dir, table, value_of, group_of,
                 exact = float(np.percentile(vals, p * 100, method="linear"))
                 worst = max(worst, abs(est - exact) / _band(exact))
     assert worst <= 0.9, f"band utilization {worst:.3f} - gate edge at risk"
+
+
+# ---------------------------------------------------------------------------
+# numpy-scalar thresholds: numeric parameters reach SQL text (F.expr
+# f-strings) only after float() coercion at the public entry point —
+# numpy 2's repr of np.float64(0.5) is "np.float64(0.5)", not SQL
+# ---------------------------------------------------------------------------
+
+
+class _Numpy2Float(float):
+    """A float whose repr is numpy 2's scalar repr, so the SQL-text
+    hazard shows whichever numpy version is installed."""
+
+    def __repr__(self):
+        return f"np.float64({float(self)!r})"
+
+
+@pytest.mark.parametrize("np_type", ["float64", "float32", "numpy2_repr"])
+def test_ngram_operators_accept_numpy_thresholds(spark, np_type):
+    import numpy as np
+
+    from database_anonymiser_minimiser_spark.operators import dedup as D
+
+    cast = _Numpy2Float if np_type == "numpy2_repr" else getattr(np, np_type)
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(i, base + " " + " ".join(f"w{i}_{j}" for j in range(i % 4))) for i in range(8)]
+        + [(100 + i, f"unrelated text number {i} with its own words") for i in range(4)],
+        "doc_id long, text string",
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = rows(D.ngram_jaccard_pairs(docs, threshold=0.5))
+    assert want  # the planted near-duplicates are found
+    assert rows(D.ngram_jaccard_pairs(docs, threshold=cast(0.5))) == want
+    assert rows(
+        D.ngram_jaccard_pairs(
+            docs, threshold=cast(0.5), max_df_quantile=cast(0.5)
+        )
+    ) == rows(D.ngram_jaccard_pairs(docs, threshold=0.5, max_df_quantile=0.5))
+    assert rows(
+        D.ngram_containment_pairs(
+            docs, threshold=cast(0.75), fallback_quantile=cast(0.5)
+        )
+    ) == rows(D.ngram_containment_pairs(docs, threshold=0.75, fallback_quantile=0.5))

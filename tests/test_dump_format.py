@@ -86,3 +86,34 @@ def test_drop_table():
     assert D.drop_table_statement("mysql", "t") == "DROP TABLE IF EXISTS `t`;"
     assert D.drop_table_statement("postgres", "t") == 'DROP TABLE IF EXISTS "t" CASCADE;'
     assert D.drop_table_statement("sqlite", "t") == 'DROP TABLE IF EXISTS "t";'
+
+
+def test_insert_batches_never_exceed_batch_size(spark):
+    """Multi-partition input, run three times: every INSERT holds at
+    most batch_size tuples, tuples come out in order_by order, the tuple
+    multiset is unchanged, and every run emits the same statements.
+    Range boundaries differ per Spark job (RangePartitioner seeds its
+    sample with the RDD id), so the ranges counted in one job must not
+    be re-cut by the final one."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    n = 20000
+    df = spark.range(n).select(
+        ((F.col("id") * 7919) % n).alias("id"),
+        F.concat(F.lit("v"), (F.col("id") % 97).cast("string")).alias("v"),
+    ).repartition(4)
+    want = sorted((r["id"], f"'{r['v']}'") for r in df.collect())
+    runs = []
+    for _ in range(3):
+        stmts = [
+            r["stmt"] for r in D.insert_statements(df, "t", order_by="id").collect()
+        ]
+        runs.append(stmts)
+        batches = [re.findall(r"^\((\d+), ('v\d+')\)[,;]$", s, re.M) for s in stmts]
+        assert all(0 < len(b) <= D.DEFAULT_BATCH_SIZE for b in batches)
+        got = [(int(i), v) for b in batches for i, v in b]
+        assert [i for i, _ in got] == sorted(i for i, _ in got)
+        assert got == want
+    assert runs[0] == runs[1] == runs[2]

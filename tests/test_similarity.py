@@ -916,10 +916,9 @@ def test_mutual_top1_pairs_planted(spark):
 
 
 def test_bitext_persists_released_across_calls(spark):
-    """r15 leak fix (VERDICT r14 #5): the bitext candidate persists must
-    be routed through the last-call-released registry — N repeated CLI/
-    notebook calls may strand at most ONE cached relation, and each call
-    releases the previous call's cache."""
+    """The bitext candidate persists go through release_registry: N
+    repeated CLI/notebook calls strand at most one call's cache per
+    function, and each call releases the previous call's cache."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -933,20 +932,18 @@ def test_bitext_persists_released_across_calls(spark):
     cent = [{"cid": 0, "cv": [1.0, 1.0, 1.0, 1.0]}]
 
     spark.catalog.clearCache()
-    S._BITEXT_PERSISTS.clear()
     cm = spark._jsparkSession.sharedState().cacheManager()
     base = cm.cachedData().size()
     for _ in range(3):
         S.mutual_top1_pairs(a, b, cent).collect()
-        assert len(S._BITEXT_PERSISTS) == 1  # at most one call's cache
         # JVM-side: net cached relations never exceed one call's worth
         # (repeat calls share a canonicalized plan, so the ceiling is 1)
         assert cm.cachedData().size() - base <= 1
-    for _ in range(2):  # the margin sibling shares the registry
+    for _ in range(2):
+        # the margin sibling's candidates are the same canonical plan,
+        # so its own key adds no second cached relation
         S.bitext_margin_pairs(a, b, cent).collect()
-        assert len(S._BITEXT_PERSISTS) == 1
         assert cm.cachedData().size() - base <= 1
-    S._BITEXT_PERSISTS.clear()
     spark.catalog.clearCache()
 
 

@@ -840,3 +840,65 @@ def test_streaming_neardup_ingest_checkpoint_resume(spark, tmp_path):
     for p in (prefix, fresh_prefix):
         for t in (f"{p}_bands", f"{p}_shingles"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_streaming_canary_leaves_caller_conf_alone(spark, sf_dir, monkeypatch):
+    """The tumbling canary sizes its stateful exchange on a child
+    session: a batch query compiled on the caller's session WHILE the
+    stream runs sees the caller's own shuffle-partition count, and the
+    canary's state operator still runs on the bounded count."""
+    import re
+    import threading
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from database_anonymiser_minimiser_spark.session import scoped_conf
+
+    started, compiled = threading.Event(), threading.Event()
+    queries, result = [], {}
+    orig_start = DataStreamWriter.start
+
+    def start(self, *a, **kw):
+        q = orig_start(self, *a, **kw)
+        queries.append(q)
+        started.set()
+        compiled.wait(timeout=120)  # hold the canary open until checked
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+
+    def canary():
+        try:
+            result["rows"] = rows_set(S.run_streaming_tumbling(spark, sf_dir))
+        except Exception as e:  # surfaced in the main thread
+            result["error"] = e
+        finally:
+            started.set()
+
+    key = "spark.sql.shuffle.partitions"
+    with scoped_conf(spark, {key: "11"}):
+        t = threading.Thread(target=canary)
+        t.start()
+        try:
+            assert started.wait(timeout=120)
+            seen = spark.conf.get(key)
+            plan = (
+                spark.range(100)
+                .groupBy((F.col("id") % 7).alias("k"))
+                .count()
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+        finally:
+            compiled.set()
+            t.join(timeout=300)
+    assert not t.is_alive()
+    assert "error" not in result, result.get("error")
+    assert seen == "11"
+    assert re.search(r"hashpartitioning\([^)]*, 11\)", plan), plan
+    assert result["rows"] == rows_set(S.tumbling_counts(load(spark, sf_dir, "events")))
+    (q,) = queries
+    state_ops = q.lastProgress["stateOperators"]
+    assert state_ops[0]["numShufflePartitions"] == S._bounded_state_partitions()
