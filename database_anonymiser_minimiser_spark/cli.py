@@ -76,16 +76,17 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--resume", action="store_true",
-        help="with --format parquet: skip tables whose dataset already "
-        "committed (_SUCCESS present) — restart an interrupted export "
-        "without recomputing finished tables",
+        help="with --format parquet or jsonl: skip tables whose dataset "
+        "already committed under the same rules (_SUCCESS and rules "
+        "fingerprint present) — restart an interrupted export without "
+        "recomputing finished tables",
     )
     p.add_argument(
         "--max-records-per-file", type=_positive_int, default=None,
         metavar="N",
-        help="with --format parquet: cap rows per output file (bounds "
-        "file size under partition skew — a hive partition holding a "
-        "hot key otherwise lands in one giant file)",
+        help="with --format parquet or jsonl: cap rows per output file "
+        "(bounds file size under partition skew — a hive partition "
+        "holding a hot key otherwise lands in one giant file)",
     )
     p.add_argument(
         "--sort-keys", action="store_true",
@@ -1239,6 +1240,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.dry_run:
         engine.dry_run()
         return 0
+    if args.sort_keys and args.format != "parquet":
+        print("error: --sort-keys requires --format parquet", file=sys.stderr)
+        return 2
     # export + release in ONE run (the reference's single export entry
     # point, main.go:80-199, extended with the privacy counterpart): a
     # config that both masks tables AND lists privacy.releases drives

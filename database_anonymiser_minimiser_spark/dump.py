@@ -36,7 +36,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import IO, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -324,6 +324,15 @@ class ExportStats:
     rows_exported: int = 0
     per_table_rows: dict[str, int] = field(default_factory=dict)
 
+    def add(self, name: str, rows: int | None) -> None:
+        """Count one finished table; ``rows=None`` means truncated."""
+        if rows is None:
+            self.tables_truncated += 1
+            return
+        self.rows_exported += rows
+        self.per_table_rows[name] = rows
+        self.tables_exported += 1
+
 
 def write_dump(
     out: IO[str],
@@ -343,7 +352,7 @@ def write_dump(
         out.write(drop_table_statement(db_type, name) + "\n")
         out.write(ddl.rstrip("\n") + "\n\n")
         if df is None:
-            stats.tables_truncated += 1
+            stats.add(name, None)
             continue
         stmts = insert_statements(df, name, order_by=order_by, db_type=db_type)
         n = 0
@@ -353,9 +362,7 @@ def write_dump(
             # newlines in data are escaped to literal \n) — counting them
             # avoids a df.count() that would RE-RUN the whole plan
             n += row["stmt"].count("\n(")
-        stats.rows_exported += n
-        stats.per_table_rows[name] = n
-        stats.tables_exported += 1
+        stats.add(name, n)
     out.write(footer_text(db_type))
     return stats
 
@@ -382,24 +389,26 @@ def write_dump_parallel(
     4 workers, 14.8 s at 8, 15.9 s at 16 — the limit is driver-side
     job submission, not executor slots).
     """
-    import shutil
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
     stats = ExportStats()
-    spool_root = tempfile.mkdtemp(prefix="dbmask_dump_")
 
-    def format_table(idx: int, name: str, df: DataFrame, order_by: str | None):
-        path = f"{spool_root}/{idx:04d}_{name}"
+    def format_table(path: str, name: str, df: DataFrame, order_by: str | None):
         stmts = insert_statements(df, name, order_by=order_by, db_type=db_type)
         stmts.coalesce(1).write.mode("overwrite").text(path)
         return path
 
     jobs: dict[str, object] = {}
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    # the pool exits first (waiting out every submitted job), then the
+    # spool directory goes — also when a table job or the sink raised
+    with tempfile.TemporaryDirectory(
+        prefix="dbmask_dump_", ignore_cleanup_errors=True
+    ) as spool_root, ThreadPoolExecutor(max_workers=max_workers) as pool:
         for i, (name, _ddl, df, order_by) in enumerate(tables):
             if df is not None:
-                jobs[name] = pool.submit(format_table, i, name, df, order_by)
+                path = f"{spool_root}/{i:04d}_{name}"
+                jobs[name] = pool.submit(format_table, path, name, df, order_by)
 
         out.write(header_text(db_type))
         for name, ddl, df, _order_by in tables:
@@ -407,7 +416,7 @@ def write_dump_parallel(
             out.write(drop_table_statement(db_type, name) + "\n")
             out.write(ddl.rstrip("\n") + "\n\n")
             if df is None:
-                stats.tables_truncated += 1
+                stats.add(name, None)
                 continue
             spool = jobs[name].result()  # wait only for THIS table
             rows = 0
@@ -417,12 +426,20 @@ def write_dump_parallel(
                         out.write(line)
                         if line.startswith("("):  # one tuple per line
                             rows += 1
-            stats.rows_exported += rows
-            stats.per_table_rows[name] = rows
-            stats.tables_exported += 1
+            stats.add(name, rows)
         out.write(footer_text(db_type))
-    shutil.rmtree(spool_root, ignore_errors=True)
     return stats
+
+
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter that the write fills in: after the
+    action ``obs.get["rows"]`` holds the rows written, with no second
+    scan. Accumulators from failed task attempts are dropped, so a
+    retried task counts once. Attach it to the DataFrame handed to
+    ``.write``, above any range exchange: the range sampler's job runs
+    the plan below the exchange too, and would count it again."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def write_parquet(
@@ -431,20 +448,23 @@ def write_parquet(
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     max_records_per_file: int | None = None,
-) -> None:
+) -> int:
     """Native sink alternative: columnar, partition-parallel, splittable —
-    what you actually want at 100 TB instead of a text dump.
+    what you actually want at 100 TB instead of a text dump. Returns the
+    rows written.
 
     ``partition_by`` hive-partitions the output directory so downstream
     readers get partition *pruning* (a date filter touches only matching
     directories — verified in ``tests/test_plans.py``).
     ``max_records_per_file`` bounds file size against partition skew."""
+    df, obs = _observed(df)
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", str(max_records_per_file))
     w.parquet(str(path))
+    return obs.get["rows"]
 
 
 def write_jsonl(
@@ -452,23 +472,20 @@ def write_jsonl(
     path: str | Path,
     mode: str = "overwrite",
     max_records_per_file: int | None = None,
-    compression: str | None = None,
-) -> None:
+) -> int:
     """JSON-Lines sink — the lingua franca of LLM training-data
     pipelines (one JSON object per line, shard-per-file, streamable by
-    any loader). Distributed and splittable like the parquet sink
-    (uncompressed or with a splittable codec); timestamps serialise as
-    ISO-8601 strings, arrays/maps as native JSON. ``max_records_per_
-    file`` caps SHARD size — training loaders shuffle at shard
-    granularity, so bounded shards are a data-quality property, not
-    just an IO one. ``compression`` e.g. ``gzip``/``zstd`` (gzip
-    shards are not splittable; at 100 TB prefer zstd or none)."""
+    any loader). Distributed and splittable like the parquet sink;
+    timestamps serialise as ISO-8601 strings, arrays/maps as native
+    JSON. ``max_records_per_file`` caps SHARD size — training loaders
+    shuffle at shard granularity, so bounded shards are a data-quality
+    property, not just an IO one. Returns the rows written."""
+    df, obs = _observed(df)
     w = df.write.mode(mode)
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    if compression:
-        w = w.option("compression", compression)
     w.json(str(path))
+    return obs.get["rows"]
 
 
 def write_sorted_parquet(
@@ -478,7 +495,7 @@ def write_sorted_parquet(
     num_partitions: int | None = None,
     mode: str = "overwrite",
     max_records_per_file: int | None = None,
-) -> None:
+) -> int:
     """Globally-ordered parquet: range-partition on the sort key, sort
     within each partition. File k's keys all precede file k+1's, and each
     file is internally sorted — a reader can binary-search the dataset
@@ -492,19 +509,22 @@ def write_sorted_parquet(
     plan must show RangePartitioning — never a global single-partition
     Sort (gated in tests/test_plans.py). Parquet min/max column stats on
     the sort key then give readers file-level pruning for key ranges.
+    Returns the rows written, counted above the range exchange.
     """
     cols = [F.col(c) for c in sort_by]
     if num_partitions:
         ranged = df.repartitionByRange(num_partitions, *cols)
     else:
         ranged = df.repartitionByRange(*cols)
-    writer = ranged.sortWithinPartitions(*cols).write.mode(mode)
+    ordered, obs = _observed(ranged.sortWithinPartitions(*cols))
+    writer = ordered.write.mode(mode)
     if max_records_per_file:
         # the cap applies inside each range partition; splitting a
         # sorted partition keeps global key order across the resulting
         # files, so the layout guarantee above survives the cap
         writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
     writer.parquet(str(path))
+    return obs.get["rows"]
 
 
 _Z_BITS = 16  # per-dimension resolution of the interleaved key

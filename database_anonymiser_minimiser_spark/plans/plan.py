@@ -17,6 +17,7 @@ from __future__ import annotations
 import sys
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -234,70 +235,41 @@ class Engine:
         matters. At 100 TB an export WILL be interrupted; restarting
         table 47 of 50 instead of table 1 is the difference between an
         incident and a retry."""
-        started = time.time()
-        stats = dump_mod.ExportStats()
-        for p in self.plan_tables():
-            fp = self._table_fingerprint(
-                p, (partition_by or {}).get(p.name), sort_keys=sort_keys
+        parts = partition_by or {}
+
+        def write(p: TablePlan, df: DataFrame, path: str) -> int:
+            if self._key_ordered(p, parts.get(p.name), sort_keys):
+                # key-ordered layout: range-partition + local sort, so
+                # parquet min/max stats on the key give readers
+                # file-level pruning and merge-joins consume the export
+                # without re-sorting (write_sorted_parquet's plan gate:
+                # RangePartitioning, never a global Sort)
+                return dump_mod.write_sorted_parquet(
+                    df,
+                    path,
+                    [p.config.primary_key],
+                    max_records_per_file=max_records_per_file,
+                )
+            return dump_mod.write_parquet(
+                df,
+                path,
+                partition_by=parts.get(p.name),
+                max_records_per_file=max_records_per_file,
             )
-            if (
-                resume
-                and self._dataset_committed(out_dir, p.name)
-                and self._read_fingerprint(out_dir, p.name) == fp
-            ):
-                if p.config.truncate:
-                    stats.tables_truncated += 1
-                else:
-                    n = self.spark.read.parquet(f"{out_dir}/{p.name}").count()
-                    stats.rows_exported += n
-                    stats.per_table_rows[p.name] = n
-                    stats.tables_exported += 1
-                continue
-            df = self.source.read(p.name)
-            df = df.limit(0) if p.config.truncate else p.build(df)
-            table_parts = (partition_by or {}).get(p.name)
-            with _wide_codegen(self.spark, len(df.columns)):
-                if (
-                    sort_keys
-                    and p.config.primary_key
-                    and not p.config.truncate
-                    and not table_parts
-                ):
-                    # key-ordered layout: range-partition + local sort,
-                    # so parquet min/max stats on the key give readers
-                    # file-level pruning and merge-joins consume the
-                    # export without re-sorting (write_sorted_parquet's
-                    # plan gate: RangePartitioning, never a global Sort)
-                    dump_mod.write_sorted_parquet(
-                        df,
-                        f"{out_dir}/{p.name}",
-                        [p.config.primary_key],
-                        max_records_per_file=max_records_per_file,
-                    )
-                else:
-                    dump_mod.write_parquet(
-                        df,
-                        f"{out_dir}/{p.name}",
-                        partition_by=table_parts,
-                        max_records_per_file=max_records_per_file,
-                    )
-            self._write_fingerprint(out_dir, p.name, fp)
-            if p.config.truncate:
-                stats.tables_truncated += 1
-            else:
-                n = self.spark.read.parquet(f"{out_dir}/{p.name}").count()
-                stats.rows_exported += n
-                stats.per_table_rows[p.name] = n
-                stats.tables_exported += 1
-        self._print_stats(stats, time.time() - started)
-        return stats
+
+        return self._export_datasets(
+            out_dir,
+            lambda p: self._table_fingerprint(p, parts.get(p.name), sort_keys),
+            write,
+            self.spark.read.parquet,
+            resume,
+        )
 
     def export_jsonl(
         self,
         out_dir: str,
         resume: bool = False,
         max_records_per_file: int | None = None,
-        compression: str | None = None,
     ) -> dump_mod.ExportStats:
         """JSON-Lines export: one JSONL dataset per table under
         ``out_dir`` — the training-data handoff format (every loader
@@ -309,46 +281,65 @@ class Engine:
         format-tagged so a parquet directory is never mistaken for a
         finished JSONL export); ``max_records_per_file`` bounds shard
         size for loader-granularity shuffling."""
+        return self._export_datasets(
+            out_dir,
+            lambda p: "jsonl:" + self._table_fingerprint(p, None),
+            lambda p, df, path: dump_mod.write_jsonl(
+                df, path, max_records_per_file=max_records_per_file
+            ),
+            self.spark.read.json,
+            resume,
+        )
+
+    def _export_datasets(
+        self,
+        out_dir: str,
+        fingerprint_of: Callable[[TablePlan], str],
+        write: Callable[[TablePlan, DataFrame, str], int],
+        read_back: Callable[[str], DataFrame],
+        resume: bool,
+    ) -> dump_mod.ExportStats:
+        """The dataset-export loop (exporter.go:72-80, 188-196): per
+        table, skip it when ``resume`` finds it committed under the same
+        fingerprint, else build, ``write`` (which returns the rows it
+        observed while writing) and commit the fingerprint. Only a
+        skipped table is counted by reading its dataset back."""
         started = time.time()
         stats = dump_mod.ExportStats()
         for p in self.plan_tables():
-            fp = "jsonl:" + self._table_fingerprint(p, None)
+            fp = fingerprint_of(p)
+            path = f"{out_dir}/{p.name}"
             if (
                 resume
                 and self._dataset_committed(out_dir, p.name)
                 and self._read_fingerprint(out_dir, p.name) == fp
             ):
-                if p.config.truncate:
-                    stats.tables_truncated += 1
-                else:
-                    n = self.spark.read.json(
-                        f"{out_dir}/{p.name}"
-                    ).count()
-                    stats.rows_exported += n
-                    stats.per_table_rows[p.name] = n
-                    stats.tables_exported += 1
+                # an empty truncated dataset has no schema to infer,
+                # hence no read-back for it
+                rows = None if p.config.truncate else read_back(path).count()
+                stats.add(p.name, rows)
                 continue
             df = self.source.read(p.name)
             df = df.limit(0) if p.config.truncate else p.build(df)
             with _wide_codegen(self.spark, len(df.columns)):
-                dump_mod.write_jsonl(
-                    df,
-                    f"{out_dir}/{p.name}",
-                    max_records_per_file=max_records_per_file,
-                    compression=compression,
-                )
+                rows = write(p, df, path)
             self._write_fingerprint(out_dir, p.name, fp)
-            if p.config.truncate:
-                stats.tables_truncated += 1
-            else:
-                # count back what landed (an empty-schema read of a
-                # truncated dataset cannot infer, hence the branch)
-                n = self.spark.read.json(f"{out_dir}/{p.name}").count()
-                stats.rows_exported += n
-                stats.per_table_rows[p.name] = n
-                stats.tables_exported += 1
+            stats.add(p.name, None if p.config.truncate else rows)
         self._print_stats(stats, time.time() - started)
         return stats
+
+    @staticmethod
+    def _key_ordered(
+        plan: TablePlan, partition_by: list[str] | None, sort_keys: bool
+    ) -> bool:
+        """Whether ``export_parquet`` writes this table key-ordered: a
+        primary key, not truncated, not hive-partitioned."""
+        return bool(
+            sort_keys
+            and plan.config.primary_key
+            and not plan.config.truncate
+            and not partition_by
+        )
 
     @staticmethod
     def _table_fingerprint(
@@ -371,19 +362,13 @@ class Engine:
                 "partition_by": partition_by or None,
                 # key-ordered layout is part of the dataset's identity:
                 # a resume under the other flag must re-export, not
-                # skip. The predicate must mirror the write branch
-                # EXACTLY (primary key AND not truncated AND not
-                # hive-partitioned) — a fingerprint claiming key order
-                # for a table the writer laid out plain would force
-                # spurious full re-exports when --sort-keys toggles
+                # skip. The same predicate picks the write branch — a
+                # fingerprint claiming key order for a table the writer
+                # laid out plain would force spurious full re-exports
+                # when --sort-keys toggles
                 **(
                     {"sort_keys": True}
-                    if (
-                        sort_keys
-                        and plan.config.primary_key
-                        and not plan.config.truncate
-                        and not partition_by
-                    )
+                    if Engine._key_ordered(plan, partition_by, sort_keys)
                     else {}
                 ),
             },
@@ -394,18 +379,23 @@ class Engine:
 
     _FINGERPRINT_MARKER = "_RULES_FINGERPRINT"
 
+    def _marker(self, out_dir: str, table: str, name: str):
+        """(FileSystem, Path) of ``out_dir/table/name``, resolved
+        through the Hadoop FileSystem for the path's scheme — a local
+        ``pathlib`` check would silently miss every remote URI
+        (s3a://, hdfs://) and turn --resume into a full re-export."""
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path(
+            f"{out_dir}/{table}/{name}"
+        )
+        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
+        return hpath.getFileSystem(conf), hpath
+
     def _write_fingerprint(self, out_dir: str, table: str, fp: str) -> None:
         """Commit the rules fingerprint next to the dataset (after the
         parquet job's own ``_SUCCESS`` commit, so an interrupt between
         the two leaves marker-without-fingerprint => re-export, never
         the unsafe inverse)."""
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(
-            f"{out_dir}/{table}/{self._FINGERPRINT_MARKER}"
-        )
-        fs = hpath.getFileSystem(
-            self.spark.sparkContext._jsc.hadoopConfiguration()
-        )
+        fs, hpath = self._marker(out_dir, table, self._FINGERPRINT_MARKER)
         out = fs.create(hpath, True)
         try:
             out.write(bytearray(fp.encode("ascii")))
@@ -414,34 +404,20 @@ class Engine:
 
     def _read_fingerprint(self, out_dir: str, table: str) -> str | None:
         """Stored fingerprint, or None for legacy/partial datasets."""
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(
-            f"{out_dir}/{table}/{self._FINGERPRINT_MARKER}"
-        )
-        fs = hpath.getFileSystem(
-            self.spark.sparkContext._jsc.hadoopConfiguration()
-        )
+        fs, hpath = self._marker(out_dir, table, self._FINGERPRINT_MARKER)
         if not fs.exists(hpath):
             return None
+        io_utils = self.spark._jvm.org.apache.hadoop.io.IOUtils
         stream = fs.open(hpath)
         try:
-            raw = bytes(
-                jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)
-            )
+            raw = bytes(io_utils.readFullyToByteArray(stream))
         finally:
             stream.close()
         return raw.decode("ascii", errors="replace")
 
     def _dataset_committed(self, out_dir: str, table: str) -> bool:
-        """True iff ``out_dir/table/_SUCCESS`` exists, checked through
-        the Hadoop FileSystem for the path's scheme — a local
-        ``pathlib`` check would silently report False for every remote
-        URI and turn --resume into a full re-export."""
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/{table}/_SUCCESS")
-        fs = hpath.getFileSystem(
-            self.spark.sparkContext._jsc.hadoopConfiguration()
-        )
+        """True iff ``out_dir/table/_SUCCESS`` exists."""
+        fs, hpath = self._marker(out_dir, table, "_SUCCESS")
         return bool(fs.exists(hpath))
 
     @staticmethod

@@ -257,7 +257,7 @@ def test_export_parquet_sort_keys_layout(spark, sf_dir, tmp_path):
     )
     out = str(tmp_path / "sorted_lake")
     eng = Engine(spark, cfg)
-    eng.export_parquet(out, sort_keys=True)
+    stats = eng.export_parquet(out, sort_keys=True)
     files = sorted(Path(f"{out}/orders").glob("part-*.parquet"))
     assert len(files) >= 1
     ranges = []
@@ -273,6 +273,11 @@ def test_export_parquet_sort_keys_layout(spark, sf_dir, tmp_path):
     assert (
         spark.read.parquet(f"{out}/orders").count()
         == spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    )
+    # the count observed during the write (above the range exchange,
+    # whose sampler job would count the rows again) is what landed
+    assert stats.per_table_rows["orders"] == (
+        spark.read.parquet(f"{out}/orders").count()
     )
     # layout flag is part of the dataset identity: resume under the
     # OTHER flag must re-export, not skip

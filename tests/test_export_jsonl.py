@@ -135,6 +135,12 @@ def test_cli_export_jsonl(tmp_path, capsys):
     rc = cli.main(["-c", str(cfgf), "--format", "jsonl"])
     _, err = capsys.readouterr()
     assert rc == 2 and "requires -o" in err
+    # --sort-keys is a parquet layout: any other format rejects it
+    for fmt in ("jsonl", "sql"):
+        rc = cli.main(["-c", str(cfgf), "--format", fmt, "--sort-keys"])
+        _, err = capsys.readouterr()
+        assert rc == 2
+        assert "error: --sort-keys requires --format parquet" in err
     out = str(tmp_path / "out")
     rc = cli.main(["-c", str(cfgf), "--format", "jsonl", "-o", out])
     assert rc == 0

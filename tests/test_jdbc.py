@@ -281,3 +281,4 @@ def test_derby_parallel_export_byte_identical(spark, derby, tmp_path):
     diffs = [(x, y) for x, y in zip(a, b) if x != y]
     assert all(x.startswith("-- Date:") for x, _ in diffs), diffs[:3]
     assert s1.per_table_rows == s2.per_table_rows == {"users": 20}
+    assert s1.rows_exported == s2.rows_exported

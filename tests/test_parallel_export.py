@@ -38,5 +38,6 @@ def test_parallel_equals_sequential(spark, sf_dir, tmp_path):
     assert all(x.startswith("-- Date:") for x, _ in diffs), diffs[:3]
 
     assert s1.per_table_rows == s2.per_table_rows
+    assert s1.rows_exported == s2.rows_exported
     assert s1.tables_truncated == s2.tables_truncated == 3
     assert s2.per_table_rows["orders"] == 40

@@ -1,9 +1,14 @@
 """Regenerate PLANS.md: formatted physical plans for the flagship
 queries with the scale property each plan demonstrates. Run from the
-repo root: python tools/dump_plans.py [sf_dir]."""
+repo root: python tools/dump_plans.py [sf_dir].
+
+Plan snapshots for an optimisation write-up instead write each named
+query's full ``explain("formatted")`` to ``<out>/<query>_<tag>.txt``:
+python tools/dump_plans.py SF_DIR --queries a,b --tag before --out plans/rNN"""
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -315,5 +320,28 @@ def main() -> None:
     spark.stop()
 
 
+def snapshots(argv: list[str]) -> None:
+    ap = argparse.ArgumentParser(description="per-query plan snapshots")
+    ap.add_argument("sf_dir")
+    ap.add_argument("--queries", required=True, help="comma-separated names")
+    ap.add_argument("--tag", default="before", help="file-name suffix")
+    ap.add_argument("--out", required=True, help="directory, e.g. plans/r16")
+    args = ap.parse_args(argv)
+    os.makedirs(args.out, exist_ok=True)
+    spark = get_spark(app_name="dbmask-spark-plans", master="local[4]",
+                      shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in args.queries.split(","):
+        plan = plan_of(Q.QUERIES[name](spark, args.sf_dir))
+        path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+    spark.stop()
+
+
 if __name__ == "__main__":
-    main()
+    if any(a.startswith("--") for a in sys.argv[1:]):
+        snapshots(sys.argv[1:])
+    else:
+        main()
