@@ -9,9 +9,12 @@ buffered writer, one table at a time (exporter.go:72-80).
 Here the hot path — per-value SQL-literal formatting + escaping + row
 tuple assembly — is built from JVM column expressions (replace/concat/
 date_format), so a 100 TB table formats inside WholeStageCodegen across
-all executors; Python only assembles the ordered file from per-table
-iterators (header -> tables in FK-topo order -> footer), streaming via
-``toLocalIterator`` so the driver never materialises a table.
+all executors, and sorted on the primary key there
+(``insert_statements``). Python assembles the ordered file (header ->
+tables in FK-topo order -> footer) from one tuple stream per table,
+read with ``toLocalIterator`` so the driver never materialises a table,
+and batches the INSERTs as it writes, like the reference's loop
+(``insert_batches``): the driver holds one partition and one batch.
 
 Output format parity (checked by tests against reference-derived goldens):
 - escaping: backslash doubling first, then ``'``->``''``, NUL->``\\0``,
@@ -21,7 +24,8 @@ Output format parity (checked by tests against reference-derived goldens):
   ``YYYY-MM-DD HH:MM:SS`` (exporter.go:312-336),
 - statements: ``INSERT INTO `t` (`c1`, `c2`) VALUES\\n(v, v),\\n(v, v);``
   batches of <=1000 rows (exporter.go:273-306),
-- headers/footers + DROP TABLE per dialect (exporter.go:91-166, 259-271).
+- headers/footers + DROP TABLE per dialect (exporter.go:91-166, 259-271),
+  identifiers quoted per dialect (``quote_ident``).
 
 Scale note: a single ordered text file is inherently a sequential sink —
 the parquet/delta writer (``write_parquet``) is the native alternative for
@@ -34,12 +38,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import IO, Iterator
+from itertools import islice
+from typing import IO, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 DEFAULT_BATCH_SIZE = 1000  # rows per multi-row INSERT (exporter.go:16-17)
 
@@ -185,82 +189,64 @@ def quote_ident(db_type: str, ident: str) -> str:
 
 
 def insert_statements(
-    df: DataFrame,
-    table: str,
-    order_by: str | None = None,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    db_type: str = "mysql",
+    df: DataFrame, table: str, order_by: str | None = None
 ) -> DataFrame:
-    """DataFrame of one ``stmt`` string column: multi-row INSERTs of
-    ``batch_size`` rows (exporter.go:273-306).
+    """The table's INSERT tuples in dump order: one ``t`` column of
+    ``(v1, v2, ...)`` text, formatted JVM-side (``row_tuple_column``).
 
-    Tuple formatting is distributed; only batching into numbered groups
-    needs a global row order. With ``order_by`` (pk) the order is
-    deterministic; without, source order is preserved like the reference
-    (which is likewise order-nondeterministic, mysql.go:163-166).
+    With ``order_by`` (the primary key) rows are sorted on it, the tuple
+    text breaking ties so NULL or repeated keys come out the same on
+    every run; without it rows keep scan-partition order, like the
+    reference (mysql.go:163-166). Every sink streams this DataFrame once
+    and ``insert_batches`` cuts it into multi-row INSERTs on the driver.
+
+    ``table`` is unused: the INSERT head comes from ``insert_head``. It
+    stays the second positional argument because ``perfbench/traced.py``
+    patches and calls this function as ``(df, table, order_by=...)``.
     """
-    cols = ", ".join(quote_ident(db_type, c) for c in df.columns)
-    head = f"INSERT INTO {quote_ident(db_type, table)} ({cols}) VALUES\n"
-    tuples = df.select(
-        row_tuple_column(df).alias("t"),
-        (F.col(f"`{order_by}`") if order_by else F.monotonically_increasing_id()).alias("_ord"),
-    )
+    t = row_tuple_column(df).alias("t")
+    if not order_by:
+        return df.select(t)
+    keyed = df.select(t, F.col(f"`{order_by}`").alias("_ord"))
+    return keyed.orderBy("_ord", "t").select("t")
 
-    # Global contiguous row index WITHOUT a single-partition window (a
-    # Window.orderBy with no partitionBy funnels every tuple through one
-    # task — spills/OOMs on large tables):
-    #   1. one job range-partitions on _ord and collects each range's
-    #      row count and max _ord (one row per partition),
-    #   2. those maxes become FIXED bucket bounds for the final job, and
-    #      each bucket's offset is the running count before it,
-    #   3. index = bucket offset + row_number within the bucket.
-    # The bounds must be collected values: RangePartitioner seeds its
-    # sample with the RDD id, so a second repartitionByRange in the final
-    # job would cut different ranges than the ones counted (INSERTs over
-    # batch_size). Equal keys share a range and NULLs sort first, so
-    # bucket i holds exactly range i's rows.
-    n_part = tuples.rdd.getNumPartitions()
-    if n_part > 1:
-        ranges = (
-            tuples.repartitionByRange(n_part, F.col("_ord"))
-            .withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .agg(F.count(F.lit(1)).alias("_n"), F.max("_ord").alias("_max"))
-            .collect()
-        )
-        off = F.when(F.col("_ord").isNull(), F.lit(0))
-        acc = 0
-        for r in sorted(ranges, key=lambda r: r["_pid"]):
-            if r["_max"] is not None:  # a NULL max is the all-NULL first range
-                off = off.when(F.col("_ord") <= F.lit(r["_max"]), F.lit(acc))
-            acc += r["_n"]
-        tuples = tuples.withColumn("_off", off)
-    else:
-        # single-split input (the tiny-table case): a global order is a
-        # partition-local sort, so skip the range sampler AND the count
-        # collect — two whole Spark jobs of fixed overhead PER TABLE,
-        # which dominate a many-small-tables catalog export
-        # (tools/bench_catalog.py: ~1 s/table before this path)
-        tuples = tuples.withColumn("_off", F.lit(0))
-    w = Window.partitionBy("_off").orderBy("_ord")
-    batched = tuples.select(
-        "t", (F.col("_off") + F.row_number().over(w) - 1).alias("_idx")
-    ).withColumn("_batch", F.floor(F.col("_idx") / F.lit(batch_size)))
-    # collect_list order is not guaranteed after the groupBy shuffle;
-    # sort each batch's <=batch_size tuples by their global index
-    batch_body = F.concat_ws(
-        ",\n",
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_idx", "t"))),
-            lambda s: s["t"],
-        ),
-    )
-    return (
-        batched.groupBy("_batch")
-        .agg(batch_body.alias("body"))
-        .orderBy("_batch")
-        .select(F.concat(F.lit(head), F.col("body"), F.lit(";")).alias("stmt"))
-    )
+
+def insert_head(db_type: str, table: str, columns: list[str]) -> str:
+    """``INSERT INTO `t` (`c1`, `c2`) VALUES`` and its newline."""
+    cols = ", ".join(quote_ident(db_type, c) for c in columns)
+    return f"INSERT INTO {quote_ident(db_type, table)} ({cols}) VALUES\n"
+
+
+def insert_batches(
+    head: str, tuples: Iterable[str], batch_size: int = DEFAULT_BATCH_SIZE
+) -> Iterator[tuple[str, int]]:
+    """(statement, tuples in it) for ``tuples`` in the order given: a new
+    multi-row INSERT every ``batch_size`` tuples, the reference's write
+    loop counter (exporter.go:273-306)."""
+    it = iter(tuples)
+    while batch := list(islice(it, batch_size)):
+        yield head + ",\n".join(batch) + ";", len(batch)
+
+
+def write_inserts(out: IO[str], head: str, tuples: Iterable[str]) -> int:
+    """Write ``tuples`` to ``out`` as INSERT statements, one per line;
+    returns the tuples written."""
+    rows = 0
+    for stmt, n in insert_batches(head, tuples):
+        out.write(stmt + "\n")
+        rows += n
+    return rows
+
+
+def stream_inserts(
+    out: IO[str], db_type: str, table: str, df: DataFrame, order_by: str | None
+) -> int:
+    """Write ``df`` to ``out`` as ``table``'s INSERTs; returns the rows
+    written. One action streams the tuples (``toLocalIterator``: one
+    partition at a time on the driver, never the whole table)."""
+    tuples = insert_statements(df, table, order_by=order_by)
+    rows = (r["t"] for r in tuples.toLocalIterator())
+    return write_inserts(out, insert_head(db_type, table, df.columns), rows)
 
 
 # ---------------------------------------------------------------------------
@@ -304,10 +290,8 @@ def footer_text(db_type: str) -> str:
 
 
 def drop_table_statement(db_type: str, table: str) -> str:
-    quoted = f"`{table}`" if db_type == "mysql" else f'"{table}"'
-    if db_type == "postgres":
-        return f"DROP TABLE IF EXISTS {quoted} CASCADE;"
-    return f"DROP TABLE IF EXISTS {quoted};"
+    cascade = " CASCADE" if db_type == "postgres" else ""
+    return f"DROP TABLE IF EXISTS {quote_ident(db_type, table)}{cascade};"
 
 
 # ---------------------------------------------------------------------------
@@ -334,6 +318,12 @@ class ExportStats:
         self.tables_exported += 1
 
 
+def _table_section(out: IO[str], db_type: str, name: str, ddl: str) -> None:
+    out.write(f"\n--\n-- Table: {name}\n--\n\n")
+    out.write(drop_table_statement(db_type, name) + "\n")
+    out.write(ddl.rstrip("\n") + "\n\n")
+
+
 def write_dump(
     out: IO[str],
     db_type: str,
@@ -343,28 +333,25 @@ def write_dump(
 
     ``tables`` yields (name, create_ddl, dataframe_or_None, order_by); a
     None dataframe means truncate (DDL only, exporter.go:191-197). The
-    iterator must already be in FK-topo order (schema.go:62-166).
+    iterator must already be in FK-topo order (schema.go:62-166). Each
+    table's tuples are streamed once (one ``toLocalIterator``) and cut
+    into INSERTs here, on the driver, as they are written.
     """
     stats = ExportStats()
     out.write(header_text(db_type))
     for name, ddl, df, order_by in tables:
-        out.write(f"\n--\n-- Table: {name}\n--\n\n")
-        out.write(drop_table_statement(db_type, name) + "\n")
-        out.write(ddl.rstrip("\n") + "\n\n")
-        if df is None:
-            stats.add(name, None)
-            continue
-        stmts = insert_statements(df, name, order_by=order_by, db_type=db_type)
-        n = 0
-        for row in stmts.toLocalIterator():  # streamed; never collected whole
-            out.write(row["stmt"] + "\n")
-            # each tuple sits on its own line starting "(" (embedded
-            # newlines in data are escaped to literal \n) — counting them
-            # avoids a df.count() that would RE-RUN the whole plan
-            n += row["stmt"].count("\n(")
-        stats.add(name, n)
+        _table_section(out, db_type, name, ddl)
+        rows = None if df is None else stream_inserts(out, db_type, name, df, order_by)
+        stats.add(name, rows)
     out.write(footer_text(db_type))
     return stats
+
+
+def _spooled_tuples(spool: str) -> Iterator[str]:
+    for part in sorted(Path(spool).glob("part-*")):
+        with open(part, encoding="utf-8") as f:
+            for line in f:  # one tuple per line: data newlines are escaped
+                yield line.rstrip("\n")
 
 
 def write_dump_parallel(
@@ -373,14 +360,15 @@ def write_dump_parallel(
     tables: list[tuple[str, str, DataFrame | None, str | None]],
     max_workers: int = 8,
 ) -> ExportStats:
-    """Parallel variant of ``write_dump``: per-table INSERT formatting
+    """Parallel variant of ``write_dump``: per-table tuple formatting
     runs as CONCURRENT Spark jobs (the reference is strictly sequential,
     exporter.go:72-80 — tables are independent, so only the sink COMMIT
     order needs the FK topo sort, SURVEY §3.1).
 
-    Each table's statements land in a spool file via ``df.write.text``
-    (distributed write, no driver materialisation); the driver then
-    streams the spools into the dump in topo order. Spark's scheduler
+    Each table's tuples land in a spool file, one per line, via
+    ``df.write.text`` (distributed write, no driver materialisation);
+    the driver then streams the spools into the dump in topo order and
+    cuts the INSERTs as ``write_dump`` does. Spark's scheduler
     interleaves the jobs across the cluster — small tables no longer
     serialise behind large ones.
 
@@ -395,8 +383,9 @@ def write_dump_parallel(
     stats = ExportStats()
 
     def format_table(path: str, name: str, df: DataFrame, order_by: str | None):
-        stmts = insert_statements(df, name, order_by=order_by, db_type=db_type)
-        stmts.coalesce(1).write.mode("overwrite").text(path)
+        tuples = insert_statements(df, name, order_by=order_by)
+        # one ordered part file, so its name order never matters
+        tuples.coalesce(1).write.mode("overwrite").text(path)
         return path
 
     jobs: dict[str, object] = {}
@@ -412,21 +401,12 @@ def write_dump_parallel(
 
         out.write(header_text(db_type))
         for name, ddl, df, _order_by in tables:
-            out.write(f"\n--\n-- Table: {name}\n--\n\n")
-            out.write(drop_table_statement(db_type, name) + "\n")
-            out.write(ddl.rstrip("\n") + "\n\n")
+            _table_section(out, db_type, name, ddl)
             if df is None:
                 stats.add(name, None)
                 continue
-            spool = jobs[name].result()  # wait only for THIS table
-            rows = 0
-            for part in sorted(Path(spool).glob("part-*")):
-                with open(part) as f:
-                    for line in f:
-                        out.write(line)
-                        if line.startswith("("):  # one tuple per line
-                            rows += 1
-            stats.add(name, rows)
+            tuples = _spooled_tuples(jobs[name].result())  # wait only for THIS table
+            stats.add(name, write_inserts(out, insert_head(db_type, name, df.columns), tuples))
         out.write(footer_text(db_type))
     return stats
 

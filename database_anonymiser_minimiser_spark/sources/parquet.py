@@ -88,11 +88,19 @@ def spark_type_to_sql(dt: T.DataType) -> str:
 def _nanos_timestamp_columns(path: Path) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorised
     reader rejects outright (PARQUET_TYPE_ILLEGAL). Detected from the footer
-    via pyarrow — metadata only, no data read."""
+    via pyarrow — metadata only, no data read. For a directory table the
+    footer is the first data file's in sorted order, skipping the
+    ``_``/``.`` files and directories Spark skips too."""
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        if path.is_dir():
+            path = min(
+                f for f in path.rglob("*")
+                if f.is_file()
+                and not any(n.startswith(("_", ".")) for n in f.relative_to(path).parts)
+            )
         schema = pq.read_schema(str(path))
         return [
             f.name

@@ -431,11 +431,12 @@ def run_streaming_export(
     a stream: each micro-batch is masked in flight and appended to the
     dump as multi-row INSERTs via foreachBatch. At scale this is the
     ingestion-time export: new files landing in the source directory
-    become dump increments without re-scanning landed data, and the
-    per-batch INSERT formatting is the same distributed JVM path as the
-    batch sink (dump.insert_statements). foreachBatch runs sequentially
-    per trigger, so appends never interleave. Returns rows exported."""
-    from ..dump import footer_text, header_text, insert_statements, quote_ident
+    become dump increments without re-scanning landed data. Each
+    micro-batch is computed once, through the batch sink's formatting
+    and INSERT batching (dump.stream_inserts). foreachBatch runs
+    sequentially per trigger, so appends never interleave. Returns rows
+    exported."""
+    from ..dump import footer_text, header_text, quote_ident, stream_inserts
     from ..functions.faker_deterministic import FAKER_FUNCTIONS
     from pyspark.sql import functions as F
 
@@ -459,13 +460,8 @@ def run_streaming_export(
     total = {"rows": 0}
 
     def sink(batch_df, epoch_id: int) -> None:
-        total["rows"] += batch_df.count()
-        stmts = insert_statements(
-            batch_df, "events", order_by="event_id", db_type=db_type
-        )
         with open(out_path, "a") as fh:
-            for row in stmts.toLocalIterator():
-                fh.write(row["stmt"] + "\n")
+            total["rows"] += stream_inserts(fh, db_type, "events", batch_df, "event_id")
 
     q = (
         masked.writeStream.foreachBatch(sink)

@@ -6,6 +6,9 @@ re-expressed as independent cases, plus dialect header/footer/DROP shape
 checks (``exporter_test.go:306-347``)."""
 
 import datetime
+import re
+
+import pytest
 
 from database_anonymiser_minimiser_spark import dump as D
 
@@ -86,17 +89,19 @@ def test_drop_table():
     assert D.drop_table_statement("mysql", "t") == "DROP TABLE IF EXISTS `t`;"
     assert D.drop_table_statement("postgres", "t") == 'DROP TABLE IF EXISTS "t" CASCADE;'
     assert D.drop_table_statement("sqlite", "t") == 'DROP TABLE IF EXISTS "t";'
+    # quote characters inside the name are doubled, as in CREATE and INSERT
+    assert D.drop_table_statement("mysql", "we`ird") == "DROP TABLE IF EXISTS `we``ird`;"
+    assert (
+        D.drop_table_statement("postgres", 'we"ird')
+        == 'DROP TABLE IF EXISTS "we""ird" CASCADE;'
+    )
+    assert D.drop_table_statement("sqlite", 'we"ird') == 'DROP TABLE IF EXISTS "we""ird";'
 
 
 def test_insert_batches_never_exceed_batch_size(spark):
     """Multi-partition input, run three times: every INSERT holds at
     most batch_size tuples, tuples come out in order_by order, the tuple
-    multiset is unchanged, and every run emits the same statements.
-    Range boundaries differ per Spark job (RangePartitioner seeds its
-    sample with the RDD id), so the ranges counted in one job must not
-    be re-cut by the final one."""
-    import re
-
+    multiset is unchanged, and every run emits the same statements."""
     from pyspark.sql import functions as F
 
     n = 20000
@@ -105,11 +110,12 @@ def test_insert_batches_never_exceed_batch_size(spark):
         F.concat(F.lit("v"), (F.col("id") % 97).cast("string")).alias("v"),
     ).repartition(4)
     want = sorted((r["id"], f"'{r['v']}'") for r in df.collect())
+    head = D.insert_head("mysql", "t", df.columns)
     runs = []
     for _ in range(3):
-        stmts = [
-            r["stmt"] for r in D.insert_statements(df, "t", order_by="id").collect()
-        ]
+        ordered = D.insert_statements(df, "t", order_by="id")
+        tuples = (r["t"] for r in ordered.toLocalIterator())
+        stmts = [stmt for stmt, _ in D.insert_batches(head, tuples)]
         runs.append(stmts)
         batches = [re.findall(r"^\((\d+), ('v\d+')\)[,;]$", s, re.M) for s in stmts]
         assert all(0 < len(b) <= D.DEFAULT_BATCH_SIZE for b in batches)
@@ -117,3 +123,68 @@ def test_insert_batches_never_exceed_batch_size(spark):
         assert [i for i, _ in got] == sorted(i for i, _ in got)
         assert got == want
     assert runs[0] == runs[1] == runs[2]
+
+
+def test_insert_batches_text_and_counts():
+    out = list(D.insert_batches("INSERT INTO t VALUES\n", ["(1)", "(2)", "(3)"], 2))
+    assert out == [("INSERT INTO t VALUES\n(1),\n(2);", 2), ("INSERT INTO t VALUES\n(3);", 1)]
+    assert list(D.insert_batches("h", [], 2)) == []
+
+
+def _insert_sizes(text: str, table: str) -> list[int]:
+    """Tuples per INSERT of ``table``'s section, in dump order."""
+    sizes: list[int] = []
+    section = text.split(f"-- Table: {table}\n", 1)[1].split("\n-- Table: ", 1)[0]
+    for line in section.splitlines():
+        if line.startswith("INSERT INTO"):
+            sizes.append(0)
+        elif line.startswith("("):
+            sizes[-1] += 1
+    return sizes
+
+
+@pytest.mark.parametrize("n", [0, 1, 999, 1000, 1001, 2500])
+def test_serial_and_parallel_dumps_identical(spark, n):
+    """A primary-key table with NULL keys and a multi-partition table
+    without one, around the batch boundaries: the serial and parallel
+    sinks write the same bytes, no INSERT holds more than batch_size
+    tuples, and the reported rows are the source rows."""
+    import io
+
+    from pyspark.sql import functions as F
+
+    ids = spark.range(0, n, 1, 3)
+    keyed = ids.select(
+        F.when(F.col("id") % 7 == 3, None).otherwise((F.col("id") * 31) % 10007).alias("k"),
+        F.concat(F.lit("r"), F.col("id").cast("string")).alias("v"),
+    )
+    plain = ids.select("id", F.concat(F.lit("it's "), F.col("id").cast("string")).alias("s"))
+    tables = [
+        ("keyed", "CREATE TABLE `keyed` (k BIGINT, v TEXT);", keyed, "k"),
+        ("empty", "CREATE TABLE `empty` (k BIGINT);", None, None),
+        ("plain", "CREATE TABLE `plain` (id BIGINT, s TEXT);", plain, None),
+    ]
+    serial, parallel = io.StringIO(), io.StringIO()
+    s1 = D.write_dump(serial, "mysql", iter(tables))
+    s2 = D.write_dump_parallel(parallel, "mysql", tables)
+
+    def undated(text: str) -> list[str]:
+        return [line for line in text.splitlines() if not line.startswith("-- Date:")]
+
+    assert undated(serial.getvalue()) == undated(parallel.getvalue())
+    text = serial.getvalue()
+    for name in ("keyed", "plain"):
+        sizes = _insert_sizes(text, name)
+        assert all(0 < k <= D.DEFAULT_BATCH_SIZE for k in sizes)
+        assert sum(sizes) == n and len(sizes) == -(-n // D.DEFAULT_BATCH_SIZE)
+    assert s1.per_table_rows == s2.per_table_rows == {
+        "keyed": keyed.count(),
+        "plain": plain.count(),
+    }
+    assert s1.tables_truncated == s2.tables_truncated == 1
+    keys = re.findall(r"^\((NULL|\d+), ", text.split("-- Table: plain")[0], re.M)
+    nulls = keys.count("NULL")
+    assert keys[:nulls] == ["NULL"] * nulls
+    assert [int(k) for k in keys[nulls:]] == sorted(int(k) for k in keys[nulls:])
+    plain_ids = re.findall(r"^\((\d+), 'it''s ", text, re.M)
+    assert [int(i) for i in plain_ids] == list(range(n))

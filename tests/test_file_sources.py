@@ -233,3 +233,31 @@ def test_preflight_empty_enumeration_fails_loudly(spark, tmp_path, capsys):
     assert main(["-c", str(cfg), "audit", "--preflight"]) == 2
     err = capsys.readouterr().err
     assert "preflight" in err and "no parquet data files" in err
+
+
+@pytest.mark.parametrize("single_file_first", [False, True])
+def test_parquet_directory_table_with_nanos_timestamps(spark, tmp_path, single_file_first):
+    """A ``<table>.parquet/`` directory holding a TIMESTAMP(NANOS) column
+    reads as a microsecond timestamp, whether or not a single-file ns
+    table was read first in the session (that read turns on
+    ``nanosAsLong``, under which an unconverted column is a bigint)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_anonymiser_minimiser_spark.session import scoped_conf
+    from database_anonymiser_minimiser_spark.sources.parquet import ParquetSource
+
+    nanos = [1_700_000_000_123_456_789, 1_600_000_000_000_000_999, None]
+    data = pa.table({"id": [1, 2, 3], "ts": pa.array(nanos, type=pa.timestamp("ns"))})
+    (tmp_path / "t.parquet").mkdir()
+    pq.write_table(data, tmp_path / "t.parquet" / "part-00000.parquet")
+    (tmp_path / "t.parquet" / "_SUCCESS").write_text("")
+    pq.write_table(data, tmp_path / "single.parquet")
+    src = ParquetSource(spark, tmp_path)
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "false"}):
+        if single_file_first:
+            src.read("single").collect()
+        df = src.read("t")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = df.orderBy("id").select(F.unix_micros("ts").alias("us")).collect()
+    assert [r["us"] for r in got] == [1_700_000_000_123_456, 1_600_000_000_000_000, None]
