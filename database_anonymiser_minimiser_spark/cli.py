@@ -71,10 +71,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--dry-run", action="store_true", help="print plan, export nothing")
     p.add_argument(
-        "--parallel", action="store_true",
-        help="format tables as concurrent Spark jobs (output unchanged)",
-    )
-    p.add_argument(
         "--resume", action="store_true",
         help="with --format parquet or jsonl: skip tables whose dataset "
         "already committed under the same rules (_SUCCESS and rules "
@@ -1325,7 +1321,7 @@ def main(argv: list[str] | None = None) -> int:
             if cfg.connection.type in ("mysql", "postgres", "sqlite")
             else "mysql"
         )
-        stats = engine.export(args.output, db_type=dialect, parallel=args.parallel)
+        stats = engine.export(args.output, db_type=dialect)
     if release_ledger is not None or contract_rows is not None:
         if release_ledger is not None:
             manifest = release_ledger.manifest()

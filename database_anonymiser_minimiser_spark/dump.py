@@ -10,11 +10,11 @@ Here the hot path — per-value SQL-literal formatting + escaping + row
 tuple assembly — is built from JVM column expressions (replace/concat/
 date_format), so a 100 TB table formats inside WholeStageCodegen across
 all executors, and sorted on the primary key there
-(``insert_statements``). Python assembles the ordered file (header ->
-tables in FK-topo order -> footer) from one tuple stream per table,
-read with ``toLocalIterator`` so the driver never materialises a table,
-and batches the INSERTs as it writes, like the reference's loop
-(``insert_batches``): the driver holds one partition and one batch.
+(``insert_statements``). Each table's tuples are spooled to a text file
+by a Spark write, the tables' writes running as concurrent jobs; Python
+assembles the ordered file (header -> tables in FK-topo order -> footer)
+from the spools and batches the INSERTs as it reads, like the
+reference's loop (``insert_batches``): the driver holds one batch.
 
 Output format parity (checked by tests against reference-derived goldens):
 - escaping: backslash doubling first, then ``'``->``''``, NUL->``\\0``,
@@ -35,10 +35,12 @@ only serialises the final concatenation.
 
 from __future__ import annotations
 
+import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from pathlib import Path
 from itertools import islice
+from pathlib import Path
 from typing import IO, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation
@@ -197,7 +199,7 @@ def insert_statements(
     With ``order_by`` (the primary key) rows are sorted on it, the tuple
     text breaking ties so NULL or repeated keys come out the same on
     every run; without it rows keep scan-partition order, like the
-    reference (mysql.go:163-166). Every sink streams this DataFrame once
+    reference (mysql.go:163-166). Every sink spools this DataFrame once
     and ``insert_batches`` cuts it into multi-row INSERTs on the driver.
 
     ``table`` is unused: the INSERT head comes from ``insert_head``. It
@@ -236,17 +238,6 @@ def write_inserts(out: IO[str], head: str, tuples: Iterable[str]) -> int:
         out.write(stmt + "\n")
         rows += n
     return rows
-
-
-def stream_inserts(
-    out: IO[str], db_type: str, table: str, df: DataFrame, order_by: str | None
-) -> int:
-    """Write ``df`` to ``out`` as ``table``'s INSERTs; returns the rows
-    written. One action streams the tuples (``toLocalIterator``: one
-    partition at a time on the driver, never the whole table)."""
-    tuples = insert_statements(df, table, order_by=order_by)
-    rows = (r["t"] for r in tuples.toLocalIterator())
-    return write_inserts(out, insert_head(db_type, table, df.columns), rows)
 
 
 # ---------------------------------------------------------------------------
@@ -324,27 +315,20 @@ def _table_section(out: IO[str], db_type: str, name: str, ddl: str) -> None:
     out.write(ddl.rstrip("\n") + "\n\n")
 
 
-def write_dump(
-    out: IO[str],
-    db_type: str,
-    tables: Iterator[tuple[str, str, DataFrame | None, str | None]],
-) -> ExportStats:
-    """Stream an ordered dump: header -> per-table sections -> footer.
+# Concurrent table spool jobs. Throughput saturates around 8 on a
+# many-small-tables catalog (tools/bench_catalog.py, 40 x 200-row tables,
+# local[32]: 18.1 s at 4 workers, 14.8 s at 8, 15.9 s at 16): the limit
+# is driver-side job submission, not executor slots.
+_SPOOL_WORKERS = 8
 
-    ``tables`` yields (name, create_ddl, dataframe_or_None, order_by); a
-    None dataframe means truncate (DDL only, exporter.go:191-197). The
-    iterator must already be in FK-topo order (schema.go:62-166). Each
-    table's tuples are streamed once (one ``toLocalIterator``) and cut
-    into INSERTs here, on the driver, as they are written.
-    """
-    stats = ExportStats()
-    out.write(header_text(db_type))
-    for name, ddl, df, order_by in tables:
-        _table_section(out, db_type, name, ddl)
-        rows = None if df is None else stream_inserts(out, db_type, name, df, order_by)
-        stats.add(name, rows)
-    out.write(footer_text(db_type))
-    return stats
+
+def _spool(spool: str, table: str, df: DataFrame, order_by: str | None) -> tuple[str, int]:
+    """Write ``df``'s INSERT tuples to the directory ``spool``, one tuple
+    per line in one part file (so part-file name order never matters);
+    returns ``spool`` and the rows the write observed."""
+    tuples, obs = _observed(insert_statements(df, table, order_by=order_by).coalesce(1))
+    tuples.write.mode("overwrite").text(Path(spool).as_uri())
+    return spool, obs.get["rows"]
 
 
 def _spooled_tuples(spool: str) -> Iterator[str]:
@@ -354,59 +338,82 @@ def _spooled_tuples(spool: str) -> Iterator[str]:
                 yield line.rstrip("\n")
 
 
-def write_dump_parallel(
+def _write_spool(
+    out: IO[str], db_type: str, table: str, columns: list[str], spool: str, observed: int
+) -> int:
+    """Cut ``table``'s spool into INSERTs on ``out``; returns the rows
+    written. Raises when the spool holds fewer or more tuples than its
+    write observed, as when the executors wrote it to a filesystem the
+    driver does not see."""
+    rows = write_inserts(out, insert_head(db_type, table, columns), _spooled_tuples(spool))
+    if rows != observed:
+        raise RuntimeError(
+            f"dump of table {table!r}: read {rows} tuples back from the spool "
+            f"{spool}, but its write observed {observed}"
+        )
+    return rows
+
+
+def spool_inserts(
+    out: IO[str], db_type: str, table: str, df: DataFrame, order_by: str | None
+) -> int:
+    """Write ``df`` to ``out`` as ``table``'s INSERTs through a private
+    spool; returns the rows written."""
+    with tempfile.TemporaryDirectory(prefix="dbmask_dump_", ignore_cleanup_errors=True) as root:
+        spooled = _spool(f"{root}/spool", table, df, order_by)
+        return _write_spool(out, db_type, table, df.columns, *spooled)
+
+
+def write_dump(
     out: IO[str],
     db_type: str,
-    tables: list[tuple[str, str, DataFrame | None, str | None]],
-    max_workers: int = 8,
+    tables: Iterable[tuple[str, str, DataFrame | None, str | None]],
 ) -> ExportStats:
-    """Parallel variant of ``write_dump``: per-table tuple formatting
-    runs as CONCURRENT Spark jobs (the reference is strictly sequential,
-    exporter.go:72-80 — tables are independent, so only the sink COMMIT
-    order needs the FK topo sort, SURVEY §3.1).
+    """Write an ordered dump: header -> per-table sections -> footer.
 
-    Each table's tuples land in a spool file, one per line, via
-    ``df.write.text`` (distributed write, no driver materialisation);
-    the driver then streams the spools into the dump in topo order and
-    cuts the INSERTs as ``write_dump`` does. Spark's scheduler
-    interleaves the jobs across the cluster — small tables no longer
-    serialise behind large ones.
+    ``tables`` yields (name, create_ddl, dataframe_or_None, order_by) in
+    FK-topo order (schema.go:62-166); a None dataframe means truncate
+    (DDL only, exporter.go:191-197). The reference writes tables strictly
+    one after another (exporter.go:72-80), but tables are independent:
+    only the commit order needs the topo sort (SURVEY §3.1). So each
+    table's tuples are spooled by a Spark text write, up to
+    ``_SPOOL_WORKERS`` tables at once, each under the job group
+    ``dump:<table>``, and the driver cuts each spool into INSERTs in topo
+    order, waiting only for the table it writes next.
 
-    ``max_workers`` saturates around 8 on a many-small-tables catalog
-    (tools/bench_catalog.py, 40 x 200-row tables, local[32]: 18.1 s at
-    4 workers, 14.8 s at 8, 15.9 s at 16 — the limit is driver-side
-    job submission, not executor slots).
+    The spool is a local temporary directory that the executors write
+    and the driver reads, so the executors must share the driver's
+    filesystem, as every ``local[N]`` session does. Where they do not,
+    the spool reads back short and the export fails naming the table;
+    the parquet and JSONL exporters are the multi-host path.
     """
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
+    tables = list(tables)
     stats = ExportStats()
 
-    def format_table(path: str, name: str, df: DataFrame, order_by: str | None):
-        tuples = insert_statements(df, name, order_by=order_by)
-        # one ordered part file, so its name order never matters
-        tuples.coalesce(1).write.mode("overwrite").text(path)
-        return path
+    def spool_table(spool: str, name: str, df: DataFrame, order_by: str | None):
+        # local properties are per thread: a pool thread never carries
+        # the caller's job group
+        df.sparkSession.sparkContext.setJobGroup(f"dump:{name}", f"dump {name}")
+        return _spool(spool, name, df, order_by)
 
-    jobs: dict[str, object] = {}
     # the pool exits first (waiting out every submitted job), then the
     # spool directory goes — also when a table job or the sink raised
     with tempfile.TemporaryDirectory(
         prefix="dbmask_dump_", ignore_cleanup_errors=True
-    ) as spool_root, ThreadPoolExecutor(max_workers=max_workers) as pool:
-        for i, (name, _ddl, df, order_by) in enumerate(tables):
-            if df is not None:
-                path = f"{spool_root}/{i:04d}_{name}"
-                jobs[name] = pool.submit(format_table, path, name, df, order_by)
-
+    ) as spool_root, ThreadPoolExecutor(max_workers=_SPOOL_WORKERS) as pool:
+        jobs = [
+            None if df is None
+            else pool.submit(spool_table, f"{spool_root}/{i:04d}", name, df, order_by)
+            for i, (name, _ddl, df, order_by) in enumerate(tables)
+        ]
         out.write(header_text(db_type))
-        for name, ddl, df, _order_by in tables:
+        for (name, ddl, df, _order_by), job in zip(tables, jobs):
             _table_section(out, db_type, name, ddl)
-            if df is None:
-                stats.add(name, None)
-                continue
-            tuples = _spooled_tuples(jobs[name].result())  # wait only for THIS table
-            stats.add(name, write_inserts(out, insert_head(db_type, name, df.columns), tuples))
+            # job.result() waits only for THIS table
+            rows = None if job is None else _write_spool(
+                out, db_type, name, df.columns, *job.result()
+            )
+            stats.add(name, rows)
         out.write(footer_text(db_type))
     return stats
 

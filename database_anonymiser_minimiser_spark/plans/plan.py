@@ -153,9 +153,7 @@ class Engine:
         print("\n".join(lines), file=out)
         return lines
 
-    def export_to(
-        self, out, db_type: str = "mysql", parallel: bool = False
-    ) -> dump_mod.ExportStats:
+    def export_to(self, out, db_type: str = "mysql") -> dump_mod.ExportStats:
         """Dump into any writable text stream (the reference writes to
         stdout when no -o is given, cmd/dbmask/main.go:146-156)."""
         started = time.time()
@@ -174,25 +172,22 @@ class Engine:
             default=0,
         )
         with _wide_codegen(self.spark, max_width):
-            if parallel:
-                stats = dump_mod.write_dump_parallel(out, db_type, sections)
-            else:
-                stats = dump_mod.write_dump(out, db_type, iter(sections))
+            stats = dump_mod.write_dump(out, db_type, sections)
         self._print_stats(stats, time.time() - started)
         return stats
 
     def export(
-        self, out_path: str | None, db_type: str = "mysql", parallel: bool = False
+        self, out_path: str | None, db_type: str = "mysql"
     ) -> dump_mod.ExportStats:
         """Full dump export (main.go:167-174). ``out_path=None`` streams
         to stdout like the reference with -o omitted (main.go:146-156).
-        ``parallel=True`` formats tables as concurrent Spark jobs (sink
-        commit order still follows the FK topo sort) — the reference
-        cannot do this (exporter.go:72-80 is strictly sequential)."""
+        Tables are formatted as concurrent Spark jobs while the sink
+        commits them in FK topo order (``dump.write_dump``); the
+        reference is strictly sequential (exporter.go:72-80)."""
         if out_path is None:
-            return self.export_to(sys.stdout, db_type=db_type, parallel=parallel)
+            return self.export_to(sys.stdout, db_type=db_type)
         with open(out_path, "w") as f:
-            return self.export_to(f, db_type=db_type, parallel=parallel)
+            return self.export_to(f, db_type=db_type)
 
     def export_parquet(
         self,

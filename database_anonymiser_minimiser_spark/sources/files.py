@@ -26,7 +26,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .parquet import read_parquet_table
+from .parquet import ParquetSource, read_parquet_table
 
 _FORMATS = (
     ".parquet", ".orc", ".csv", ".json", ".jsonl", ".ndjson", ".xml", ".txt"
@@ -95,15 +95,17 @@ def write_table(df: DataFrame, path: str | Path, mode: str = "overwrite") -> Non
         raise ValueError(f"unsupported table format {suffix!r}")
 
 
-class FilesSource:
+class FilesSource(ParquetSource):
     """Catalog + scan over a directory of mixed-format table files
     (``<table>.{parquet,orc,csv,json,jsonl,ndjson}``) — connection
     ``type: files``. The data-lake landing-zone shape: raw csv/jsonl
     drops next to columnar tables, one engine over all of them.
 
-    Same protocol as ParquetSource, so every downstream plan (anonymise,
-    minimise, topo-ordered dump) composes unchanged. Scale note: csv and
-    json catalogs use schema inference here (a second read of the file);
+    A ParquetSource with its own table listing and reader: columns,
+    reconstructed DDL, counts and sidecar FKs are ParquetSource's, so
+    every downstream plan (anonymise, minimise, topo-ordered dump)
+    composes unchanged. Scale note: csv and json catalogs use schema
+    inference here (a second read of the file);
     at 100 TB register explicit schemas per table via ``read_table``'s
     schema argument instead — the scan itself is still Catalyst-native
     with pushdown where the format supports it."""
@@ -129,46 +131,6 @@ class FilesSource:
         if table not in files:
             raise FileNotFoundError(f"table not found: {table} (in {self.path})")
         return read_table(self.spark, files[table])
-
-    def get_columns(self, table: str):
-        from .parquet import ColumnInfo, spark_type_to_sql
-
-        return [
-            ColumnInfo(f.name, spark_type_to_sql(f.dataType), f.nullable)
-            for f in self.read(table).schema.fields
-        ]
-
-    def get_table_schema(self, table: str, db_type: str | None = None) -> str:
-        # reconstructed DDL: quote for the export dialect (see
-        # ParquetSource.get_table_schema)
-        from ..dump import quote_ident
-
-        dt = db_type or "mysql"
-        cols = ",\n".join(
-            f"  {quote_ident(dt, c.name)} {c.data_type}"
-            f"{'' if c.is_nullable else ' NOT NULL'}"
-            for c in self.get_columns(table)
-        )
-        return f"CREATE TABLE {quote_ident(dt, table)} (\n{cols}\n);"
-
-    def get_row_count(self, table: str) -> int:
-        return self.read(table).count()
-
-    def get_foreign_keys(self):
-        from .parquet import TESTDATA_FOREIGN_KEYS, ForeignKey
-        import json as _json
-
-        sidecar = self.path / "foreign_keys.json"
-        if sidecar.exists():
-            rows = _json.loads(sidecar.read_text())
-            return [
-                ForeignKey(
-                    r["table"], r["column"], r["referenced_table"], r["referenced_column"]
-                )
-                for r in rows
-            ]
-        tables = set(self.get_tables())
-        return [fk for fk in TESTDATA_FOREIGN_KEYS if fk.table in tables]
 
 
 def read_parquet_evolved(spark: SparkSession, path: str | Path) -> DataFrame:

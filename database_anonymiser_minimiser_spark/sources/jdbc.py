@@ -33,7 +33,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import Connection
+from ..dump import quote_ident
 from ..plans.topo import ForeignKey
+from .parquet import create_table_ddl, schema_columns
 
 _JDBC_DRIVERS = {
     "mysql": "com.mysql.cj.jdbc.Driver",
@@ -57,14 +59,6 @@ def jdbc_url(conn: Connection) -> str:
         # embedded in-process database; create on first touch
         return f"jdbc:derby:{conn.file};create=true"
     raise ValueError(f"unsupported jdbc connection type: {conn.type}")
-
-
-def quote_identifier(conn_type: str, ident: str) -> str:
-    """SQL-injection-safe identifier quoting (mysql.go:237-240 backtick
-    doubling; postgres.go:288-291 / sqlite.go:251-254 quote doubling)."""
-    if conn_type == "mysql":
-        return "`" + ident.replace("`", "``") + "`"
-    return '"' + ident.replace('"', '""') + '"'
 
 
 def list_tables_sql(conn_type: str, database: str = "") -> str:
@@ -107,10 +101,10 @@ def scan_sql(
     optional strict ``col > 'ts'``, optional row limit. Dialect nit: Derby
     spells LIMIT as ``FETCH FIRST n ROWS ONLY`` (ANSI form).
     """
-    cols = ", ".join(quote_identifier(conn_type, c) for c in columns)
-    sql = f"SELECT {cols} FROM {quote_identifier(conn_type, table)}"
+    cols = ", ".join(quote_ident(conn_type, c) for c in columns)
+    sql = f"SELECT {cols} FROM {quote_ident(conn_type, table)}"
     if date_column and after_date:
-        sql += f" WHERE {quote_identifier(conn_type, date_column)} > '{after_date}'"
+        sql += f" WHERE {quote_ident(conn_type, date_column)} > '{after_date}'"
     if limit is not None:
         if conn_type == "derby":
             sql += f" FETCH FIRST {int(limit)} ROWS ONLY"
@@ -174,7 +168,7 @@ class JdbcSource:
         upper_bound: int | None = None,
     ) -> DataFrame:
         r = self._reader().option(
-            "dbtable", quote_identifier(self.conn.type, table)
+            "dbtable", quote_ident(self.conn.type, table)
         )
         if partition_column is not None:
             r = (
@@ -205,7 +199,7 @@ class JdbcSource:
             df.write.format("jdbc")
             .option("url", jdbc_url(self.conn))
             .option("driver", _JDBC_DRIVERS[self.conn.type])
-            .option("dbtable", quote_identifier(self.conn.type, table))
+            .option("dbtable", quote_ident(self.conn.type, table))
         )
         if column_types:
             w = w.option("createTableColumnTypes", column_types)
@@ -241,27 +235,17 @@ class JdbcCatalogSource:
         return self.jdbc.read(table)
 
     def get_columns(self, table: str):
-        from .parquet import ColumnInfo, spark_type_to_sql
-
-        return [
-            ColumnInfo(f.name, spark_type_to_sql(f.dataType), f.nullable)
-            for f in self.read(table).schema.fields
-        ]
+        return schema_columns(self.read(table).schema)
 
     def get_table_schema(self, table: str, db_type: str | None = None) -> str:
         """CREATE TABLE DDL reconstructed from the JDBC-reported schema
         (postgres.go:68-114 pattern), quoted for the SOURCE dialect —
         the reference exports a database back into its own dialect;
         ``db_type`` is accepted for interface parity and ignored."""
-        q = lambda ident: quote_identifier(self.conn.type, ident)
-        cols = ",\n".join(
-            f"  {q(c.name)} {c.data_type}{'' if c.is_nullable else ' NOT NULL'}"
-            for c in self.get_columns(table)
-        )
-        return f"CREATE TABLE {q(table)} (\n{cols}\n);"
+        return create_table_ddl(self.conn.type, table, self.get_columns(table))
 
     def get_row_count(self, table: str) -> int:
-        q = quote_identifier(self.conn.type, table)
+        q = quote_ident(self.conn.type, table)
         sql = f"SELECT COUNT(*) AS n FROM {q}"
         return int(self.jdbc.query(sql).collect()[0][0])
 

@@ -33,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..dump import quote_ident
 from ..plans.topo import ForeignKey
+from ..session import scoped_conf
 
 
 @dataclass(frozen=True)
@@ -83,6 +85,21 @@ def spark_type_to_sql(dt: T.DataType) -> str:
     if simple.startswith("array") or simple.startswith("struct") or simple.startswith("map"):
         return "JSON"  # nested types have no SQL-dump dialect; documented divergence
     return _SPARK_TO_SQL_TYPE.get(simple, simple.upper())
+
+
+def schema_columns(schema: T.StructType) -> list[ColumnInfo]:
+    """Ordinal-order column metadata of a reader's schema."""
+    return [ColumnInfo(f.name, spark_type_to_sql(f.dataType), f.nullable) for f in schema.fields]
+
+
+def create_table_ddl(dialect: str, table: str, columns: list[ColumnInfo]) -> str:
+    """CREATE TABLE DDL reconstructed from column metadata, identifiers
+    quoted for ``dialect`` (postgres.go:68-114 pattern)."""
+    cols = ",\n".join(
+        f"  {quote_ident(dialect, c.name)} {c.data_type}{'' if c.is_nullable else ' NOT NULL'}"
+        for c in columns
+    )
+    return f"CREATE TABLE {quote_ident(dialect, table)} (\n{cols}\n);"
 
 
 def _nanos_timestamp_columns(path: Path) -> list[str]:
@@ -137,10 +154,11 @@ def read_parquet_table(spark: SparkSession, path: str | Path) -> DataFrame:
     """``spark.read.parquet`` that tolerates TIMESTAMP(NANOS) columns.
 
     Spark has no nanosecond timestamp type; with
-    ``spark.sql.legacy.parquet.nanosAsLong`` the column arrives as a
-    BIGINT of epoch-nanos, which we convert to a microsecond timestamp
-    with integer ``div`` (epoch-nanos ~1.7e18 exceeds double precision, so
-    float division would corrupt low digits). The ns->us truncation is a
+    ``spark.sql.legacy.parquet.nanosAsLong``, set for the read only, the
+    column arrives as a BIGINT of epoch-nanos, which we convert to a
+    microsecond timestamp with integer ``div`` (epoch-nanos ~1.7e18
+    exceeds double precision, so float division would corrupt low
+    digits). The ns->us truncation is a
     documented divergence; the DuckDB oracle compares at formatted-second
     granularity.
 
@@ -169,8 +187,10 @@ def read_parquet_table(spark: SparkSession, path: str | Path) -> DataFrame:
     if not ns_cols:
         df = spark.read.parquet(path)
     else:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = convert_ns_columns(spark.read.parquet(path), ns_cols)
+        # the read resolves its bigint schema inside the scope; later
+        # actions on ``df`` need no conf, and the caller's reads keep theirs
+        with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
+            df = convert_ns_columns(spark.read.parquet(path), ns_cols)
     if key is not None:
         if len(_READER_MEMO) >= _READER_MEMO_CAP:
             _READER_MEMO.clear()
@@ -203,10 +223,7 @@ class ParquetSource:
 
     def get_columns(self, table: str) -> list[ColumnInfo]:
         """S6: ordinal-order column metadata from the parquet footer."""
-        return [
-            ColumnInfo(f.name, spark_type_to_sql(f.dataType), f.nullable)
-            for f in self.read(table).schema.fields
-        ]
+        return schema_columns(self.read(table).schema)
 
     def get_table_schema(self, table: str, db_type: str | None = None) -> str:
         """S5: CREATE TABLE DDL reconstructed from the schema
@@ -214,15 +231,7 @@ class ParquetSource:
         its dialect always matches the source; a reconstructing source
         must instead quote identifiers for the EXPORT dialect (backticks
         are invalid DDL in postgres/sqlite)."""
-        from ..dump import quote_ident
-
-        dt = db_type or "mysql"
-        cols = ",\n".join(
-            f"  {quote_ident(dt, c.name)} {c.data_type}"
-            f"{'' if c.is_nullable else ' NOT NULL'}"
-            for c in self.get_columns(table)
-        )
-        return f"CREATE TABLE {quote_ident(dt, table)} (\n{cols}\n);"
+        return create_table_ddl(db_type or "mysql", table, self.get_columns(table))
 
     def get_row_count(self, table: str) -> int:
         """S8: COUNT(*) (mysql.go:227-235). Parquet footer metadata makes

@@ -28,15 +28,19 @@ reads) instead.
 from __future__ import annotations
 
 import sqlite3
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..dump import quote_ident
 from ..plans.topo import ForeignKey
 from .parquet import ColumnInfo
 
 BATCH_SIZE = 1000  # reference scan batch (driver.go:34-35)
+
+_q = partial(quote_ident, "sqlite")  # quote doubling (sqlite.go:251-254)
 
 
 def _decl_to_spark(decl: str | None) -> T.DataType:
@@ -114,7 +118,7 @@ class SqliteSource:
 
     def get_columns(self, table: str) -> list[ColumnInfo]:
         with self._connect() as con:
-            rows = con.execute(f"PRAGMA table_info({self._q(table)})").fetchall()
+            rows = con.execute(f"PRAGMA table_info({_q(table)})").fetchall()
         # (cid, name, type, notnull, dflt_value, pk) in ordinal order
         return [
             ColumnInfo(r[1], r[2] or "", not r[3], r[4]) for r in rows
@@ -125,7 +129,7 @@ class SqliteSource:
         with self._connect() as con:
             for table in self.get_tables():
                 for r in con.execute(
-                    f"PRAGMA foreign_key_list({self._q(table)})"
+                    f"PRAGMA foreign_key_list({_q(table)})"
                 ).fetchall():
                     # (id, seq, ref_table, from_col, to_col, ...)
                     fks.append(ForeignKey(table, r[3], r[2], r[4] or ""))
@@ -134,7 +138,7 @@ class SqliteSource:
     def get_row_count(self, table: str) -> int:
         with self._connect() as con:
             return con.execute(
-                f"SELECT COUNT(*) FROM {self._q(table)}"
+                f"SELECT COUNT(*) FROM {_q(table)}"
             ).fetchone()[0]
 
     # -- scan ---------------------------------------------------------------
@@ -177,7 +181,7 @@ class SqliteSource:
 
         with self._connect() as con:
             cur = con.execute(
-                f"SELECT {', '.join(self._q(c) for c in cols)} FROM {self._q(table)}"
+                f"SELECT {', '.join(_q(c) for c in cols)} FROM {_q(table)}"
             )
             batches = []
             while True:
@@ -201,8 +205,3 @@ class SqliteSource:
             tbl = pa.Table.from_batches(batches)
             return self.spark.createDataFrame(tbl, schema=schema)
         return self.spark.createDataFrame([], schema=schema)
-
-    @staticmethod
-    def _q(ident: str) -> str:
-        """Quote-doubling identifier guard (sqlite.go:251-254)."""
-        return '"' + ident.replace('"', '""') + '"'

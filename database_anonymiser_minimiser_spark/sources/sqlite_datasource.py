@@ -98,17 +98,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
-from .sqlite import _decl_to_spark
+from .sqlite import _decl_to_spark, _q
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
 
 BATCH_SIZE = 1000  # reference scan batch (driver.go:34-35)
-
-
-def _q(ident: str) -> str:
-    """Quote an identifier the SQLite way (double-quote doubling)."""
-    return '"' + ident.replace('"', '""') + '"'
 
 
 def _sql_literal(v) -> str | None:

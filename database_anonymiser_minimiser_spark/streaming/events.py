@@ -432,11 +432,11 @@ def run_streaming_export(
     dump as multi-row INSERTs via foreachBatch. At scale this is the
     ingestion-time export: new files landing in the source directory
     become dump increments without re-scanning landed data. Each
-    micro-batch is computed once, through the batch sink's formatting
-    and INSERT batching (dump.stream_inserts). foreachBatch runs
+    micro-batch is computed once, through the batch sink's formatting,
+    spool and INSERT batching (dump.spool_inserts). foreachBatch runs
     sequentially per trigger, so appends never interleave. Returns rows
     exported."""
-    from ..dump import footer_text, header_text, quote_ident, stream_inserts
+    from ..dump import footer_text, header_text, quote_ident, spool_inserts
     from ..functions.faker_deterministic import FAKER_FUNCTIONS
     from pyspark.sql import functions as F
 
@@ -461,7 +461,7 @@ def run_streaming_export(
 
     def sink(batch_df, epoch_id: int) -> None:
         with open(out_path, "a") as fh:
-            total["rows"] += stream_inserts(fh, db_type, "events", batch_df, "event_id")
+            total["rows"] += spool_inserts(fh, db_type, "events", batch_df, "event_id")
 
     q = (
         masked.writeStream.foreachBatch(sink)

@@ -146,9 +146,10 @@ def _insert_sizes(text: str, table: str) -> list[int]:
 @pytest.mark.parametrize("n", [0, 1, 999, 1000, 1001, 2500])
 def test_serial_and_parallel_dumps_identical(spark, n):
     """A primary-key table with NULL keys and a multi-partition table
-    without one, around the batch boundaries: the serial and parallel
-    sinks write the same bytes, no INSERT holds more than batch_size
-    tuples, and the reported rows are the source rows."""
+    without one, around the batch boundaries: two runs of the dump
+    writer, whose table jobs run concurrently, write the same bytes, no
+    INSERT holds more than batch_size tuples, and the reported rows are
+    the source rows."""
     import io
 
     from pyspark.sql import functions as F
@@ -164,15 +165,15 @@ def test_serial_and_parallel_dumps_identical(spark, n):
         ("empty", "CREATE TABLE `empty` (k BIGINT);", None, None),
         ("plain", "CREATE TABLE `plain` (id BIGINT, s TEXT);", plain, None),
     ]
-    serial, parallel = io.StringIO(), io.StringIO()
-    s1 = D.write_dump(serial, "mysql", iter(tables))
-    s2 = D.write_dump_parallel(parallel, "mysql", tables)
+    first, second = io.StringIO(), io.StringIO()
+    s1 = D.write_dump(first, "mysql", iter(tables))
+    s2 = D.write_dump(second, "mysql", tables)
 
     def undated(text: str) -> list[str]:
         return [line for line in text.splitlines() if not line.startswith("-- Date:")]
 
-    assert undated(serial.getvalue()) == undated(parallel.getvalue())
-    text = serial.getvalue()
+    assert undated(first.getvalue()) == undated(second.getvalue())
+    text = first.getvalue()
     for name in ("keyed", "plain"):
         sizes = _insert_sizes(text, name)
         assert all(0 < k <= D.DEFAULT_BATCH_SIZE for k in sizes)
@@ -188,3 +189,40 @@ def test_serial_and_parallel_dumps_identical(spark, n):
     assert [int(k) for k in keys[nulls:]] == sorted(int(k) for k in keys[nulls:])
     plain_ids = re.findall(r"^\((\d+), 'it''s ", text, re.M)
     assert [int(i) for i in plain_ids] == list(range(n))
+
+
+def test_short_spool_read_names_the_table(spark, monkeypatch):
+    """A spool that reads back fewer tuples than its write observed (as
+    when executors wrote it where the driver cannot see) fails the dump
+    with the table's name instead of writing a short table."""
+    import io
+
+    real = D._spooled_tuples
+
+    def drop_one(spool):
+        tuples = real(spool)
+        next(tuples, None)
+        return tuples
+
+    monkeypatch.setattr(D, "_spooled_tuples", drop_one)
+    df = spark.range(0, 50, 1, 2).select("id")
+    with pytest.raises(RuntimeError, match="'short_tbl'"):
+        D.write_dump(io.StringIO(), "mysql", [("short_tbl", "CREATE TABLE x (id BIGINT);", df, "id")])
+
+
+def test_dump_jobs_run_under_table_job_groups(spark):
+    """Every table that is not truncated runs its spool job under the
+    job group ``dump:<table>``, whichever thread submits it."""
+    import io
+
+    df = spark.range(0, 30, 1, 2).select("id")
+    tables = [
+        ("grp_keyed", "CREATE TABLE a (id BIGINT);", df, "id"),
+        ("grp_cut", "CREATE TABLE b (id BIGINT);", None, None),
+        ("grp_plain", "CREATE TABLE c (id BIGINT);", df, None),
+    ]
+    D.write_dump(io.StringIO(), "mysql", tables)
+    tracker = spark.sparkContext.statusTracker()
+    assert tracker.getJobIdsForGroup("dump:grp_keyed")
+    assert tracker.getJobIdsForGroup("dump:grp_plain")
+    assert not tracker.getJobIdsForGroup("dump:grp_cut")

@@ -261,3 +261,28 @@ def test_parquet_directory_table_with_nanos_timestamps(spark, tmp_path, single_f
         assert dict(df.dtypes)["ts"] == "timestamp"
         got = df.orderBy("id").select(F.unix_micros("ts").alias("us")).collect()
     assert [r["us"] for r in got] == [1_700_000_000_123_456, 1_600_000_000_000_000, None]
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+def test_nanos_read_leaves_session_conf_unchanged(spark, tmp_path, vectorized):
+    """Reading a single-file TIMESTAMP(NANOS) table turns on
+    ``nanosAsLong`` for the read only: the caller's value is unchanged
+    afterwards, and values collected after the read are microsecond
+    timestamps, with the vectorized reader on and off."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_anonymiser_minimiser_spark.session import scoped_conf
+    from database_anonymiser_minimiser_spark.sources.parquet import read_parquet_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    nanos = [1_700_000_000_123_456_789, None, 1_600_000_000_000_000_999]
+    data = pa.table({"id": [1, 2, 3], "ts": pa.array(nanos, type=pa.timestamp("ns"))})
+    pq.write_table(data, tmp_path / "fresh.parquet")
+    conf = {key: "false", "spark.sql.parquet.enableVectorizedReader": vectorized}
+    with scoped_conf(spark, conf):
+        df = read_parquet_table(spark, tmp_path / "fresh.parquet")
+        assert spark.conf.get(key) == "false"
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = df.orderBy("id").select(F.unix_micros("ts").alias("us")).collect()
+    assert [r["us"] for r in got] == [1_700_000_000_123_456, None, 1_600_000_000_000_000]

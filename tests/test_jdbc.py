@@ -5,6 +5,7 @@ Apache Derby, whose JDBC driver ships inside Spark's own jars: write
 over JDBC -> catalog -> pushdown scan -> full masked export."""
 
 from database_anonymiser_minimiser_spark.config import Connection
+from database_anonymiser_minimiser_spark.dump import quote_ident
 from database_anonymiser_minimiser_spark.sources import jdbc as J
 
 
@@ -26,9 +27,9 @@ def test_jdbc_urls():
 
 def test_quote_identifier_doubling():
     # mysql.go:237-240 backtick doubling; postgres.go:288-291 quote doubling
-    assert J.quote_identifier("mysql", "ta`ble") == "`ta``ble`"
-    assert J.quote_identifier("postgres", 'ta"ble') == '"ta""ble"'
-    assert J.quote_identifier("sqlite", "t") == '"t"'
+    assert quote_ident("mysql", "ta`ble") == "`ta``ble`"
+    assert quote_ident("postgres", 'ta"ble') == '"ta""ble"'
+    assert quote_ident("sqlite", "t") == '"t"'
 
 
 def test_list_tables_sql_shapes():
@@ -256,9 +257,9 @@ def test_derby_scan_sql_where_and_limit_combined(spark, derby_dated):
 
 
 def test_derby_parallel_export_byte_identical(spark, derby, tmp_path):
-    """write_dump_parallel over a LIVE JDBC source must be byte-identical
-    to the sequential path (the parquet-source equivalence lives in
-    test_parallel_export.py; this closes the JDBC-source x parallel-sink
+    """The concurrent dump writer over a LIVE JDBC source writes the same
+    bytes on every run (the parquet-source equivalence lives in
+    test_parallel_export.py; this closes the JDBC-source x dump-sink
     combination)."""
     from database_anonymiser_minimiser_spark.config import Config, TableConfig
     from database_anonymiser_minimiser_spark.plans.plan import Engine
@@ -273,10 +274,10 @@ def test_derby_parallel_export_byte_identical(spark, derby, tmp_path):
         },
     )
     engine = Engine(spark, cfg)
-    seq, par = tmp_path / "seq.sql", tmp_path / "par.sql"
-    s1 = engine.export(str(seq), db_type="mysql", parallel=False)
-    s2 = engine.export(str(par), db_type="mysql", parallel=True)
-    a, b = seq.read_text().splitlines(), par.read_text().splitlines()
+    first, second = tmp_path / "first.sql", tmp_path / "second.sql"
+    s1 = engine.export(str(first), db_type="mysql")
+    s2 = engine.export(str(second), db_type="mysql")
+    a, b = first.read_text().splitlines(), second.read_text().splitlines()
     assert len(a) == len(b)
     diffs = [(x, y) for x, y in zip(a, b) if x != y]
     assert all(x.startswith("-- Date:") for x, _ in diffs), diffs[:3]

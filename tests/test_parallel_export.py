@@ -1,6 +1,6 @@
-"""Parallel export must produce byte-identical output to the sequential
-path (same topo order, same statements) — only the job scheduling
-differs."""
+"""The export formats tables as concurrent Spark jobs; two exports of the
+same lake must still produce byte-identical output (same topo order,
+same statements) — only the job scheduling may differ."""
 
 from database_anonymiser_minimiser_spark import config as C
 from database_anonymiser_minimiser_spark.plans.plan import Engine
@@ -26,13 +26,13 @@ def test_parallel_equals_sequential(spark, sf_dir, tmp_path):
     cfg = C.Config.from_dict(raw)
     eng = Engine(spark, cfg)
 
-    seq, par = tmp_path / "seq.sql", tmp_path / "par.sql"
-    s1 = eng.export(str(seq), db_type="mysql", parallel=False)
-    s2 = eng.export(str(par), db_type="mysql", parallel=True)
+    first, second = tmp_path / "first.sql", tmp_path / "second.sql"
+    s1 = eng.export(str(first), db_type="mysql")
+    s2 = eng.export(str(second), db_type="mysql")
 
     # identical except the generation timestamp in the header
-    a = seq.read_text().splitlines()
-    b = par.read_text().splitlines()
+    a = first.read_text().splitlines()
+    b = second.read_text().splitlines()
     assert len(a) == len(b)
     diffs = [(x, y) for x, y in zip(a, b) if x != y]
     assert all(x.startswith("-- Date:") for x, _ in diffs), diffs[:3]

@@ -12,8 +12,8 @@ each, every 4th table masked on two columns), then measures:
 
 - plan_tables() (catalog list + FK topo) wall,
 - dry_run(with_counts=False) wall,
-- full SQL-dump export wall, sequential vs parallel=True,
-- per-table amortised cost for each.
+- full SQL-dump export wall (tables formatted as concurrent jobs),
+- its per-table amortised cost.
 
 Usage:
     python tools/bench_catalog.py [--tables 300] [--rows 500]
@@ -99,21 +99,15 @@ def main() -> int:
 
     t0 = time.monotonic()
     eng.export_to(io.StringIO(), db_type="mysql")
-    seq_s = time.monotonic() - t0
-
-    t0 = time.monotonic()
-    eng.export_to(io.StringIO(), db_type="mysql", parallel=True)
-    par_s = time.monotonic() - t0
+    export_s = time.monotonic() - t0
 
     res = {
         "tables": args.tables,
         "rows_per_table": args.rows,
         "plan_tables_s": round(plan_s, 3),
         "dry_run_s": round(dry_s, 3),
-        "export_seq_s": round(seq_s, 3),
-        "export_par_s": round(par_s, 3),
-        "seq_ms_per_table": round(1000 * seq_s / args.tables, 1),
-        "par_ms_per_table": round(1000 * par_s / args.tables, 1),
+        "export_s": round(export_s, 3),
+        "export_ms_per_table": round(1000 * export_s / args.tables, 1),
     }
     print(json.dumps(res))
     if args.out:
