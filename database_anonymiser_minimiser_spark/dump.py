@@ -11,10 +11,17 @@ tuple assembly — is built from JVM column expressions (replace/concat/
 date_format), so a 100 TB table formats inside WholeStageCodegen across
 all executors, and sorted on the primary key there
 (``insert_statements``). Each table's tuples are spooled to a text file
-by a Spark write, the tables' writes running as concurrent jobs; Python
-assembles the ordered file (header -> tables in FK-topo order -> footer)
-from the spools and batches the INSERTs as it reads, like the
-reference's loop (``insert_batches``): the driver holds one batch.
+by a Spark write, submitted as soon as the caller has built that table,
+the tables' writes running as concurrent jobs; Python assembles the
+ordered file (header -> tables in FK-topo order -> footer) from the
+spools and batches the INSERTs as it reads, like the reference's loop
+(``insert_batches``): the driver holds one batch.
+
+The spool is one part file (``coalesce(1)``). A table with a primary
+key is range-sorted on it below that coalesce, so it is masked and
+formatted in parallel and only the spool write is one task; a table
+without one has no exchange to stop the coalesce, so its scan, masking
+and formatting run in one task.
 
 Output format parity (checked by tests against reference-derived goldens):
 - escaping: backslash doubling first, then ``'``->``''``, NUL->``\\0``,
@@ -117,11 +124,17 @@ def escape_column(c: Column) -> Column:
 
 
 def sql_literal_column(df: DataFrame, name: str) -> Column:
-    """Column -> its SQL-literal text, per type (exporter.go:312-336)."""
+    """Column -> its SQL-literal text, per type (exporter.go:312-336).
+
+    Every branch yields NULL for a NULL input, so ``coalesce`` supplies
+    the ``NULL`` literal and the column is referenced once: Catalyst can
+    then collapse this projection into a masking projection below it
+    (it will not inline a non-trivial expression read twice), which keeps
+    ``orderBy(pk).limit(n)`` planned as one top-k."""
     dt = df.schema[name].dataType
     c = F.col(f"`{name}`")
     if isinstance(dt, T.BooleanType):
-        lit = F.when(c, F.lit("1")).otherwise(F.lit("0"))
+        lit = F.when(c, F.lit("1")).when(~c, F.lit("0"))
     elif isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         lit = c.cast("string")
     elif isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
@@ -138,7 +151,7 @@ def sql_literal_column(df: DataFrame, name: str) -> Column:
         lit = escape_column(F.to_json(c))
     else:
         lit = escape_column(c.cast("string"))
-    return F.when(c.isNull(), F.lit("NULL")).otherwise(lit)
+    return F.coalesce(lit, F.lit("NULL"))
 
 
 def duckdb_literal_sql(name: str, duck_type: str) -> str:
@@ -381,13 +394,18 @@ def write_dump(
     ``dump:<table>``, and the driver cuts each spool into INSERTs in topo
     order, waiting only for the table it writes next.
 
+    ``tables`` is consumed on the calling thread and each spool job is
+    submitted as soon as its table is yielded, so a generator that reads
+    and builds tables lazily overlaps its reads with the earlier tables'
+    spools. When the iteration or the sink raises, queued spools are
+    cancelled and the spool directory is removed once running ones end.
+
     The spool is a local temporary directory that the executors write
     and the driver reads, so the executors must share the driver's
     filesystem, as every ``local[N]`` session does. Where they do not,
     the spool reads back short and the export fails naming the table;
     the parquet and JSONL exporters are the multi-host path.
     """
-    tables = list(tables)
     stats = ExportStats()
 
     def spool_table(spool: str, name: str, df: DataFrame, order_by: str | None):
@@ -396,25 +414,30 @@ def write_dump(
         df.sparkSession.sparkContext.setJobGroup(f"dump:{name}", f"dump {name}")
         return _spool(spool, name, df, order_by)
 
-    # the pool exits first (waiting out every submitted job), then the
+    # the pool exits first (waiting out every running job), then the
     # spool directory goes — also when a table job or the sink raised
     with tempfile.TemporaryDirectory(
         prefix="dbmask_dump_", ignore_cleanup_errors=True
     ) as spool_root, ThreadPoolExecutor(max_workers=_SPOOL_WORKERS) as pool:
-        jobs = [
-            None if df is None
-            else pool.submit(spool_table, f"{spool_root}/{i:04d}", name, df, order_by)
-            for i, (name, _ddl, df, order_by) in enumerate(tables)
-        ]
-        out.write(header_text(db_type))
-        for (name, ddl, df, _order_by), job in zip(tables, jobs):
-            _table_section(out, db_type, name, ddl)
-            # job.result() waits only for THIS table
-            rows = None if job is None else _write_spool(
-                out, db_type, name, df.columns, *job.result()
-            )
-            stats.add(name, rows)
-        out.write(footer_text(db_type))
+        try:
+            sections = [
+                (name, ddl, df, None if df is None else pool.submit(
+                    spool_table, f"{spool_root}/{i:04d}", name, df, order_by
+                ))
+                for i, (name, ddl, df, order_by) in enumerate(tables)
+            ]
+            out.write(header_text(db_type))
+            for name, ddl, df, job in sections:
+                _table_section(out, db_type, name, ddl)
+                # job.result() waits only for THIS table
+                rows = None if job is None else _write_spool(
+                    out, db_type, name, df.columns, *job.result()
+                )
+                stats.add(name, rows)
+            out.write(footer_text(db_type))
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            raise
     return stats
 
 

@@ -10,7 +10,11 @@ truncate short-circuits before any scan, ``exporter.go:191-197``):
   is source-order nondeterministic (mysql.go:163-166); for deterministic
   results (and the DuckDB oracle) we harden to ``ORDER BY pk LIMIT n`` —
   Spark executes this as TakeOrderedAndProject (a top-k, no global sort)
-  which holds at any scale,
+  which holds at any scale while the projections above the limit
+  (masking, then dump formatting) collapse into one. A projection
+  Catalyst cannot merge (one reading a non-trivial masked value twice)
+  separates the limit from its sort, which then plans as a
+  range-exchange sort of the whole table (gated in tests/test_plans.py),
 - retain after date: strict ``col > timestamp`` (mysql.go:157-161), a
   plain filter Catalyst pushes into the parquet/JDBC scan.
 """

@@ -155,24 +155,30 @@ class Engine:
 
     def export_to(self, out, db_type: str = "mysql") -> dump_mod.ExportStats:
         """Dump into any writable text stream (the reference writes to
-        stdout when no -o is given, cmd/dbmask/main.go:146-156)."""
+        stdout when no -o is given, cmd/dbmask/main.go:146-156).
+
+        Tables are read and built on this thread as ``dump.write_dump``
+        iterates, so each table's spool job starts before the next table
+        is read. The codegen width comes from the catalog's columns (a
+        masked table keeps its source columns), not from built tables."""
         started = time.time()
         plans = self.plan_tables()
-        sections = [
-            (
-                p.name,
-                self.source.get_table_schema(p.name, db_type=db_type),
-                None if p.config.truncate else p.build(self.source.read(p.name)),
-                p.config.primary_key or None,
-            )
-            for p in plans
-        ]
         max_width = max(
-            (len(df.columns) for _, _, df, _ in sections if df is not None),
+            (len(self.source.get_columns(p.name)) for p in plans if not p.config.truncate),
             default=0,
         )
+
+        def sections():
+            for p in plans:
+                yield (
+                    p.name,
+                    self.source.get_table_schema(p.name, db_type=db_type),
+                    None if p.config.truncate else p.build(self.source.read(p.name)),
+                    p.config.primary_key or None,
+                )
+
         with _wide_codegen(self.spark, max_width):
-            stats = dump_mod.write_dump(out, db_type, sections)
+            stats = dump_mod.write_dump(out, db_type, sections())
         self._print_stats(stats, time.time() - started)
         return stats
 

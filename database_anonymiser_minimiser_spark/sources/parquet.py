@@ -102,22 +102,27 @@ def create_table_ddl(dialect: str, table: str, columns: list[ColumnInfo]) -> str
     return f"CREATE TABLE {quote_ident(dialect, table)} (\n{cols}\n);"
 
 
+def _data_files(path: Path) -> list[Path]:
+    """A directory table's data files in sorted order, skipping the
+    ``_``/``.`` files and directories Spark skips too."""
+    return sorted(
+        f for f in path.rglob("*")
+        if f.is_file()
+        and not any(n.startswith(("_", ".")) for n in f.relative_to(path).parts)
+    )
+
+
 def _nanos_timestamp_columns(path: Path) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorised
     reader rejects outright (PARQUET_TYPE_ILLEGAL). Detected from the footer
     via pyarrow — metadata only, no data read. For a directory table the
-    footer is the first data file's in sorted order, skipping the
-    ``_``/``.`` files and directories Spark skips too."""
+    footer is the first of its ``_data_files``."""
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         if path.is_dir():
-            path = min(
-                f for f in path.rglob("*")
-                if f.is_file()
-                and not any(n.startswith(("_", ".")) for n in f.relative_to(path).parts)
-            )
+            path = _data_files(path)[0]
         schema = pq.read_schema(str(path))
         return [
             f.name
@@ -136,18 +141,40 @@ def convert_ns_columns(df: DataFrame, ns_cols: list[str]) -> DataFrame:
     return df
 
 
-# r14 optimization: per-session memo of the LAZY reader DataFrame for
-# immutable regular files, keyed on (path, mtime_ns, size). This caches
-# ONLY the unresolved read plan (schema resolution from the footer) — the
-# thing a production metastore catalog provides once per table, and the
-# same class as Spark's own per-session file-listing cache
+# Per-session memo of the LAZY reader DataFrame, keyed on what the read
+# sees: (path, mtime_ns, size) for a file; for a directory, the path and
+# the sorted (relative path, mtime_ns, size) of its ``_data_files``, so an
+# added, removed or rewritten data file misses, while ``_SUCCESS`` and
+# dot-files do not count. This caches ONLY the unresolved read plan
+# (schema resolution from the footer, one Spark job per read) — the thing
+# a production metastore catalog provides once per table, and the same
+# class as Spark's own per-session file-listing cache
 # (spark.sql.hive.filesourcePartitionFileCacheSize). No rows, results or
 # intermediates are cached: every action on the returned DataFrame still
-# scans the parquet file in full. A changed file (mtime or size) or a
-# different SparkSession misses and rebuilds; directories are never
-# memoized (their mtime does not reflect in-place file edits).
+# scans the files in full. A changed key or a different SparkSession
+# misses and rebuilds, so one verb reads each table once however many of
+# the catalog calls (DDL, columns, scan) ask for it.
 _READER_MEMO: dict[tuple, tuple[SparkSession, DataFrame]] = {}
 _READER_MEMO_CAP = 128
+
+
+def _reader_key(path: str) -> tuple | None:
+    """The memo key of the file or directory ``path``; None when it
+    cannot be listed."""
+    p = Path(path)
+    try:
+        if p.is_file():
+            st = p.stat()
+            return (path, st.st_mtime_ns, st.st_size)
+        if p.is_dir():
+            files = []
+            for f in _data_files(p):
+                st = f.stat()
+                files.append((str(f.relative_to(p)), st.st_mtime_ns, st.st_size))
+            return (path, tuple(files))
+    except OSError:
+        pass
+    return None
 
 
 def read_parquet_table(spark: SparkSession, path: str | Path) -> DataFrame:
@@ -171,14 +198,7 @@ def read_parquet_table(spark: SparkSession, path: str | Path) -> DataFrame:
     (asserted in tests/test_plans.py).
     """
     path = str(path)
-    p = Path(path)
-    key: tuple | None = None
-    try:
-        if p.is_file():
-            st = p.stat()
-            key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
+    key = _reader_key(path)
     if key is not None:
         hit = _READER_MEMO.get(key)
         if hit is not None and hit[0] is spark:

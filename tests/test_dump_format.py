@@ -226,3 +226,53 @@ def test_dump_jobs_run_under_table_job_groups(spark):
     assert tracker.getJobIdsForGroup("dump:grp_keyed")
     assert tracker.getJobIdsForGroup("dump:grp_plain")
     assert not tracker.getJobIdsForGroup("dump:grp_cut")
+
+
+def test_jvm_tuples_match_python_mirror_for_nulls_and_booleans(spark):
+    """``row_tuple_column`` gives the same tuple text as ``format_value``
+    for NULL, ``True`` and ``False`` booleans, and a NULL of every type
+    ``sql_literal_column`` handles; values whose literal the mirror
+    shares (ints, doubles, strings, timestamps, dates) ride along."""
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("b", T.BooleanType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("l", T.LongType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("dec", T.DecimalType(10, 2)),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("dt", T.DateType()),
+        T.StructField("bin", T.BinaryType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("arr", T.ArrayType(T.IntegerType())),
+        T.StructField("st", T.StructType([T.StructField("a", T.IntegerType())])),
+    ])
+    nulls = (None,) * len(schema)
+    rows = [
+        nulls,
+        (True,) + nulls[1:],
+        (False,) + nulls[1:],
+        (
+            None, -7, 2**40, 3.0, None,
+            datetime.datetime(2024, 1, 15, 9, 30, 5), datetime.date(2024, 2, 29),
+            None, "it's a\\b\n", None, None,
+        ),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    got = [r["t"] for r in df.select(D.row_tuple_column(df).alias("t")).collect()]
+    want = ["(" + ", ".join(D.format_value(v) for v in r) + ")" for r in df.collect()]
+    assert got == want
+    assert got[0] == "(" + ", ".join(["NULL"] * len(schema)) + ")"
+    assert got[1].startswith("(1, NULL") and got[2].startswith("(0, NULL")
+    # the non-NULL decimal, binary, array and struct literals are the JVM's
+    # own (unquoted decimal, JSON text), which the mirror does not model
+    one = spark.createDataFrame(
+        [(Decimal("1.50"), bytearray(b"ab"), [1, 2], (3,))],
+        T.StructType(schema.fields[4:5] + schema.fields[7:8] + schema.fields[9:]),
+    )
+    assert one.select(D.row_tuple_column(one).alias("t")).first()["t"] == (
+        """(1.50, 'ab', '[1,2]', '{"a":3}')"""
+    )

@@ -50,6 +50,38 @@ def test_retain_count_is_topk_not_global_sort(spark, sf):
     assert not re.search(r"\bSort\b(?!.*TakeOrdered)", plan.split("TakeOrdered")[0])
 
 
+def test_export_spool_of_retain_count_table_is_topk(spark, sf):
+    """The spool DataFrame the SQL export writes for a retain-count table
+    with faker rules keeps the top-k: the dump formatting collapses into
+    the masking projection, so the retain never becomes a range-exchange
+    sort of the whole table."""
+    from database_anonymiser_minimiser_spark import dump
+    from database_anonymiser_minimiser_spark.config import Config
+    from database_anonymiser_minimiser_spark.plans.plan import Engine
+
+    eng = Engine(spark, Config.from_dict({
+        "connection": {"type": "parquet", "path": sf},
+        "configuration": {"customer": {
+            "primary_key": "c_custkey",
+            "retain": 50,
+            "columns": {
+                "c_name": "{{faker.name}}",
+                "c_address": "{{faker.address}}",
+                "c_phone": "{{faker.phone}}",
+                "c_acctbal": None,
+                "c_mktsegment": "REDACTED",
+            },
+        }},
+    }))
+    p = next(p for p in eng.plan_tables() if p.name == "customer")
+    df = dump.insert_statements(
+        p.build(eng.source.read("customer")), "customer", order_by="c_custkey"
+    )
+    plan = plan_of(df)
+    assert "TakeOrderedAndProject" in plan, plan[:3000]
+    assert "rangepartitioning" not in plan, plan[:3000]
+
+
 def test_projection_prunes_columns(spark, sf):
     df = Q.QUERIES["mask_email"](spark, sf)  # touches only c_custkey+c_name
     plan = plan_of(df)

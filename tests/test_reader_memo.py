@@ -1,10 +1,12 @@
-"""r14 optimization: the per-session lazy-reader memo in
-read_parquet_table (sources/parquet.py). The memo holds only the
-unresolved read plan (schema resolution), never rows: these tests pin
-the hit/miss contract — same session + unchanged file hits; a changed
-file (mtime/size) misses AND the new bytes are what an action reads; a
-directory path is never memoized."""
+"""The per-session lazy-reader memo in read_parquet_table
+(sources/parquet.py). The memo holds only the unresolved read plan
+(schema resolution), never rows: these tests pin the hit/miss contract —
+same session + unchanged file or directory hits; a changed file
+(mtime/size) or an added, removed or rewritten data file of a directory
+misses AND the new bytes are what an action reads; ``_SUCCESS`` and
+dot-files of a directory do not count."""
 
+import pytest
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -38,14 +40,61 @@ def test_changed_file_misses_and_reads_new_bytes(spark, tmp_path):
     assert sorted(r["id"] for r in b.collect()) == [10, 20, 30, 40]
 
 
-def test_directory_paths_never_memoized(spark, tmp_path):
+def _ids(df):
+    return sorted(r["id"] for r in df.collect())
+
+
+def _table_dir(tmp_path):
     d = tmp_path / "tdir.parquet"
     d.mkdir()
     _write_single_file(d / "part-0.parquet", [5, 6])
+    _write_single_file(d / "part-1.parquet", [7])
+    (d / "_SUCCESS").write_text("")
+    return d
+
+
+def test_unchanged_directory_hits(spark, tmp_path):
+    d = _table_dir(tmp_path)
     a = read_parquet_table(spark, d)
     b = read_parquet_table(spark, d)
-    assert a is not b
-    assert all(v[0] is not spark or v[1] is not a for v in _READER_MEMO.values())
+    assert a is b  # memo hit: the identical lazy plan object
+    assert _ids(b) == [5, 6, 7]
+
+
+@pytest.mark.parametrize(
+    "change, want",
+    [
+        ("add", [5, 6, 7, 8, 9]),
+        ("remove", [5, 6]),
+        ("rewrite", [5, 6, 70, 71, 72]),
+    ],
+)
+def test_changed_directory_misses_and_reads_new_rows(spark, tmp_path, change, want):
+    d = _table_dir(tmp_path)
+    a = read_parquet_table(spark, d)
+    assert _ids(a) == [5, 6, 7]
+    if change == "add":
+        _write_single_file(d / "part-2.parquet", [8, 9])
+    elif change == "remove":
+        (d / "part-1.parquet").unlink()
+    else:
+        _write_single_file(d / "part-1.parquet", [70, 71, 72])
+    b = read_parquet_table(spark, d)
+    assert b is not a
+    assert _ids(b) == want
+
+
+def test_directory_ignores_success_and_dot_files(spark, tmp_path):
+    d = _table_dir(tmp_path)
+    a = read_parquet_table(spark, d)
+    (d / "_SUCCESS").write_text("rewritten")
+    (d / "_committed_0").write_text("{}")
+    (d / ".hidden.parquet").write_bytes(b"not parquet")
+    (d / "_temporary").mkdir()
+    (d / "_temporary" / "part-9.parquet").write_bytes(b"partial")
+    b = read_parquet_table(spark, d)
+    assert b is a
+    assert _ids(b) == [5, 6, 7]
 
 
 def test_memo_never_holds_rows(spark, tmp_path):
