@@ -78,12 +78,10 @@ HEADLINE = [
     "multimodal_frame_sample",
     "multimodal_decode_wav",
     "dedup_simhash_wide_pairs",
-    # dedup_ngram_jaccard_prefix and dedup_simhash_pairs are EXCLUDED
-    # (round-6): both are measured-and-rejected/legacy designs kept as
-    # documentation (PERFORMANCE.md) — the prefix variant is 3.6x the
-    # default at sf1 and the 16-bit simhash saturates super-linearly;
-    # sweeping them re-measures known-superseded plans (~25% of the r5
-    # sf1 wall) without informing any decision.
+    # dedup_ngram_jaccard_prefix is EXCLUDED (round-6): a
+    # measured-and-rejected design kept as documentation (PERFORMANCE.md)
+    # — 3.6x the default at sf1; sweeping it re-measures a
+    # known-superseded plan without informing any decision.
     "realistic_mask_profile",
     "streaming_events_tumbling",
     # temporal / privacy / profiling

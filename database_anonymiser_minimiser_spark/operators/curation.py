@@ -135,7 +135,22 @@ def curate_documents(
     written corpus never contains the raw PII AND two pages differing
     only in embedded addresses collapse as duplicates (the scrubbed
     text is the fingerprinted text). Both pre-steps are whole-stage-
-    codegen regexp chains: scan-bound, no extra pass."""
+    codegen regexp chains: scan-bound, no extra pass.
+
+    Arguments are validated before any Spark job runs: the near-dup
+    stages run eager jobs while the plan is built."""
+    if near_dup_keep not in ("min-id", "quality"):
+        raise ValueError(
+            f"near_dup_keep must be 'min-id' or 'quality', got {near_dup_keep!r}"
+        )
+    if budget_tokens is not None and budget_mode not in ("prefix", "greedy"):
+        raise ValueError(
+            f"budget_mode must be 'prefix' or 'greedy', got {budget_mode!r}"
+        )
+    if near_dup_threshold is not None and not 0.0 <= near_dup_threshold <= 1.0:
+        raise ValueError(
+            f"near_dup_threshold must be in [0, 1], got {near_dup_threshold!r}"
+        )
     if strip_markup:
         from .textstats import strip_markup_expr
 
@@ -206,15 +221,10 @@ def curate_documents(
             losers = ranked.filter(F.col("_rk") > 1).select(
                 F.col("id").alias("doc_id")
             )
-        elif near_dup_keep == "min-id":
+        else:
             losers = clusters.filter(
                 F.col("id") != F.col("cluster_id")
             ).select(F.col("id").alias("doc_id"))
-        else:
-            raise ValueError(
-                "near_dup_keep must be 'min-id' or 'quality', got "
-                f"{near_dup_keep!r}"
-            )
         survivors = survivors.join(losers, "doc_id", "left_anti")
     if budget_tokens is not None:
         if budget_mode == "prefix":
@@ -228,7 +238,7 @@ def curate_documents(
                 .filter(F.col("_cum") <= budget_tokens)
                 .drop("_cum")
             )
-        elif budget_mode == "greedy":
+        else:
             import pandas as pd
 
             budget = int(budget_tokens)
@@ -248,10 +258,6 @@ def curate_documents(
 
             survivors = survivors.groupBy("lang").applyInPandas(
                 admit, survivors.schema
-            )
-        else:
-            raise ValueError(
-                f"budget_mode must be 'prefix' or 'greedy', got {budget_mode!r}"
             )
     return survivors
 

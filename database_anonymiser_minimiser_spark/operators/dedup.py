@@ -14,8 +14,8 @@ whole-stage codegen; shuffles only where semantically required):
   (df, shingle) order; prefix-sharing size-compatible pairs are verified
   with exact Jaccard on full sets — complete (no recall knob) and the
   index stays sparse as the corpus grows,
-- SimHash: 16-bit frequency-weighted bit-majority fingerprint; candidate
-  pairs from 4-bit band buckets, ranked by Hamming distance.
+- SimHash: 63-bit frequency-weighted bit-majority fingerprint; candidate
+  pairs from 21-bit band buckets, ranked by Hamming distance.
 
 Hashes are md5-derived so every operator has a bit-identical DuckDB
 oracle (``duck_*_sql``); a production ``mode="xxhash"`` swaps in
@@ -334,26 +334,13 @@ def verify_jaccard(
     pairs: DataFrame, shingled: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact Jaccard on the full shingle sets of each candidate pair."""
-    sa = shingled.select(F.col("id").alias("id_a"), F.col("s").alias("sa"))
-    sb = shingled.select(F.col("id").alias("id_b"), F.col("s").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return verify_jaccard_sided(pairs, shingled, shingled, threshold)
 
 
 def verify_jaccard_sided(
     pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
 ) -> DataFrame:
-    """:func:`verify_jaccard` with each pair side resolved against ITS OWN
+    """Exact Jaccard with each pair side resolved against ITS OWN
     shingle relation (``id_a`` against ``sh_a``, ``id_b`` against
     ``sh_b``). This is the correct shape for asymmetric joins
     (new-batch vs landed-corpus): if an ingest batch reuses a doc_id
@@ -2015,95 +2002,7 @@ def duck_ngram_jaccard_prefix_sql(table: str = "documents", threshold: float = 0
 
 
 # ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-SIMHASH_BITS = 16
-
-
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, simhash int, n_tokens): frequency-weighted bit-majority over
-    per-token 16-bit hashes (md5-digit-derived so DuckDB mirrors it).
-    One explode + one groupBy — shuffles on the doc id only."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    toks = df.repartition(n, F.col(id_col)).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
-    )
-    h16 = "CAST(substr(translate(md5(tok), 'abcdef', '012345'), 1, 5) AS INT) % 65536"
-    hashed = toks.select("id", F.expr(h16).alias("h"))
-    bit_sums = [
-        F.sum(F.expr(f"shiftright(h, {j}) & 1")).alias(f"b{j}")
-        for j in range(SIMHASH_BITS)
-    ]
-    agg = hashed.groupBy("id").agg(F.count(F.lit(1)).alias("n"), *bit_sums)
-    sim = " + ".join(
-        f"CASE WHEN 2 * b{j} > n THEN {1 << j} ELSE 0 END" for j in range(SIMHASH_BITS)
-    )
-    return agg.select(
-        F.col("id").alias("doc_id"),
-        F.expr(sim).cast("int").alias("simhash"),
-        F.col("n").cast("long").alias("n_tokens"),
-    )
-
-
-def duck_simhash_sql(table: str = "documents") -> str:
-    bit_sums = ", ".join(
-        f"sum((h >> {j}) & 1) AS b{j}" for j in range(SIMHASH_BITS)
-    )
-    sim = " + ".join(
-        f"CASE WHEN 2 * b{j} > n THEN {1 << j} ELSE 0 END" for j in range(SIMHASH_BITS)
-    )
-    return f"""
-    WITH toks AS (SELECT doc_id AS id,
-        unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok FROM {table}),
-    hashed AS (SELECT id,
-        CAST(substr(translate(md5(tok), 'abcdef', '012345'), 1, 5) AS INT) % 65536 AS h
-        FROM toks),
-    agg AS (SELECT id, count(*) AS n, {bit_sums} FROM hashed GROUP BY id)
-    SELECT id AS doc_id, CAST({sim} AS INT) AS simhash, CAST(n AS BIGINT) AS n_tokens
-    FROM agg
-    """
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 2,
-) -> DataFrame:
-    """Near-dup pairs by Hamming distance over simhash, candidates from
-    4-bit band buckets (a pair within Hamming<=2 of 16 bits must agree on
-    at least 2 of 4 bands; one shared band suffices to become a
-    candidate, so recall at max_hamming<=3 is 100%)."""
-    sh = simhash(df, text_col, id_col).select("doc_id", "simhash")
-    band_structs = ", ".join(
-        f"struct({b} AS band_id, shiftright(simhash, {4 * b}) & 15 AS band_val)"
-        for b in range(4)
-    )
-    banded = sh.select("doc_id", "simhash", F.expr(f"inline(array({band_structs}))"))
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").cast("int").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wide (63-bit) SimHash — the corpus-scale variant
+# SimHash (63-bit)
 # ---------------------------------------------------------------------------
 
 WIDE_BITS = 63
@@ -2128,14 +2027,14 @@ def simhash_wide(
     """(id, simhash bigint, n_tokens): 63-bit frequency-weighted
     bit-majority simhash.
 
-    Why 63 bits: the measured sf0.01/0.1/1 curve showed the 16-bit
-    ``simhash``'s pair count exploding O(N^2 / 2^16) — at 50k docs the
+    Why 63 bits: the measured sf0.01/0.1/1 curve showed a 16-bit
+    simhash's pair count exploding O(N^2 / 2^16) — at 50k docs the
     hash space saturates and ~7% of ALL pairs collide within hamming 2
     (86M rows), which is birthday arithmetic, not near-duplication. At
     63 bits random collisions are negligible through billions of docs;
     63 (not 64) keeps the value a positive signed BIGINT in both
-    engines. Same plan shape as the 16-bit form: one explode + one
-    groupBy, shuffling on the doc id only."""
+    engines. One explode + one groupBy, shuffling on the doc id
+    only."""
     n = df.sparkSession.sparkContext.defaultParallelism
     toks = df.repartition(n, F.col(id_col)).select(
         F.col(id_col).alias("id"),
@@ -2169,8 +2068,8 @@ def simhash_wide_near_pairs(
     touch all 3, so one band always agrees => exact recall at
     hamming<=2). Band width is the scale knob: random-collision
     candidates are N^2/2^21 per band — at a billion docs that is still
-    bucket-bounded work, where the 16-bit form's 4-bit bands degrade to
-    a near-cross-join.
+    bucket-bounded work, where 4-bit bands over a 16-bit hash degrade
+    to a near-cross-join.
 
     The banded relation is PERSISTED before the self-join (round 7):
     Catalyst does not reuse the exchange across the two join sides, so
@@ -2247,87 +2146,53 @@ def duck_simhash_wide_near_pairs_sql(
     """
 
 
-def connected_components(
-    pairs: DataFrame, ids: DataFrame, max_iterations: int = 20
-) -> DataFrame:
+def connected_components(pairs: DataFrame, ids: DataFrame) -> DataFrame:
     """(id, cluster_id): connected components over near-dup pairs, where
     cluster_id = the minimum id reachable through any chain of pairs —
     turning pairwise matches into dedup groups (a~b, b~c => one cluster).
 
-    Iterative hash-min label propagation on DataFrames: each round every
-    node adopts the smallest label among itself and its neighbours;
-    converges in O(component diameter) rounds (checked via an exact
-    count, loop capped at ``max_iterations``). Each round is one join +
-    one aggregation — the standard scalable CC formulation (no driver-side
-    graph, no recursion depth limits).
+    Exact at any component diameter, labelled on the driver: the edges
+    are collected once through Arrow and numpy hooks every root onto the
+    smallest root across its edges, then jumps pointers until each node
+    points at its root, until no edge joins two roots. Roots are node
+    indices in sorted id order, so each root is its component's minimum.
+    The only Spark job is the edge collect; the labels come back as a
+    DataFrame.
+
+    Memory bound: the whole edge set is held on the driver. Labelling
+    peaks at about 120 bytes per edge, the Arrow edges included (4M
+    random edges: 0.48 GB, 4.5 s on a 4-vCPU host), so a near-dup graph
+    larger than driver memory is out of reach. Local sessions
+    (``session.get_spark``) run their executors on the driver's host,
+    which holds the edge set either way.
 
     ``pairs``: (id_a, id_b) undirected; ``ids``: (id) node universe
     (isolated nodes become singleton clusters).
     """
-    # Materialise the pair pipeline ONCE: union'ing two selects over the
-    # un-materialised `pairs` would execute its (expensive) candidate
-    # pipeline twice. Both orientations are then narrow maps over the
-    # checkpointed set, and the old `.distinct()` shuffle is dropped —
-    # duplicate edges are harmless under min-aggregation.
-    p = pairs.selectExpr("id_a AS a", "id_b AS b").localCheckpoint(eager=True)
-    edges = p.union(p.selectExpr("b AS a", "a AS b"))
-    # every round references the previous labels in BOTH the propagation
-    # join and the convergence check — without truncation the lineage
-    # doubles per iteration and the analyzer blows up around round ~8.
-    # localCheckpoint materialises the (small) label table and cuts the
-    # plan back to a leaf each round: the required pattern for ANY
-    # iterative DataFrame algorithm.
-    # Only nodes incident to an edge can ever change label — isolated
-    # nodes are singleton clusters by definition and need zero rounds.
-    # Near-dup graphs are sparse (|touched| << |V| at corpus scale), so
-    # iterating over the touched subgraph keeps every per-round join
-    # proportional to the PAIR universe, not the document universe; the
-    # untouched ids rejoin as singletons in one anti-join at the end.
-    # r14: seed labels one hop ahead — min(id, min(direct neighbours))
-    # instead of id. This is the SAME single aggregation shuffle the old
-    # `.distinct()` paid (groupBy a), but propagation starts with round
-    # 1's result already in hand, so every call saves one full
-    # join+checkpoint round (the common near-dup case — doubles/triples
-    # — now CONFIRMS convergence on round 1 instead of 2, at any
-    # scale). Correctness invariant unchanged: a label is always the id
-    # of a node reachable from the keyed node and only ever decreases,
-    # so the fixpoint (min reachable id) is identical.
-    labels = (
-        edges.groupBy("a")
-        .agg(F.min("b").alias("_nb"))
-        .select(
-            F.col("a").alias("id"),
-            F.least(F.col("a"), F.col("_nb")).alias("cluster_id"),
-        )
-        .localCheckpoint(eager=True)
+    import numpy as np
+    import pyarrow as pa
+
+    edges = pairs.select("id_a", "id_b").toArrow()
+    a, b = edges.column(0), edges.column(1)
+    nodes, ends = np.unique(
+        np.concatenate([a.to_numpy(), b.to_numpy()]), return_inverse=True
     )
-    for _ in range(max_iterations):
-        neigh = (
-            edges.join(labels, edges.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("cluster_id").alias("n_min"))
+    u, v = ends[: len(a)], ends[len(a) :]
+    label = np.arange(len(nodes))
+    while not np.array_equal(lu := label[u], lv := label[v]):
+        low = np.minimum(lu, lv)
+        np.minimum.at(label, lu, low)
+        np.minimum.at(label, lv, low)
+        while not np.array_equal(jumped := label[label], label):
+            label = jumped
+    labels = pairs.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "id": pa.array(nodes, a.type),
+                "cluster_id": pa.array(nodes[label], a.type),
+            }
         )
-        # convergence rides the propagation pass: a label only ever
-        # changes when a neighbour's min undercuts it, so `chg` is
-        # computable in the SAME projection that computes the new label —
-        # no separate old-vs-new join+count job per round. The checkpoint
-        # is the round's one materialising action; the isEmpty probe
-        # below is a take(1) over the already-materialised blocks.
-        stepped = (
-            labels.join(neigh, labels.id == neigh.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("n_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-                (F.col("n_min") < F.col("cluster_id")).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        labels = stepped.select("id", "cluster_id")
-        if stepped.filter("chg").isEmpty():
-            break
+    )
     singletons = ids.join(labels.select("id"), "id", "left_anti").selectExpr(
         "id", "id AS cluster_id"
     )
@@ -2349,21 +2214,6 @@ def duck_dedup_clusters_sql(table: str = "documents", threshold: float = 0.5) ->
       SELECT e.a, r.l FROM reach r JOIN edges e ON r.v = e.b
     )
     SELECT v AS id, CAST(min(l) AS BIGINT) AS cluster_id FROM reach GROUP BY v
-    """
-
-
-def duck_simhash_near_pairs_sql(table: str = "documents", max_hamming: int = 2) -> str:
-    base = duck_simhash_sql(table).strip()
-    bands = ", ".join(f"({b}, (simhash >> {4 * b}) & 15)" for b in range(4))
-    return f"""
-    WITH sims AS ({base}),
-    banded AS (SELECT doc_id, simhash, b.* FROM sims,
-        LATERAL (SELECT * FROM (VALUES {bands}) v(band_id, band_val)) b),
-    pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        CAST(bit_count(xor(CAST(a.simhash AS BIGINT), CAST(b.simhash AS BIGINT))) AS INT) AS hamming
-        FROM banded a JOIN banded b
-        ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= {max_hamming}
     """
 
 

@@ -2984,11 +2984,12 @@ def q_dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_clusters", _dd.duck_dedup_clusters_sql(threshold=0.5))
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairs -> dedup groups: iterative hash-min connected components over
-    the MinHash-LSH near-dup pairs (a~b, b~c collapse into one cluster
-    keyed by the minimum doc id). The oracle is a recursive CTE computing
-    the same min-reachable-id fixpoint (md5 mode pinned: the oracle
-    mirrors md5 banding, and the LSH candidate set is hash-dependent)."""
+    """Pairs -> dedup groups: exact connected components over the
+    MinHash-LSH near-dup pairs, labelled on the driver (a~b, b~c
+    collapse into one cluster keyed by the minimum doc id). The oracle
+    is a recursive CTE computing the same min-reachable-id fixpoint (md5
+    mode pinned: the oracle mirrors md5 banding, and the LSH candidate
+    set is hash-dependent)."""
     docs = load(spark, sf_dir, "documents")
     pairs = _dd.minhash_lsh_pairs(docs, threshold=0.5, mode="md5").selectExpr(
         "doc_a AS id_a", "doc_b AS id_b"
@@ -2998,31 +2999,13 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("id"), F.col("cluster_id").cast("long").alias("cluster_id"))
 
 
-@register("dedup_simhash", _dd.duck_simhash_sql())
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dd.simhash(load(spark, sf_dir, "documents"))
-
-
-@register("dedup_simhash_pairs", _dd.duck_simhash_near_pairs_sql(max_hamming=2))
-def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEGACY/DEMO — superseded by dedup_simhash_wide_pairs, which is the
-    name-bearing default for simhash near-dup. The 16-bit hash space
-    saturates to birthday collisions as the corpus grows (measured
-    super-linear at sf1: O(N^2/2^16) pair output, 86M pairs at 50k docs
-    — PERFORMANCE.md "saturation writeup"), so this form is excluded
-    from the bench and scaling sweeps and kept only as the documented
-    counter-example: correctness still holds (oracle-keyed), scale does
-    not."""
-    return _dd.simhash_near_pairs(load(spark, sf_dir, "documents"), max_hamming=2)
-
-
 @register(
     "dedup_simhash_wide_pairs", _dd.duck_simhash_wide_near_pairs_sql(max_hamming=2)
 )
 def q_dedup_simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """63-bit simhash near-dup pairs (operators/dedup.py:simhash_wide) —
-    the corpus-scale variant: the measured scaling curve showed the
-    16-bit form's pair count saturating to birthday collisions
+    the corpus-scale variant: the measured scaling curve showed a
+    16-bit simhash's pair count saturating to birthday collisions
     (O(N^2/2^16), 86M pairs at 50k docs); at 63 bits with 21-bit bands
     random collisions stay negligible through billions of docs while
     hamming<=2 recall remains exact (pigeonhole over 3 bands)."""
@@ -7448,11 +7431,9 @@ def q_salted_agg_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   (c) 34 of the 46 remaining queries whose last driver row is r4 —
 #       everything except the twelve deferrals below.
 # Slot arithmetic: 9 + 7 + 46 = 62 candidates for 50 slots; the TWELVE
-# deferred to the r8 head, each with a same-machinery sibling green
-# r5/r6 or windowed THIS round:
-#   dedup_simhash + dedup_simhash_pairs — retired 16-bit legacy
-#     (COVERAGE.md); scale-bearing successor dedup_simhash_wide_pairs
-#     green r6;
+# deferred to the r8 head (two of them the 16-bit SimHash queries,
+# since deleted), each with a same-machinery sibling green r5/r6 or
+# windowed THIS round:
 #   ann_lsh_topk — strict machinery subset of ann_lsh_multiprobe
 #     (same hash tables, fewer probes), windowed this round;
 #   sample_hash_10pct — same deterministic-hash-mod machinery as

@@ -253,6 +253,29 @@ def test_curate_near_dup_keep_quality(spark):
         ).collect()
 
 
+def test_curate_rejects_bad_arguments_before_any_job(spark):
+    """A bad argument fails before the eager near-dup jobs launch."""
+    df = spark.createDataFrame(
+        [(10, GOOD, "en"), (11, BETTER, "en")], ["doc_id", "text", "lang"]
+    )
+    sc = spark.sparkContext
+    group = "curate_bad_keep"
+    sc.setJobGroup(group, "curate with a bad near_dup_keep")
+    try:
+        with pytest.raises(ValueError, match="near_dup_keep"):
+            C.curate_documents(df, 0.0, near_dup_threshold=0.5, near_dup_keep="nope")
+        with pytest.raises(ValueError, match="near_dup_threshold"):
+            C.curate_documents(df, 0.0, near_dup_threshold=1.5)
+        with pytest.raises(ValueError, match="budget_mode"):
+            C.curate_documents(
+                df, 0.0, budget_tokens=10, budget_mode="nope", near_dup_threshold=0.5
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_curate_incremental_near_dup_vs_landed(spark):
     """r12: --landed + --near-dup-threshold screens the delta against
     the LANDED corpus, not just within the delta — a one-word edit of

@@ -122,23 +122,6 @@ def test_ngram_containment_directed_planted(spark):
     assert got == want
 
 
-def test_simhash_identical_docs_equal(spark, docs_df):
-    sims = {r["doc_id"]: r["simhash"] for r in D.simhash(docs_df).collect()}
-    assert sims[0] == sims[2]
-    assert 0 <= sims[0] < 2**16
-    assert sims[0] != sims[3]
-
-
-def test_simhash_near_pairs(spark, docs_df):
-    pairs = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in D.simhash_near_pairs(docs_df, max_hamming=3).collect()
-    }
-    assert pairs[(0, 2)] == 0
-    for (a, b), h in pairs.items():
-        assert h <= 3
-
-
 def test_ngram_prefix_filter_complete_vs_brute_force(spark, sf_dir):
     """The prefix filter must be COMPLETE: against an all-pairs exact
     Jaccard brute force on the real corpus, prefix mode returns exactly

@@ -43,7 +43,7 @@ INTERPRETED_LIST_BOUND = {
     "dedup_common_spans", "dedup_common_spans_oracle",
     "dedup_levenshtein_pairs", "dedup_minhash_incremental",
     "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_ngram_jaccard_prefix",
-    "dedup_simhash", "dedup_simhash_pairs", "dedup_simhash_wide_pairs",
+    "dedup_simhash_wide_pairs",
     "embedding_neardup", "semantic_dedup_embeddings",
     "text_winnow_fingerprint",
 }

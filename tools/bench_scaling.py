@@ -29,8 +29,6 @@ HEAVY = [
     "dedup_ngram_jaccard",
     "dedup_clusters",
     "dedup_minhash_lsh",
-    # dedup_simhash_pairs (16-bit) retired from sweeps in r6: measured
-    # super-linear by hash-space saturation, superseded by the wide form
     "dedup_simhash_wide_pairs",
     "embedding_neardup",
     "ann_topk_cosine",
