@@ -35,7 +35,7 @@ from .dump import duckdb_literal_sql, row_tuple_column
 from .functions.faker_deterministic import FAKER_FUNCTIONS
 from .operators.anonymise import anonymise
 from .operators.minimise import minimise, retain_after_date, retain_count
-from .session import release_registry
+from .session import configure_for_determinism, release_registry
 from .sources.parquet import read_parquet_table
 
 TABLES = [
@@ -48,18 +48,9 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 
-# sessions already pinned to UTC by load() — a WeakSet so a stopped
-# session's entry disappears with the object (r14: the per-call conf.set
-# was one py4j round trip per load; get_spark() already constructs UTC
-# sessions, this guard only covers externally-built ones, once each)
-_UTC_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read one corpus table (nanos-tolerant, UTC session)."""
-    if spark not in _UTC_SESSIONS:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        _UTC_SESSIONS.add(spark)
+    configure_for_determinism(spark)
     return read_parquet_table(spark, f"{sf_dir}/{table}.parquet")
 
 
@@ -3268,7 +3259,7 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL streaming query (file source -> availableNow -> memory sink,
     complete mode) sharing the batch tumbling oracle: streaming and batch
     produce identical results for bounded input, by construction."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     return _stream.run_streaming_tumbling(spark, sf_dir)
 
 
@@ -3287,7 +3278,7 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch aggregate — the oracle asserts exactly that."""
     from .streaming.stateful import run_stateful_totals
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     return run_stateful_totals(spark, sf_dir)
 
 
@@ -3314,7 +3305,7 @@ def q_streaming_percentiles_tdigest(spark: SparkSession, sf_dir: str) -> DataFra
     streaming_stateful_user_totals (final state == batch aggregate)."""
     from .streaming.stateful import TD_PS, run_streaming_quantiles
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     final = run_streaming_quantiles(spark, sf_dir)  # event_type n_seen p25 p50 p90
     arr = ", ".join(f"{p}D" for p in TD_PS)
     # exact side is computed over EVERY event_type (agg-level FILTER, not
@@ -3357,7 +3348,7 @@ def q_streaming_anonymise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII masking applied ON A STREAM (stateless projection, append
     mode): deterministic masking makes the streamed result equal the
     batch oracle exactly — in-flight anonymisation at ingestion."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     return _stream.run_streaming_anonymise(spark, sf_dir)
 
 
@@ -3381,7 +3372,7 @@ def q_streaming_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     it directly: hourly windows with window_end <= max(ts) - 2 hours
     (upgraded from a rows-only check; verified identical at sf0.001
     and sf0.01 under both <= and < boundary readings)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     return _stream.run_streaming_with_watermark(spark, sf_dir)
 
 
@@ -3416,7 +3407,7 @@ def q_streaming_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical noise). The oracle is the settled-watermark batch
     equivalent plus the same literal noise table. See
     streaming/events.py:run_streaming_dp_counts."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     return _stream.run_streaming_dp_counts(spark, sf_dir)
 
 
@@ -3453,7 +3444,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     under both <= and < boundary readings). Output is corpus-sized (~1 session per event on this
     sparse-activity corpus), so the runner drains through the
     distributed parquet spool, never the memory sink."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     return _stream.run_streaming_sessions(spark, sf_dir)
 
 
@@ -4275,7 +4266,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled bounded input must reproduce it exactly."""
     from .streaming.events import run_streaming_dedup
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     return run_streaming_dedup(spark, sf_dir)
 
 
@@ -4297,7 +4288,7 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle runs."""
     from .streaming.events import run_streaming_stream_join
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     return run_streaming_stream_join(spark, sf_dir)
 
 
@@ -6665,7 +6656,7 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_streaming_heavy_hitters,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    configure_for_determinism(spark)
     final = run_streaming_heavy_hitters(spark, sf_dir)
     survivors = final.select(F.explode("users").alias("s_user")).distinct()
     ev = load(spark, sf_dir, "events")

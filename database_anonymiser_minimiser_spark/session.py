@@ -12,13 +12,44 @@ Local testing runs ``local[N]`` but every setting here is chosen for the
   (the DuckDB oracle reads the same parquet as naive/UTC),
 - shuffle partitions default sized for the local corpus; on a real
   cluster AQE coalesces from a deliberately high initial number.
+
+When ``get_spark`` starts the JVM itself, it maps a class-data archive
+(JDK dynamic AppCDS) cached per install under
+``${XDG_CACHE_HOME:-~/.cache}/spark-graft/cds/<key>.jsa``, which cuts
+JVM start-up by about 40%. The key digests ``java -version``, the Spark
+version and the launch classpath. The first run that finds no archive
+records one (``-XX:ArchiveClassesAtExit``) to ``<key>.<pid>.tmp``; an
+``atexit`` hook lets the JVM exit, waits for the dump and renames it into
+place, so a half-written archive is never mapped. ``SPARK_GRAFT_CDS=0``
+turns this off. Two launch rules hold:
+
+- JVM options go in ``spark.driver.defaultJavaOptions``, never in
+  ``spark.driver.extraJavaOptions``: ``--driver-java-options`` in
+  ``PYSPARK_SUBMIT_ARGS`` replaces the latter, while the former is
+  prepended to it and survives, as do Spark's own ``--add-opens``.
+  Every JVM ``get_spark`` starts also routes JVM log warnings to stderr,
+  so a dump written to stdout stays SQL.
+- The JVM refuses to dump with a non-empty directory on the classpath,
+  and ``$SPARK_HOME/conf`` is on it. When ``SPARK_CONF_DIR`` is unset and
+  that directory holds only ``*.template`` files, ``SPARK_CONF_DIR``
+  points at an empty directory in the cache while the JVM launches. In
+  any other case (a user conf dir, an unwritable cache, a JVM that
+  already exists, options that already choose ``-Xshare`` or an
+  archive) no archive flag is added.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shlex
+import subprocess
+import sys
 import warnings
+import weakref
 from contextlib import contextmanager
+from pathlib import Path
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +102,145 @@ def _local_lowmem_conf(mem: str) -> dict[str, str]:
     if mb <= 2048:
         return {"spark.unsafe.sorter.spill.read.ahead.enabled": "false"}
     return {}
+
+
+# HotSpot warns on stdout by default; a dump written to stdout stays SQL
+_JVM_LOG = ["-Xlog:disable", "-Xlog:all=warning:stderr"]
+# the recording JVM spends about 15 s at exit writing the archive; one
+# still running after this is killed and its archive dropped
+_ARCHIVE_WAIT_S = 100
+
+
+def _carries_share_option() -> bool:
+    """Whether options the launch already carries choose CDS themselves."""
+    opts = " ".join(
+        os.environ.get(k, "")
+        for k in (
+            "PYSPARK_SUBMIT_ARGS",
+            "SPARK_SUBMIT_OPTS",
+            "JAVA_TOOL_OPTIONS",
+            "JDK_JAVA_OPTIONS",
+            "_JAVA_OPTIONS",
+        )
+    )
+    return any(f in opts for f in ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit"))
+
+
+def _archive_key(spark_home: str, conf_dir: Path) -> str:
+    """Digest of what decides whether an archive maps: the JVM build, the
+    Spark version and the launch classpath."""
+    import pyspark
+
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else "java"
+    version = subprocess.run(
+        [java, "-version"], capture_output=True, text=True, timeout=60
+    )
+    jars = sorted(
+        (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+        for e in os.scandir(os.path.join(spark_home, "jars"))
+    )
+    submit = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    class_path = [
+        v
+        for flag, v in zip(submit, submit[1:])
+        if flag == "--driver-class-path"
+        or (flag == "--conf" and v.startswith("spark.driver.extraClassPath="))
+    ]
+    parts = [
+        version.stderr + version.stdout,
+        pyspark.__version__,
+        str(conf_dir),
+        repr(jars),
+        os.environ.get("SPARK_DIST_CLASSPATH", ""),
+        repr(class_path),
+    ]
+    return hashlib.sha256("\0".join(parts).encode()).hexdigest()[:16]
+
+
+def _prune_archives(cds: Path, key: str) -> None:
+    """Delete archives of other keys and temp files whose writer is gone."""
+    for f in cds.iterdir():
+        if f.suffix == ".jsa" and f.stem != key:
+            f.unlink(missing_ok=True)
+        elif f.suffix == ".tmp":
+            try:
+                os.kill(int(f.name.split(".")[-2]), 0)
+            except (ValueError, ProcessLookupError):
+                f.unlink(missing_ok=True)
+            except PermissionError:
+                pass
+
+
+def _jvm_launch() -> tuple[list[str], str | None, tuple[Path, Path] | None]:
+    """Options for a JVM ``get_spark`` starts, the ``SPARK_CONF_DIR`` to
+    start it under (None: leave it), and ``(temp, archive)`` when this run
+    records the class-data archive."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    try:
+        conf_files = os.listdir(os.path.join(spark_home, "conf"))
+    except OSError:
+        conf_files = []
+    if (
+        os.environ.get("SPARK_GRAFT_CDS") == "0"
+        or "SPARK_CONF_DIR" in os.environ
+        or _carries_share_option()
+        or not all(n.endswith(".template") for n in conf_files)
+    ):
+        return _JVM_LOG, None, None
+    cache = os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache"
+    cds = Path(cache, "spark-graft", "cds")
+    conf_dir = cds / "conf"
+    try:
+        conf_dir.mkdir(parents=True, exist_ok=True)
+        if not os.access(cds, os.W_OK | os.X_OK):
+            return _JVM_LOG, None, None
+        key = _archive_key(spark_home, conf_dir)
+        archive = cds / f"{key}.jsa"
+        if archive.is_file():
+            return _JVM_LOG + [f"-XX:SharedArchiveFile={archive}"], str(conf_dir), None
+        _prune_archives(cds, key)
+    except (OSError, subprocess.SubprocessError):
+        return _JVM_LOG, None, None
+    temp = cds / f"{key}.{os.getpid()}.tmp"
+    # the recording JVM warns once for every class of a signed jar it skips
+    opts = _JVM_LOG + ["-Xlog:cds=error:stderr", f"-XX:ArchiveClassesAtExit={temp}"]
+    return opts, str(conf_dir), (temp, archive)
+
+
+def _publish_archive(temp: Path, archive: Path) -> None:
+    """At exit of the recording run: stop the context, shut the py4j
+    gateway and close the JVM's stdin, on which ``PythonGatewayServer``
+    calls ``System.exit`` and the JVM dumps the archive. Wait for the dump
+    (a supervisor may kill the process group as soon as Python exits),
+    then rename it into place, or kill the JVM and delete it."""
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    if proc is None:
+        return
+    try:
+        if SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    except Py4JError:  # the JVM is already gone; nothing is left to stop
+        pass
+    gateway.shutdown()
+    code = None
+    try:
+        proc.stdin.close()
+        code = proc.wait(timeout=_ARCHIVE_WAIT_S)
+    except (OSError, subprocess.TimeoutExpired):
+        pass
+    if code == 0 and temp.is_file():
+        os.replace(temp, archive)
+        return
+    proc.kill()
+    proc.wait()
+    temp.unlink(missing_ok=True)
 
 
 def get_spark(
@@ -131,13 +301,42 @@ def get_spark(
     )
     for k, v in _local_lowmem_conf(mem).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return b.getOrCreate()  # the JVM exists: no option applies
+    opts, conf_dir, recording = _jvm_launch()
+    b = b.config("spark.driver.defaultJavaOptions", shlex.join(opts))
+    if conf_dir is not None:
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        spark = b.getOrCreate()
+    finally:
+        if conf_dir is not None:
+            del os.environ["SPARK_CONF_DIR"]
+    if recording is not None:
+        print(
+            f"spark-graft: recording a JVM class-data archive; writing it to "
+            f"{recording[1]} at exit takes about 15 s, once per install "
+            "(SPARK_GRAFT_CDS=0 turns this off)",
+            file=sys.stderr,
+        )
+        atexit.register(_publish_archive, *recording)
+    return spark
+
+
+# sessions configure_for_determinism already pinned; weak, so a stopped
+# session's entry goes with the object
+_UTC_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def configure_for_determinism(spark: SparkSession) -> SparkSession:
-    """Settings every oracle-compared query relies on; safe to call on a
-    session we did not build (the driver passes its own)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """Pin the UTC session time zone every oracle-compared query relies
+    on, once per session (each pin is a py4j round trip); safe to call on
+    a session we did not build (the driver passes its own)."""
+    if spark not in _UTC_SESSIONS:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        _UTC_SESSIONS.add(spark)
     return spark
 
 

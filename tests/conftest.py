@@ -18,6 +18,12 @@ logging.raiseExceptions = False
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+# No class-data archive for the suite's JVMs: the session fixture and every
+# subprocess the tests start inherit this, so no test run writes one under
+# the user's cache directory. tests/test_jvm_archive.py turns it back on
+# inside a temporary cache directory.
+os.environ["SPARK_GRAFT_CDS"] = "0"
+
 
 def _full_tier(config) -> bool:
     """The full tier runs when asked for (``SPARK_GRAFT_FULL_SUITE``),

@@ -1,6 +1,7 @@
 """The two session primitives every cache and conf override goes through
 (``session.release_registry`` and ``session.scoped_conf``), plus an AST
-guard that keeps hand-rolled copies of either out of the package."""
+guard that keeps hand-rolled copies of either, and any UTC pin but
+``session.configure_for_determinism``, out of the package."""
 
 import ast
 import fnmatch
@@ -136,7 +137,8 @@ def test_fan_out_memo_is_per_session_and_weak(spark):
 
 
 # ---------------------------------------------------------------------------
-# AST guard: no hand-rolled persist registries or conf save/restore pairs
+# AST guard: no hand-rolled persist registries or conf save/restore pairs,
+# and the session time zone is set in session.py only
 # ---------------------------------------------------------------------------
 
 _REGISTRY_NAMES = (
@@ -146,6 +148,8 @@ _REGISTRY_NAMES = (
     "_bitext_persist",
     "_release_*_persists",
 )
+
+_TZ_KEY = "spark.sql.session.timeZone"
 
 
 def _conf_call(node: ast.AST, method: str) -> ast.expr | None:
@@ -177,6 +181,13 @@ def _violations(source: str, filename: str) -> list[str]:
                 out.append(f"{filename}:{node.lineno} module-level {name}")
     if Path(filename).name == "session.py":
         return out
+    for n in ast.walk(tree):
+        k = _conf_call(n, "set")
+        if isinstance(k, ast.Constant) and k.value == _TZ_KEY:
+            out.append(
+                f"{filename}:{n.lineno} sets {_TZ_KEY}; use "
+                "session.configure_for_determinism"
+            )
     for fn in ast.walk(tree):
         if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
@@ -208,16 +219,21 @@ class C:
     def __enter__(self):
         self.prev = self.spark.conf.get(self._KEY, None)
         self.spark.conf.set(self._KEY, "1")
+def load(spark):
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
 '''
     found = _violations(bad, "mod.py")
-    assert len(found) == 6, found  # 3 names + 2 sets in run + 1 in C
+    # 3 names + 2 sets in run + 1 in C + the time-zone pin in load
+    assert len(found) == 7, found
     ok = '''
 _UTC = set()
 def load(spark):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     return spark.conf.get("spark.sql.warehouse.dir")
 '''
     assert _violations(ok, "mod.py") == []
+    pin = "def load(spark):" + bad.split("def load(spark):")[-1]
+    assert _violations(pin, "session.py") == []
 
 
 def test_package_has_no_persist_registries_or_conf_dances():
