@@ -17,18 +17,29 @@ When ``get_spark`` starts the JVM itself, it maps a class-data archive
 (JDK dynamic AppCDS) cached per install under
 ``${XDG_CACHE_HOME:-~/.cache}/spark-graft/cds/<key>.jsa``, which cuts
 JVM start-up by about 40%. The key digests ``java -version``, the Spark
-version and the launch classpath. The first run that finds no archive
-records one (``-XX:ArchiveClassesAtExit``) to ``<key>.<pid>.tmp``; an
-``atexit`` hook lets the JVM exit, waits for the dump and renames it into
-place, so a half-written archive is never mapped. ``SPARK_GRAFT_CDS=0``
-turns this off. Two launch rules hold:
+version, the Spark home and the launch classpath. The archive pays off
+only where the cache outlives the process (repeat runs of one install):
+the first run only makes the cache directory, and a later run that finds
+it but no archive records one (``-XX:ArchiveClassesAtExit``) to
+``<key>.<pid>.tmp``; an ``atexit`` hook lets the JVM exit, waits for the
+dump and renames it into place, so a half-written archive is never
+mapped. Any ``-Xshare`` option in the launch (``SPARK_SUBMIT_OPTS``,
+``PYSPARK_SUBMIT_ARGS``, ``JDK_JAVA_OPTIONS``, the user's
+``spark.driver.defaultJavaOptions``) turns the archive off;
+``-Xshare:auto`` is the JVM's default and changes nothing else. Two
+launch rules hold:
 
 - JVM options go in ``spark.driver.defaultJavaOptions``, never in
   ``spark.driver.extraJavaOptions``: ``--driver-java-options`` in
   ``PYSPARK_SUBMIT_ARGS`` replaces the latter, while the former is
-  prepended to it and survives, as do Spark's own ``--add-opens``.
-  Every JVM ``get_spark`` starts also routes JVM log warnings to stderr,
-  so a dump written to stdout stays SQL.
+  prepended to it and survives, as do Spark's own ``--add-opens``. A
+  value the user set is kept, with ours prepended: one in
+  ``spark-defaults.conf`` or a ``--properties-file`` through the
+  builder, whose ``--conf`` the launcher prefers; one in
+  ``PYSPARK_SUBMIT_ARGS``, which the launcher reads last, in that
+  variable while the JVM launches (and then no archive is used). Every
+  JVM ``get_spark`` starts routes JVM log warnings to stderr, so a dump
+  written to stdout stays SQL.
 - The JVM refuses to dump with a non-empty directory on the classpath,
   and ``$SPARK_HOME/conf`` is on it. When ``SPARK_CONF_DIR`` is unset and
   that directory holds only ``*.template`` files, ``SPARK_CONF_DIR``
@@ -43,12 +54,14 @@ from __future__ import annotations
 import atexit
 import hashlib
 import os
+import re
 import shlex
 import subprocess
 import sys
+import time
 import warnings
 import weakref
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from pathlib import Path
 from typing import Callable, Iterator
 
@@ -106,24 +119,83 @@ def _local_lowmem_conf(mem: str) -> dict[str, str]:
 
 # HotSpot warns on stdout by default; a dump written to stdout stays SQL
 _JVM_LOG = ["-Xlog:disable", "-Xlog:all=warning:stderr"]
+_DEFAULT_OPTS = "spark.driver.defaultJavaOptions"
 # the recording JVM spends about 15 s at exit writing the archive; one
 # still running after this is killed and its archive dropped
 _ARCHIVE_WAIT_S = 100
+# an archive of another key that no run has mapped for this long is deleted
+_ARCHIVE_KEEP_S = 30 * 24 * 3600
 
 
-def _carries_share_option() -> bool:
-    """Whether options the launch already carries choose CDS themselves."""
+def _carries_share_option(own: str) -> bool:
+    """Whether options the launch already carries (``own``: the user's
+    ``spark.driver.defaultJavaOptions``) choose CDS themselves."""
     opts = " ".join(
-        os.environ.get(k, "")
-        for k in (
-            "PYSPARK_SUBMIT_ARGS",
-            "SPARK_SUBMIT_OPTS",
-            "JAVA_TOOL_OPTIONS",
-            "JDK_JAVA_OPTIONS",
-            "_JAVA_OPTIONS",
-        )
+        [own]
+        + [
+            os.environ.get(k, "")
+            for k in (
+                "PYSPARK_SUBMIT_ARGS",
+                "SPARK_SUBMIT_OPTS",
+                "JAVA_TOOL_OPTIONS",
+                "JDK_JAVA_OPTIONS",
+                "_JAVA_OPTIONS",
+            )
+        ]
     )
     return any(f in opts for f in ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit"))
+
+
+def _submit_conf(submit: list[str], key: str) -> int | None:
+    """Index of the token holding the last ``--conf key=value`` of the
+    spark-submit arguments ``submit``, or None."""
+    found = None
+    for i, tok in enumerate(submit):
+        if tok.startswith("--conf="):
+            j = i
+        elif tok in ("--conf", "-c") and i + 1 < len(submit):
+            j = i + 1
+        else:
+            continue
+        if submit[j].removeprefix("--conf=").startswith(key + "="):
+            found = j
+    return found
+
+
+def _properties(path: str) -> dict[str, str]:
+    """The ``key value`` / ``key=value`` / ``key: value`` lines of a Java
+    properties file such as ``spark-defaults.conf``; {} if unreadable."""
+    try:
+        text = Path(path).read_text(encoding="utf-8")
+    except OSError:
+        return {}
+    props: dict[str, str] = {}
+    lines = iter(text.splitlines())
+    for line in lines:
+        line = line.strip()
+        if not line or line[0] in "#!":
+            continue
+        while line.endswith("\\"):  # continued on the next line
+            line = line[:-1] + next(lines, "").strip()
+        key, value = re.fullmatch(r"([^\s=:]*)\s*[=:]?\s*(.*)", line).groups()
+        props[key] = value.strip()
+    return props
+
+
+def _defaults_java_options(submit: list[str], conf_dir: str) -> str:
+    """``spark.driver.defaultJavaOptions`` as the launcher reads it from a
+    ``--properties-file`` or ``<conf_dir>/spark-defaults.conf``: a builder
+    ``--conf`` replaces it, so ``get_spark`` prepends its options to it."""
+    files = []
+    if "--properties-file" in submit[:-1]:
+        files.append(submit[submit.index("--properties-file") + 1])
+    if not files or "--load-spark-defaults" in submit:
+        files.append(os.path.join(conf_dir, "spark-defaults.conf"))
+    for f in files:
+        value = _properties(f).get(_DEFAULT_OPTS)
+        if value is not None:
+            return value
+    return ""
 
 
 def _archive_key(spark_home: str, conf_dir: Path) -> str:
@@ -151,6 +223,9 @@ def _archive_key(spark_home: str, conf_dir: Path) -> str:
         version.stderr + version.stdout,
         pyspark.__version__,
         str(conf_dir),
+        # the JVM checks the jar paths: two unpacked copies of one tarball
+        # have the same jar names, sizes and mtimes
+        os.path.realpath(spark_home),
         repr(jars),
         os.environ.get("SPARK_DIST_CLASSPATH", ""),
         repr(class_path),
@@ -159,10 +234,13 @@ def _archive_key(spark_home: str, conf_dir: Path) -> str:
 
 
 def _prune_archives(cds: Path, key: str) -> None:
-    """Delete archives of other keys and temp files whose writer is gone."""
+    """Delete archives of other keys that no run mapped for
+    ``_ARCHIVE_KEEP_S`` (two installs or JDKs used in turn keep theirs),
+    and temp files whose writer is gone."""
     for f in cds.iterdir():
         if f.suffix == ".jsa" and f.stem != key:
-            f.unlink(missing_ok=True)
+            if time.time() - f.stat().st_mtime > _ARCHIVE_KEEP_S:
+                f.unlink(missing_ok=True)
         elif f.suffix == ".tmp":
             try:
                 os.kill(int(f.name.split(".")[-2]), 0)
@@ -172,42 +250,79 @@ def _prune_archives(cds: Path, key: str) -> None:
                 pass
 
 
-def _jvm_launch() -> tuple[list[str], str | None, tuple[Path, Path] | None]:
-    """Options for a JVM ``get_spark`` starts, the ``SPARK_CONF_DIR`` to
-    start it under (None: leave it), and ``(temp, archive)`` when this run
+def _jvm_launch() -> tuple[dict[str, str], dict[str, str], tuple[Path, Path] | None]:
+    """Builder conf and environment overrides (set while the JVM starts)
+    for a JVM ``get_spark`` starts, and ``(temp, archive)`` when this run
     records the class-data archive."""
     from pyspark.find_spark_home import _find_spark_home
 
     spark_home = _find_spark_home()
+    submit = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    i = _submit_conf(submit, _DEFAULT_OPTS)
+    if i is not None:
+        # read after the builder's confs, so it wins: prepend to it there,
+        # and leave CDS to the user who set it
+        head = f"{_DEFAULT_OPTS}="
+        submit[i] = submit[i].replace(head, head + shlex.join(_JVM_LOG) + " ", 1)
+        return {}, {"PYSPARK_SUBMIT_ARGS": shlex.join(submit)}, None
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    own = _defaults_java_options(submit, conf_dir)
+
+    def launch(flags: list[str], env: dict[str, str] | None = None, recording=None):
+        opts = " ".join(filter(None, [shlex.join(flags), own]))
+        return {_DEFAULT_OPTS: opts}, env or {}, recording
+
     try:
-        conf_files = os.listdir(os.path.join(spark_home, "conf"))
+        conf_files = os.listdir(conf_dir)
     except OSError:
         conf_files = []
     if (
-        os.environ.get("SPARK_GRAFT_CDS") == "0"
-        or "SPARK_CONF_DIR" in os.environ
-        or _carries_share_option()
+        "SPARK_CONF_DIR" in os.environ
+        or _carries_share_option(own)
         or not all(n.endswith(".template") for n in conf_files)
     ):
-        return _JVM_LOG, None, None
+        return launch(_JVM_LOG)
     cache = os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache"
     cds = Path(cache, "spark-graft", "cds")
-    conf_dir = cds / "conf"
+    empty_conf = cds / "conf"
     try:
-        conf_dir.mkdir(parents=True, exist_ok=True)
+        if not empty_conf.is_dir():
+            # the archive pays off only where the cache outlives the
+            # process: the first run just makes the directory, and a run
+            # that finds it (so the cache persisted) records the archive
+            empty_conf.mkdir(parents=True)
+            return launch(_JVM_LOG)
         if not os.access(cds, os.W_OK | os.X_OK):
-            return _JVM_LOG, None, None
-        key = _archive_key(spark_home, conf_dir)
+            return launch(_JVM_LOG)
+        key = _archive_key(spark_home, empty_conf)
         archive = cds / f"{key}.jsa"
+        env = {"SPARK_CONF_DIR": str(empty_conf)}
         if archive.is_file():
-            return _JVM_LOG + [f"-XX:SharedArchiveFile={archive}"], str(conf_dir), None
+            with suppress(OSError):
+                os.utime(archive)  # in use: _prune_archives keeps it
+            return launch(_JVM_LOG + [f"-XX:SharedArchiveFile={archive}"], env)
         _prune_archives(cds, key)
     except (OSError, subprocess.SubprocessError):
-        return _JVM_LOG, None, None
+        return launch(_JVM_LOG)
     temp = cds / f"{key}.{os.getpid()}.tmp"
     # the recording JVM warns once for every class of a signed jar it skips
-    opts = _JVM_LOG + ["-Xlog:cds=error:stderr", f"-XX:ArchiveClassesAtExit={temp}"]
-    return opts, str(conf_dir), (temp, archive)
+    flags = _JVM_LOG + ["-Xlog:cds=error:stderr", f"-XX:ArchiveClassesAtExit={temp}"]
+    return launch(flags, env, (temp, archive))
+
+
+@contextmanager
+def _environ(overrides: dict[str, str]) -> Iterator[None]:
+    """Set environment variables for the body, then restore them."""
+    prev = {k: os.environ.get(k) for k in overrides}
+    os.environ.update(overrides)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
 
 
 def _publish_archive(temp: Path, archive: Path) -> None:
@@ -305,20 +420,16 @@ def get_spark(
 
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return b.getOrCreate()  # the JVM exists: no option applies
-    opts, conf_dir, recording = _jvm_launch()
-    b = b.config("spark.driver.defaultJavaOptions", shlex.join(opts))
-    if conf_dir is not None:
-        os.environ["SPARK_CONF_DIR"] = conf_dir
-    try:
+    conf, env, recording = _jvm_launch()
+    for k, v in conf.items():
+        b = b.config(k, v)
+    with _environ(env):
         spark = b.getOrCreate()
-    finally:
-        if conf_dir is not None:
-            del os.environ["SPARK_CONF_DIR"]
     if recording is not None:
         print(
             f"spark-graft: recording a JVM class-data archive; writing it to "
             f"{recording[1]} at exit takes about 15 s, once per install "
-            "(SPARK_GRAFT_CDS=0 turns this off)",
+            "(SPARK_SUBMIT_OPTS=-Xshare:auto turns this off)",
             file=sys.stderr,
         )
         atexit.register(_publish_archive, *recording)

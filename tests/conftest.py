@@ -18,11 +18,14 @@ logging.raiseExceptions = False
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# No class-data archive for the suite's JVMs: the session fixture and every
-# subprocess the tests start inherit this, so no test run writes one under
-# the user's cache directory. tests/test_jvm_archive.py turns it back on
-# inside a temporary cache directory.
-os.environ["SPARK_GRAFT_CDS"] = "0"
+# No class-data archive for the suite's JVMs: an -Xshare option in the
+# launch turns it off, and -Xshare:auto is the JVM's default, so it changes
+# nothing else. The session fixture and every subprocess the tests start
+# inherit this, so no test run writes under the user's cache directory.
+# tests/test_jvm_archive.py drops it inside a temporary cache directory.
+os.environ["SPARK_SUBMIT_OPTS"] = " ".join(
+    filter(None, ["-Xshare:auto", os.environ.get("SPARK_SUBMIT_OPTS")])
+)
 
 
 def _full_tier(config) -> bool:

@@ -1,14 +1,16 @@
 """The JVM class-data archive ``session.get_spark`` maps (JDK dynamic
-AppCDS). Every case runs in a subprocess whose cache directory
-(``XDG_CACHE_HOME``) is a temporary one; only the module fixture starts a
-JVM that records an archive."""
+AppCDS). Every case that starts a JVM runs in a subprocess whose cache
+directory (``XDG_CACHE_HOME``) is a temporary one; only the module fixture
+starts a JVM that records an archive."""
 
 import json
 import os
 import re
+import shlex
 import shutil
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -50,8 +52,8 @@ PLAN = r"""
 import json
 from database_anonymiser_minimiser_spark.session import _jvm_launch
 
-opts, conf_dir, recording = _jvm_launch()
-print("RESULT " + json.dumps({"opts": opts, "conf_dir": conf_dir, "recording": recording is not None}))
+conf, env, recording = _jvm_launch()
+print("RESULT " + json.dumps({"conf": conf, "env": env, "recording": recording is not None}))
 """
 
 
@@ -63,8 +65,10 @@ def _env(cache: Path, **extra: str) -> dict:
         "SPARK_GRAFT_DRIVER_MEM": "1g",
         **extra,
     }
-    if "SPARK_GRAFT_CDS" not in extra:
-        env.pop("SPARK_GRAFT_CDS", None)
+    if "SPARK_SUBMIT_OPTS" not in extra:  # conftest's -Xshare:auto
+        env["SPARK_SUBMIT_OPTS"] = env.get("SPARK_SUBMIT_OPTS", "").replace(
+            "-Xshare:auto", "", 1
+        )
     if "SPARK_CONF_DIR" not in extra:
         env.pop("SPARK_CONF_DIR", None)
     return env
@@ -85,7 +89,8 @@ def _run(script: str, env: dict, *args: str) -> tuple[dict, str]:
 
 
 def _archive_for(cache: Path) -> Path:
-    """The archive path get_spark uses under ``cache`` in this environment."""
+    """The archive path get_spark uses under ``cache`` in this environment;
+    makes the cache directory, as a first run there would."""
     cds = cache / "spark-graft" / "cds"
     (cds / "conf").mkdir(parents=True, exist_ok=True)
     return cds / f"{S._archive_key(_find_spark_home(), cds / 'conf')}.jsa"
@@ -97,8 +102,10 @@ def _archive_flags(args: list[str]) -> list[str]:
 
 @pytest.fixture(scope="module")
 def written(sf_dir, tmp_path_factory):
-    """One run that finds no archive, so records one."""
+    """One run that finds the cache directory but no archive, so records
+    one."""
     cache = tmp_path_factory.mktemp("cache")
+    _archive_for(cache)
     res, err = _run(CHILD, _env(cache), sf_dir)
     return cache, res, err
 
@@ -150,19 +157,34 @@ def test_mismatched_archive_warns_once_on_stderr(written, sf_dir, tmp_path):
     assert err.count(UNABLE) == 1, err[-3000:]
 
 
+NO_ARCHIVE = {S._DEFAULT_OPTS: shlex.join(S._JVM_LOG)}
+
+
+def test_first_run_only_makes_the_cache_directory(tmp_path):
+    res, _ = _run(PLAN, _env(tmp_path))
+    assert res == {"conf": NO_ARCHIVE, "env": {}, "recording": False}
+    cds = tmp_path / "spark-graft" / "cds"
+    assert os.listdir(cds) == ["conf"]
+    res, _ = _run(PLAN, _env(tmp_path))
+    assert res["recording"] and res["env"] == {"SPARK_CONF_DIR": str(cds / "conf")}
+
+
 @pytest.mark.parametrize(
     "case",
-    ["cds_off", "user_conf_dir", "real_conf_file", "options_choose_cds", "cache_unwritable"],
+    ["share_auto", "user_conf_dir", "real_conf_file", "options_choose_cds", "cache_unwritable"],
 )
 def test_no_archive_flag(case, tmp_path):
     conf = tmp_path / "spark" / "conf"
     conf.mkdir(parents=True)
     (conf / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
     cache = tmp_path / "cache"
+    cds = cache / "spark-graft" / "cds"
     if case == "cache_unwritable":
         cache.write_text("")  # a file where the cache directory should be
+    else:
+        (cds / "conf").mkdir(parents=True)  # a run before made it
     extra = {
-        "cds_off": {"SPARK_GRAFT_CDS": "0"},
+        "share_auto": {"SPARK_SUBMIT_OPTS": "-Xshare:auto"},
         "user_conf_dir": {"SPARK_CONF_DIR": str(tmp_path)},
         "real_conf_file": {"SPARK_HOME": str(tmp_path / "spark")},
         "options_choose_cds": {
@@ -171,8 +193,62 @@ def test_no_archive_flag(case, tmp_path):
         "cache_unwritable": {},
     }[case]
     res, _ = _run(PLAN, _env(cache, **extra))
-    assert res == {"opts": S._JVM_LOG, "conf_dir": None, "recording": False}
-    assert not (cache / "spark-graft").exists()
+    assert res == {"conf": NO_ARCHIVE, "env": {}, "recording": False}
+    if case != "cache_unwritable":
+        assert os.listdir(cds) == ["conf"]
+
+
+@pytest.mark.parametrize("where", ["spark_defaults", "submit_args"])
+def test_user_default_java_options_are_kept(where, sf_dir, tmp_path):
+    """Our options are prepended to a ``spark.driver.defaultJavaOptions``
+    the user set, not put in its place."""
+    cache = tmp_path / "cache"
+    cds = cache / "spark-graft" / "cds"
+    (cds / "conf").mkdir(parents=True)
+    user = "spark.driver.defaultJavaOptions"
+    if where == "spark_defaults":
+        (tmp_path / "spark-defaults.conf").write_text(f"{user}   -Dgraft.x=y\n")
+        extra = {"SPARK_CONF_DIR": str(tmp_path)}
+    else:
+        extra = {"PYSPARK_SUBMIT_ARGS": f"--conf {user}=-Dgraft.x=y pyspark-shell"}
+    res, _ = _run(CHILD, _env(cache, **extra), sf_dir)
+    assert "-Dgraft.x=y" in res["args"]
+    assert "-Xlog:all=warning:stderr" in res["args"]
+    # a user who sets the options owns CDS: no archive, nothing recorded
+    assert _archive_flags(res["args"]) == []
+    assert os.listdir(cds) == ["conf"]
+
+
+def test_key_names_the_spark_home(tmp_path):
+    """Two unpacked copies of one tarball (same jar names, sizes and
+    mtimes) at different paths get different keys."""
+    homes = [tmp_path / "a", tmp_path / "b"]
+    for home in homes:
+        (home / "jars").mkdir(parents=True)
+        jar = home / "jars" / "x.jar"
+        jar.write_bytes(b"jar")
+        os.utime(jar, ns=(10**18, 10**18))
+    conf = tmp_path / "conf"
+    keys = [S._archive_key(str(h), conf) for h in homes]
+    assert keys[0] != keys[1]
+    assert S._archive_key(str(homes[0]), conf) == keys[0]
+
+
+def test_prune_keeps_recent_archives_of_other_keys(tmp_path):
+    done = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True,
+        text=True,
+    )
+    dead = int(done.stdout)  # a pid whose process has exited
+    old = time.time() - S._ARCHIVE_KEEP_S - 60
+    for name in ("mine.jsa", "other.jsa", "stale.jsa", f"k.{dead}.tmp", f"k.{os.getpid()}.tmp"):
+        (tmp_path / name).write_bytes(b"x")
+    os.utime(tmp_path / "stale.jsa", (old, old))
+    S._prune_archives(tmp_path, "mine")
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        ["mine.jsa", "other.jsa", f"k.{os.getpid()}.tmp"]
+    )
 
 
 def test_suite_jvm_carries_no_archive_flag(spark):
