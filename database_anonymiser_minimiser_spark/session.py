@@ -167,7 +167,7 @@ def _properties(path: str) -> dict[str, str]:
     properties file such as ``spark-defaults.conf``; {} if unreadable."""
     try:
         text = Path(path).read_text(encoding="utf-8")
-    except OSError:
+    except (OSError, UnicodeDecodeError):
         return {}
     props: dict[str, str] = {}
     lines = iter(text.splitlines())
@@ -182,17 +182,17 @@ def _properties(path: str) -> dict[str, str]:
     return props
 
 
-def _defaults_java_options(submit: list[str], conf_dir: str) -> str:
-    """``spark.driver.defaultJavaOptions`` as the launcher reads it from a
-    ``--properties-file`` or ``<conf_dir>/spark-defaults.conf``: a builder
-    ``--conf`` replaces it, so ``get_spark`` prepends its options to it."""
+def _file_conf(submit: list[str], conf_dir: str, key: str) -> str:
+    """``key`` as the launcher reads it from a ``--properties-file`` or
+    ``<conf_dir>/spark-defaults.conf`` ("" if unset). A builder ``--conf``
+    replaces it, so ``get_spark`` prepends its JVM options to it."""
     files = []
     if "--properties-file" in submit[:-1]:
         files.append(submit[submit.index("--properties-file") + 1])
     if not files or "--load-spark-defaults" in submit:
         files.append(os.path.join(conf_dir, "spark-defaults.conf"))
     for f in files:
-        value = _properties(f).get(_DEFAULT_OPTS)
+        value = _properties(f).get(key)
         if value is not None:
             return value
     return ""
@@ -213,11 +213,13 @@ def _archive_key(spark_home: str, conf_dir: Path) -> str:
         for e in os.scandir(os.path.join(spark_home, "jars"))
     )
     submit = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    extra = "spark.driver.extraClassPath"
+    i = _submit_conf(submit, extra)
     class_path = [
-        v
-        for flag, v in zip(submit, submit[1:])
-        if flag == "--driver-class-path"
-        or (flag == "--conf" and v.startswith("spark.driver.extraClassPath="))
+        v for flag, v in zip(submit, submit[1:]) if flag == "--driver-class-path"
+    ] + [
+        submit[i] if i is not None else "",
+        _file_conf(submit, str(conf_dir), extra),
     ]
     parts = [
         version.stderr + version.stdout,
@@ -266,7 +268,7 @@ def _jvm_launch() -> tuple[dict[str, str], dict[str, str], tuple[Path, Path] | N
         submit[i] = submit[i].replace(head, head + shlex.join(_JVM_LOG) + " ", 1)
         return {}, {"PYSPARK_SUBMIT_ARGS": shlex.join(submit)}, None
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
-    own = _defaults_java_options(submit, conf_dir)
+    own = _file_conf(submit, conf_dir, _DEFAULT_OPTS)
 
     def launch(flags: list[str], env: dict[str, str] | None = None, recording=None):
         opts = " ".join(filter(None, [shlex.join(flags), own]))

@@ -234,6 +234,25 @@ def test_key_names_the_spark_home(tmp_path):
     assert S._archive_key(str(homes[0]), conf) == keys[0]
 
 
+def test_key_names_the_driver_class_path(tmp_path, monkeypatch):
+    """An extra driver class path changes the key wherever it is set:
+    ``--driver-class-path``, ``--conf`` or a ``--properties-file``."""
+    props = tmp_path / "spark.properties"
+    home, conf = _find_spark_home(), tmp_path / "conf"
+    keys = set()
+    for submit, text in [
+        ("pyspark-shell", ""),
+        ("--driver-class-path /a pyspark-shell", ""),
+        ("--conf=spark.driver.extraClassPath=/a pyspark-shell", ""),
+        (f"--properties-file {props} pyspark-shell", "spark.driver.extraClassPath /a\n"),
+        (f"--properties-file {props} pyspark-shell", "spark.driver.extraClassPath=/b\n"),
+    ]:
+        props.write_text(text)
+        monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", submit)
+        keys.add(S._archive_key(home, conf))
+    assert len(keys) == 5
+
+
 def test_prune_keeps_recent_archives_of_other_keys(tmp_path):
     done = subprocess.run(
         [sys.executable, "-c", "import os; print(os.getpid())"],
