@@ -12,21 +12,30 @@ Scale shape, in order:
 1. one whole-stage-codegen projection computes tokens + quality +
    normalised fingerprint per document (no Python),
 2. the quality filter prunes BEFORE any shuffle,
-3. exact near-dup collapse = groupBy(fingerprint) keep-min-id, then a
-   semi join back by id to recover full rows (statistics-driven:
-   broadcast while the survivor-id relation is small),
+3. exact near-dup collapse = ONE aggregate per fingerprint,
+   ``min(struct(doc_id, lang, text, n_tokens, q))``: the lowest id's
+   whole row survives in one shuffle, one row per fingerprint. With
+   near-dup collapse on, that result is persisted (``release_registry``)
+   so the MinHash pair pipeline, the cluster join and the write all
+   read it; clustering labels only the nodes some pair touches, since a
+   singleton cluster never loses its document,
 4. optional per-language token budget: rank by (quality desc, id)
    within language and admit under the named budget_mode — "prefix"
    (window cumulative sum, scale-clean default) or "greedy"
    (skip-and-continue, one applyInPandas pass per language),
-5. stats = one rollup over the collapsed survivors.
+5. stats = one rollup over the final survivors: ``run_curation``
+   persists them, writes them, aggregates that cache (no read-back of
+   the files just written) and releases every cache of the run before
+   it returns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ..session import release_registry, warm_case_mapping
 from .textstats import quality_score_column
 
 
@@ -46,6 +55,26 @@ def enrich_documents(
         quality_score_column(text).alias("q"),
         F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ").alias("fp"),
     )
+
+
+def _check_arguments(
+    budget_tokens: int | None,
+    budget_mode: str,
+    near_dup_threshold: float | None,
+    near_dup_keep: str,
+) -> None:
+    if near_dup_keep not in ("min-id", "quality"):
+        raise ValueError(
+            f"near_dup_keep must be 'min-id' or 'quality', got {near_dup_keep!r}"
+        )
+    if budget_tokens is not None and budget_mode not in ("prefix", "greedy"):
+        raise ValueError(
+            f"budget_mode must be 'prefix' or 'greedy', got {budget_mode!r}"
+        )
+    if near_dup_threshold is not None and not 0.0 <= near_dup_threshold <= 1.0:
+        raise ValueError(
+            f"near_dup_threshold must be in [0, 1], got {near_dup_threshold!r}"
+        )
 
 
 def curate_documents(
@@ -138,19 +167,10 @@ def curate_documents(
     codegen regexp chains: scan-bound, no extra pass.
 
     Arguments are validated before any Spark job runs: the near-dup
-    stages run eager jobs while the plan is built."""
-    if near_dup_keep not in ("min-id", "quality"):
-        raise ValueError(
-            f"near_dup_keep must be 'min-id' or 'quality', got {near_dup_keep!r}"
-        )
-    if budget_tokens is not None and budget_mode not in ("prefix", "greedy"):
-        raise ValueError(
-            f"budget_mode must be 'prefix' or 'greedy', got {budget_mode!r}"
-        )
-    if near_dup_threshold is not None and not 0.0 <= near_dup_threshold <= 1.0:
-        raise ValueError(
-            f"near_dup_threshold must be in [0, 1], got {near_dup_threshold!r}"
-        )
+    stages run eager jobs while the plan is built. With
+    ``near_dup_threshold`` set, the exact-collapse survivors are
+    persisted until the next call (``release_registry``)."""
+    _check_arguments(budget_tokens, budget_mode, near_dup_threshold, near_dup_keep)
     if strip_markup:
         from .textstats import strip_markup_expr
 
@@ -160,7 +180,11 @@ def curate_documents(
 
         df = df.withColumn(text_col, scrub_pii_expr(F.col(text_col)))
     enriched = enrich_documents(df, text_col, id_col, lang_col)
-    filtered = enriched.filter(F.col("q") >= F.lit(min_quality))
+    # a document without an id never survives (min(struct) ranks a null
+    # id first)
+    filtered = enriched.filter(
+        (F.col("q") >= F.lit(min_quality)) & F.col("doc_id").isNotNull()
+    )
     if landed is not None:
         landed_fp = landed.select(
             F.regexp_replace(
@@ -168,10 +192,14 @@ def curate_documents(
             ).alias("fp")
         )
         filtered = filtered.join(landed_fp, "fp", "left_anti")
-    keep_ids = filtered.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    survivors = filtered.join(
-        keep_ids.select("doc_id"), "doc_id", "left_semi"
-    ).drop("fp")
+    # the lowest id's whole row per fingerprint, fields in output order
+    survivors = (
+        filtered.groupBy("fp")
+        .agg(F.min(F.struct("doc_id", "lang", "text", "n_tokens", "q")).alias("_row"))
+        .select("_row.*")
+    )
+    if near_dup_threshold is not None:
+        survivors = release_registry("curation.curate_documents")(survivors)
     if near_dup_threshold is not None and landed is not None:
         # screen the delta against the LANDED corpus first (r12): the
         # exact-fingerprint anti join above only removes IDENTICAL
@@ -201,9 +229,9 @@ def curate_documents(
             threshold=near_dup_threshold,
             max_bucket=near_dup_max_bucket,
         ).selectExpr("doc_a AS id_a", "doc_b AS id_b")
-        clusters = connected_components(
-            pairs, survivors.select(F.col("doc_id").alias("id"))
-        )
+        # the touched nodes only: a singleton ranks first in its cluster
+        # under either keep policy, so it is never a loser
+        clusters = connected_components(pairs)
         if near_dup_keep == "quality":
             ranked = (
                 clusters.join(
@@ -290,7 +318,14 @@ def run_curation(
     """CLI entry: read a documents parquet, curate (incrementally vs
     ``landed_path`` when given), write the surviving corpus as parquet
     (doc_id, lang, text, n_tokens, q), and return the per-language stats
-    rows sorted by language."""
+    rows sorted by language.
+
+    Every argument is checked before a thread starts or a job runs. The
+    ICU case-mapping initialiser then starts in the background
+    (``session.warm_case_mapping``) while the plan is built. The final
+    survivors are persisted for the write and the stats; that cache and
+    the near-dup stage's are released before returning, since the
+    caller gets rows, not a DataFrame."""
     import os
 
     norm = lambda p: os.path.normpath(os.path.abspath(p))  # noqa: E731
@@ -307,6 +342,8 @@ def run_curation(
             "curate: --out must differ from --docs (writing over the "
             "corpus being read); write to a new directory and swap after"
         )
+    _check_arguments(budget_tokens, budget_mode, near_dup_threshold, near_dup_keep)
+    warm_case_mapping(spark)
     survivors = curate_documents(
         spark.read.parquet(docs_path),
         min_quality=min_quality,
@@ -321,9 +358,20 @@ def run_curation(
         strip_markup=strip_markup,
         scrub_pii=scrub_pii,
     )
-    survivors.write.mode("overwrite").parquet(out_dir)
-    written = spark.read.parquet(out_dir)
-    return [
-        tuple(r)
-        for r in curation_stats(written).orderBy("lang").collect()
-    ]
+    survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        survivors.write.mode("overwrite").parquet(out_dir)
+        # one row per language: sorted here (null first, as Spark's
+        # ascending order) rather than by a range-partitioned sort job
+        return sorted(
+            (tuple(r) for r in curation_stats(survivors).collect()),
+            key=lambda r: (r[0] is not None, r[0]),
+        )
+    finally:
+        survivors.unpersist()
+        if near_dup_threshold is not None:
+            # release_registry(key) drops the caches this run left under key
+            release_registry("curation.curate_documents")
+            release_registry("dedup.minhash_lsh_pairs")
+            if landed_path is not None:
+                release_registry("dedup.minhash_lsh_incremental")

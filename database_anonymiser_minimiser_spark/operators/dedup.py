@@ -2146,7 +2146,9 @@ def duck_simhash_wide_near_pairs_sql(
     """
 
 
-def connected_components(pairs: DataFrame, ids: DataFrame) -> DataFrame:
+def connected_components(
+    pairs: DataFrame, ids: DataFrame | None = None
+) -> DataFrame:
     """(id, cluster_id): connected components over near-dup pairs, where
     cluster_id = the minimum id reachable through any chain of pairs —
     turning pairwise matches into dedup groups (a~b, b~c => one cluster).
@@ -2166,8 +2168,12 @@ def connected_components(pairs: DataFrame, ids: DataFrame) -> DataFrame:
     (``session.get_spark``) run their executors on the driver's host,
     which holds the edge set either way.
 
-    ``pairs``: (id_a, id_b) undirected; ``ids``: (id) node universe
-    (isolated nodes become singleton clusters).
+    ``pairs``: (id_a, id_b) undirected. ``ids``: (id) node universe;
+    its nodes that no pair touches come back as singleton clusters
+    (``cluster_id = id``), through one anti join against the labels.
+    With ``ids=None`` only the nodes the pairs touch are labelled: a
+    caller that drops every non-minimal cluster member (curation) needs
+    no singletons, and skips that join.
     """
     import numpy as np
     import pyarrow as pa
@@ -2193,6 +2199,8 @@ def connected_components(pairs: DataFrame, ids: DataFrame) -> DataFrame:
             }
         )
     )
+    if ids is None:
+        return labels
     singletons = ids.join(labels.select("id"), "id", "left_anti").selectExpr(
         "id", "id AS cluster_id"
     )

@@ -47,6 +47,19 @@ launch rules hold:
   any other case (a user conf dir, an unwritable cache, a JVM that
   already exists, options that already choose ``-Xshare`` or an
   archive) no archive flag is added.
+
+Spark 4.1 lowercases and uppercases strings through ICU
+(``spark.sql.icu.caseMappings.enabled``, on by default), and the class
+that does it (``CollationAwareUTF8String``) builds a title-case table
+over all 1,114,112 code points in its static initialiser: about 2 s of
+one core, once per JVM, even for all-ASCII text. Left to the first
+job, every task of it waits on that class-init lock.
+``warm_case_mapping`` starts the initialiser on a daemon thread while
+the caller is still building its plan; ``curate`` calls it, because its
+fingerprint lowercases every document. ``get_spark`` does not: an
+export's rules never reach ``lower``/``upper``, and the thread would
+burn a core for nothing. Turning ICU off instead would change what
+non-ASCII text lowercases to.
 """
 
 from __future__ import annotations
@@ -58,6 +71,7 @@ import re
 import shlex
 import subprocess
 import sys
+import threading
 import time
 import warnings
 import weakref
@@ -436,6 +450,35 @@ def get_spark(
         )
         atexit.register(_publish_archive, *recording)
     return spark
+
+
+_CASE_MAPPING_CLASS = "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String"
+# ids of the py4j gateways (one per JVM) a case-mapping thread started for
+_CASE_MAPPING_STARTED: set[int] = set()
+
+
+def warm_case_mapping(spark: SparkSession) -> threading.Thread | None:
+    """Initialise Spark's ICU case-mapping class on a daemon thread, at
+    most once per JVM, and return at once: the thread, or None when one
+    was already started. The first ``lower``/``upper`` then finds the
+    class ready instead of stalling its tasks (see the module docstring).
+    Every error is swallowed: a later Spark may rename the class, and a
+    missing class only means no head start."""
+    gateway = spark.sparkContext._gateway
+    if id(gateway) in _CASE_MAPPING_STARTED:
+        return None
+    _CASE_MAPPING_STARTED.add(id(gateway))
+    class_name = _CASE_MAPPING_CLASS
+
+    def load() -> None:
+        try:
+            gateway.jvm.java.lang.Class.forName(class_name)
+        except Exception:
+            pass
+
+    thread = threading.Thread(target=load, name="spark-graft-case-mapping", daemon=True)
+    thread.start()
+    return thread
 
 
 # sessions configure_for_determinism already pinned; weak, so a stopped

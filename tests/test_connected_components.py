@@ -93,3 +93,22 @@ def test_integer_ids_keep_singletons(spark):
     assert [f.dataType.simpleString() for f in out.schema.fields] == ["int", "int"]
     got = {r["id"]: r["cluster_id"] for r in out.collect()}
     assert got == {5: 5, 7: 5, 9: 5, 2: 2, 40: 40}
+
+
+def test_without_ids_labels_only_touched_nodes(spark):
+    pairs = spark.createDataFrame(
+        [(4, 8), (8, 6), (3, 2), (2, 3)], "id_a long, id_b long"
+    )
+    got = {r["id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    assert got == {2: 2, 3: 2, 4: 4, 6: 4, 8: 4}
+
+
+def test_without_ids_matches_bfs_on_touched_nodes(spark):
+    rng = random.Random(5)
+    id_list = rng.sample(range(10_000), 400)
+    pair_list = [tuple(rng.sample(id_list, 2)) for _ in range(250)]
+    touched = {i for p in pair_list for i in p}
+    pairs = spark.createDataFrame(pair_list, ["id_a", "id_b"])
+    got = {r["id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    want = _bfs_clusters(pair_list, id_list)
+    assert got == {i: want[i] for i in touched}

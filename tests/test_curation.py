@@ -468,3 +468,142 @@ def test_curate_refuses_self_overwrite(spark, tmp_path):
         run_curation(spark, d, d + "/", landed_path=d)
     with pytest.raises(ValueError, match="--out must differ from --docs"):
         run_curation(spark, d, d)
+
+
+def test_curate_repeated_doc_id_keeps_one_row_per_fingerprint(spark):
+    """The exact collapse keeps ONE row per normalised fingerprint, even
+    when a doc_id repeats across fingerprint groups: a keep-min-id semi
+    join back by id would also keep the other group's row carrying that
+    id, leaving two survivors with one fingerprint. A row without an id
+    never survives."""
+    df = spark.createDataFrame(
+        [
+            (1, "hello world foo bar", "en"),
+            (1, "other text here now", "en"),
+            (0, "Other  text here now", "en"),
+            (None, "hello world foo bar", "en"),  # no id: never survives
+        ],
+        "doc_id long, text string, lang string",
+    )
+    got = sorted(
+        (r["doc_id"], r["text"])
+        for r in C.curate_documents(df, min_quality=0.0).collect()
+    )
+    assert got == [(0, "Other  text here now"), (1, "hello world foo bar")]
+
+
+# near-dup corpus for the run_curation tests: an exact copy (1), two
+# near-copies of doc 0 (2 and the higher-quality 3), a near-copy across
+# languages (5 of 4), junk (6) and a lone document (7)
+_FRESH = (
+    "entirely novel prose about catalyst planners rewriting logical trees "
+    "into physical operator pipelines"
+)
+_NEARDUP_ROWS = [
+    (0, GOOD, "en"),
+    (1, GOOD, "en"),
+    (2, GOOD.replace("quick", "swift"), "en"),
+    (3, BETTER, "en"),
+    (4, _FRESH, "en"),
+    (5, _FRESH.replace("novel", "fresh"), "de"),
+    (6, JUNK, "de"),
+    (7, "der hund und die katze im garten am morgen", "de"),
+]
+
+# jobs one warm run_curation launched on _NEARDUP_ROWS (budget 40 tokens,
+# threshold 0.5) when the collapse was a groupBy plus a semi join, the
+# singletons were joined back into the clusters and the stats re-read the
+# written files: 22 under min-id, 25 under quality
+_JOBS_BEFORE = {"min-id": 22, "quality": 25}
+
+
+def _neardup_docs(spark, tmp_path) -> str:
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(_NEARDUP_ROWS, ["doc_id", "text", "lang"]).write.parquet(docs)
+    return docs
+
+
+@pytest.mark.parametrize("keep", ["min-id", "quality"])
+def test_run_curation_stats_without_read_back(spark, tmp_path, keep):
+    """The stats run_curation returns are the rollup of the files it
+    wrote, and the run launches fewer jobs than the read-back design."""
+    docs = _neardup_docs(spark, tmp_path)
+    out = str(tmp_path / "out")
+    kw = dict(
+        min_quality=0.0, budget_tokens=40, near_dup_threshold=0.5, near_dup_keep=keep
+    )
+    C.run_curation(spark, docs, str(tmp_path / "warm"), **kw)  # plan caches warm
+    sc = spark.sparkContext
+    group = f"run_curation_{keep}"
+    sc.setJobGroup(group, f"run_curation near_dup_keep={keep}")
+    try:
+        stats = C.run_curation(spark, docs, out, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    written = spark.read.parquet(out)
+    assert stats == [
+        tuple(r) for r in C.curation_stats(written).orderBy("lang").collect()
+    ]
+    assert sorted(r["doc_id"] for r in written.collect()) == (
+        [0, 6, 7] if keep == "min-id" else [3, 6, 7]
+    )
+    assert jobs < _JOBS_BEFORE[keep], jobs
+
+
+def test_run_curation_releases_its_caches(spark, tmp_path):
+    """run_curation returns rows, not a DataFrame: no cache of the run
+    outlives it, the near-dup stage's included."""
+    docs = _neardup_docs(spark, tmp_path)
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    C.run_curation(
+        spark, docs, str(tmp_path / "out"), min_quality=0.0, near_dup_threshold=0.5
+    )
+    assert cm.cachedData().size() == 0
+    C.run_curation(spark, docs, str(tmp_path / "exact"), min_quality=0.0)
+    assert cm.cachedData().size() == 0
+
+
+def test_curate_documents_releases_previous_call_cache(spark):
+    """curate_documents persists its exact-collapse survivors when the
+    near-dup stage runs; each call releases the previous call's cache,
+    so repeated calls in one session hold one call's worth."""
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    for offset in (0, 100, 200):
+        # distinct inputs: no call's plan can reuse another call's cache
+        rows = [(offset + i, text, lang) for i, text, lang in _NEARDUP_ROWS]
+        df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
+        C.curate_documents(df, 0.0, near_dup_threshold=0.5).collect()
+        # the collapse survivors and the MinHash shingles of this call
+        assert cm.cachedData().size() <= 2
+    spark.catalog.clearCache()
+
+
+def test_run_curation_rejects_bad_arguments_before_any_thread_or_job(
+    spark, tmp_path, monkeypatch
+):
+    started = []
+    monkeypatch.setattr(C, "warm_case_mapping", started.append)
+    sc = spark.sparkContext
+    group = "run_curation_bad_arguments"
+    sc.setJobGroup(group, "run_curation with bad arguments")
+    docs, out = str(tmp_path / "docs"), str(tmp_path / "out")
+    try:
+        with pytest.raises(ValueError, match="near_dup_keep"):
+            C.run_curation(
+                spark, docs, out, near_dup_threshold=0.5, near_dup_keep="nope"
+            )
+        with pytest.raises(ValueError, match="near_dup_threshold"):
+            C.run_curation(spark, docs, out, near_dup_threshold=1.5)
+        with pytest.raises(ValueError, match="budget_mode"):
+            C.run_curation(spark, docs, out, budget_tokens=10, budget_mode="nope")
+        with pytest.raises(ValueError, match="--out must differ from --docs"):
+            C.run_curation(spark, docs, docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not started
+    assert not sc.statusTracker().getJobIdsForGroup(group)
