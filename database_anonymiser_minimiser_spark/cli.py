@@ -190,7 +190,8 @@ def build_parser() -> argparse.ArgumentParser:
     )
     screen.add_argument(
         "--index", required=True,
-        help="directory for the persisted MinHash index",
+        help="directory for the persisted MinHash index (the path "
+        "'forget --index minhash' and 'compact --index minhash' take)",
     )
     screen.add_argument(
         "--threshold", type=float, default=None,
@@ -199,7 +200,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     screen.add_argument(
         "--table-prefix", default="neardup_index",
-        help="catalog table prefix for the bucketed index layout",
+        help="catalog table prefix for the index's bucketed tables",
     )
     screen.add_argument(
         "--compact-every", type=_positive_int, default=None, metavar="N",
@@ -336,8 +337,8 @@ def build_parser() -> argparse.ArgumentParser:
         help="compact a fragmented parquet dataset into ~target-sized "
         "files (streaming appends and per-trigger micro-batches leave "
         "thousands of tiny files; every file costs a footer read + task "
-        "slot at scan time). Writes to --out (never in place) and "
-        "verifies row counts before reporting — swap directories after",
+        "slot at scan time). Verifies row counts before reporting; "
+        "hive-partitioned datasets keep their k=v directories",
     )
     compact.add_argument(
         "--path", required=True, help="parquet dataset to compact"
@@ -346,9 +347,9 @@ def build_parser() -> argparse.ArgumentParser:
         "--out", default=None,
         help="output directory for the compacted dataset (must differ "
         "from --path; must not already exist). Omit for IN-PLACE "
-        "compaction: hive-partition-aware, crash-safe promotion via a "
-        "tmp dir + rename (dump.compact_parquet — local/HDFS-rename "
-        "stores)",
+        "compaction: the result is staged in a sibling directory and "
+        "renamed over --path only after the row check (stores with a "
+        "directory rename: local paths or file:// URIs, HDFS)",
     )
     compact.add_argument(
         "--target-mb", type=_positive_int, default=128, metavar="MB",
@@ -360,7 +361,8 @@ def build_parser() -> argparse.ArgumentParser:
         help="compact a PERSISTED dedup index instead of a plain "
         "parquet dataset: fold its per-epoch batch= partitions into "
         "one (minhash = the bucketed MinHash/LSH index whose manifest "
-        "lives at --path; ann = the ANN vector index at --path). The "
+        "lives at --path, the 'screen --index' directory; ann = the "
+        "ANN vector index at --path). The "
         "offline maintenance path for an index grown by many appends "
         "with no stream running — screen results are unchanged, scan "
         "cost stops growing with ingest history. In place; "
@@ -428,8 +430,8 @@ def build_parser() -> argparse.ArgumentParser:
     forget.add_argument(
         "--index", default=None, choices=["minhash", "ann"],
         help="index mode: which index kind lives at --path (minhash = "
-        "bucketed manifest index, falling back to the plain "
-        "bands/shingles layout; ann = vector index)",
+        "the MinHash index a 'screen --index' wrote there; ann = vector "
+        "index)",
     )
     forget.add_argument(
         "--path", default=None, help="index mode: persisted index path"
@@ -749,26 +751,6 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"error: {exc}", file=sys.stderr)
                 return 2
             return 0
-        if args.out is None:
-            # in-place: hive-aware, crash-safe tmp+rename promotion
-            from .dump import compact_parquet
-            from .operators.compaction import dataset_file_stats
-
-            try:
-                n_before, _ = dataset_file_stats(spark, args.path)
-                n_after = compact_parquet(
-                    spark,
-                    args.path,
-                    target_file_bytes=args.target_mb * 1024 * 1024,
-                )
-            except (FileNotFoundError, ValueError) as exc:
-                print(f"error: {exc}", file=sys.stderr)
-                return 2
-            print(
-                f"compacted {args.path} in place: {n_before} -> "
-                f"{n_after} file(s)"
-            )
-            return 0
         from .operators.compaction import compact_dataset
 
         try:
@@ -778,8 +760,9 @@ def main(argv: list[str] | None = None) -> int:
         except (FileNotFoundError, ValueError) as exc:
             print(f"error: {exc}", file=sys.stderr)
             return 2
+        where = " in place" if args.out is None else ""
         print(
-            f"compacted {args.path}: {stats['files_before']} -> "
+            f"compacted {args.path}{where}: {stats['files_before']} -> "
             f"{stats['files_after']} file(s), {stats['rows']} row(s) "
             f"verified, {stats['bytes']} bytes"
         )
@@ -807,25 +790,17 @@ def main(argv: list[str] | None = None) -> int:
                 hidden = f"{stats['landed']} landed vector row(s) hidden"
             else:
                 from .operators.dedup import (
-                    _read_index_manifest,
                     forget_from_minhash_index,
                     register_minhash_index_bucketed,
                 )
 
-                try:
-                    _read_index_manifest(spark, args.path)
-                    prefix = "dbmask_maint"
-                    register_minhash_index_bucketed(
-                        spark, prefix, args.path
-                    )
-                    stats = forget_from_minhash_index(
-                        spark, ids, path=args.path, table_prefix=prefix
-                    )
-                except FileNotFoundError:
-                    # no manifest -> the plain bands/shingles layout
-                    stats = forget_from_minhash_index(
-                        spark, ids, path=args.path
-                    )
+                # fresh-session maintenance: catalog entries are
+                # session-local, rebuild them from the manifest
+                prefix = "dbmask_maint"
+                register_minhash_index_bucketed(spark, prefix, args.path)
+                stats = forget_from_minhash_index(
+                    spark, ids, table_prefix=prefix, path=args.path
+                )
                 hidden = f"{stats['landed_docs']} landed doc(s) hidden"
         except (FileNotFoundError, ValueError) as exc:
             print(f"error: {exc}", file=sys.stderr)

@@ -329,8 +329,9 @@ def _table_section(out: IO[str], db_type: str, name: str, ddl: str) -> None:
 
 
 # Concurrent table spool jobs. Throughput saturates around 8 on a
-# many-small-tables catalog (tools/bench_catalog.py, 40 x 200-row tables,
-# local[32]: 18.1 s at 4 workers, 14.8 s at 8, 15.9 s at 16): the limit
+# many-small-tables catalog (PERFORMANCE.md "catalog axis", beside
+# SCALING_catalog_r11.json; 40 x 200-row tables, local[32]: 18.1 s at 4
+# workers, 14.8 s at 8, 15.9 s at 16): the limit
 # is driver-side job submission, not executor slots.
 _SPOOL_WORKERS = 8
 
@@ -635,70 +636,6 @@ def write_zorder_parquet(
         .write.mode(mode)
         .parquet(str(path))
     )
-
-
-def _hive_partition_columns(p: Path) -> list[str]:
-    """Partition columns from the ``key=value`` directory layout (one key
-    per nesting level, hive convention)."""
-    cols: list[str] = []
-    cur = p
-    while True:
-        subdirs = [d for d in cur.iterdir() if d.is_dir() and "=" in d.name]
-        if not subdirs:
-            return cols
-        cols.append(subdirs[0].name.split("=", 1)[0])
-        cur = subdirs[0]
-
-
-def compact_parquet(
-    spark,
-    path: str | Path,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet dataset into ~target-sized files; returns the new
-    file count.
-
-    Small-file buildup is the classic failure mode of incremental writes
-    at scale (every micro-batch/table-export leaves part files; 100 TB of
-    1 MB files = 10^8 scan tasks). Sizing from the dataset's actual bytes
-    on disk — not a row-count guess — keeps output files near the parquet
-    sweet spot.
-
-    A hive-partitioned dataset is re-written WITH the same partitionBy —
-    flattening it would silently fold the partition columns into the data
-    files and lose partition pruning for every downstream reader. The
-    promotion is crash-safe: the new data is written to ``.compact.tmp``,
-    the old dataset is renamed aside (never deleted before the new one is
-    in place), then the tmp dir takes its name; a crash at any point
-    leaves at least one complete copy on disk."""
-    import shutil
-
-    p = Path(path)
-    total = sum(f.stat().st_size for f in p.rglob("*.parquet"))
-    n = max(1, -(-total // target_file_bytes))  # ceil
-    part_cols = _hive_partition_columns(p)
-    df = spark.read.parquet(str(p))
-    tmp = str(p) + ".compact.tmp"
-    if part_cols:
-        # one shuffle on the partition keys: each task holds whole
-        # partitions, so each partition dir gets ~1 compacted file
-        (
-            df.repartition(int(n), *part_cols)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(tmp)
-        )
-    else:
-        # shrinking the file count needs no shuffle at all
-        df.coalesce(int(n)).write.mode("overwrite").parquet(tmp)
-
-    old = Path(str(p) + ".compact.old")
-    if old.exists():
-        shutil.rmtree(old)
-    p.rename(old)  # keep the original until the new copy is promoted
-    Path(tmp).rename(p)
-    shutil.rmtree(old)
-    return len(list(p.rglob("*.parquet")))
 
 
 def write_bucketed_table(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import release_registry, scoped_conf
+from .compaction import _hfs_delete
 
 SHINGLE_K = 3
 NUM_HASHES = 16
@@ -511,16 +512,6 @@ def minhash_lsh_incremental(
             sh_landed.unpersist()
 
 
-def _hfs_delete(spark, path: str) -> None:
-    """Recursively delete ``path`` through the Hadoop FileSystem API, so
-    it works on whatever storage the session is pointed at (local FS in
-    tests, HDFS/object stores on a cluster)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
 def _table_location(spark, table: str) -> str | None:
     """The table's storage location from the catalog, or None."""
     if not spark.catalog.tableExists(table):
@@ -564,9 +555,9 @@ def _read_index_manifest(spark, path: str) -> dict:
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(p):
         raise FileNotFoundError(
-            f"no index manifest at {path}/_index_manifest.json — the "
-            "bucketed index was never seeded here (seed it first, or "
-            "check the path)"
+            f"no MinHash index at {path}: {path}/_index_manifest.json "
+            "not found, the index was never seeded here (seed it first, "
+            "or check the path)"
         )
     stream = fs.open(p)
     try:
@@ -600,126 +591,6 @@ def dedup_exact_for_index(
     ).select(id_col, text_col)
 
 
-def save_minhash_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str | None = None,
-    append: bool = False,
-    batch: str | None = None,
-    dedup_exact: bool = False,
-) -> None:
-    """Persist the landed corpus' MinHash state so daily ingest never
-    re-shingles the corpus: ``<path>/bands`` (id, band_id, band_key — what
-    candidate generation joins against) and ``<path>/shingles`` (id, s —
-    what exact-Jaccard verification needs for the landed side of each
-    candidate). ``append=True`` adds an admitted batch's rows to both
-    datasets — the maintenance step of the ingest loop.
-
-    Each write lands in its own ``batch=<label>`` partition directory and
-    is a targeted OVERWRITE of that directory, which makes the append
-    step replay-idempotent: a retried micro-batch (foreachBatch re-runs
-    the same epoch after a failure) rewrites its own partition instead of
-    appending duplicate band/shingle rows that would permanently inflate
-    every later batch's n_dups. A fresh seed (``append=False``) clears
-    the whole index first so stale batch partitions from a previous run
-    cannot leak in. Readers (:func:`minhash_incremental_vs_index`) see
-    the union via partition discovery and can exclude a single batch's
-    partition when re-screening a retried epoch.
-
-    ``batch`` names the partition; it defaults to ``"seed"`` for a fresh
-    index and to a unique label for an append (pass the epoch id
-    explicitly to make a retried append idempotent — an auto-generated
-    label makes the append safe against clobbering earlier partitions
-    but cannot dedupe a replay it cannot recognise).
-
-    ``dedup_exact=True`` collapses exact-duplicate texts to one
-    canonical copy first (:func:`dedup_exact_for_index`) — the hot-band
-    fix for template-heavy corpora; verdicts and best_jaccard are
-    unchanged, n_dups counts distinct contents instead of copies.
-
-    At 100 TB, additionally bucket ``bands`` by band_key and ``shingles``
-    by id so the daily joins are co-located — see
-    :func:`save_minhash_index_bucketed`."""
-    if batch is None:
-        if append:
-            import uuid
-
-            batch = f"b{uuid.uuid4().hex[:12]}"
-        else:
-            batch = "seed"
-    spark = df.sparkSession
-    if not append:
-        _hfs_delete(spark, path)
-    if dedup_exact:
-        df = dedup_exact_for_index(df, text_col, id_col)
-    sh = shingles(df, text_col, id_col)
-    from pyspark.storagelevel import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        banded_signature(minhash_signature(sh, mode=mode), mode=mode).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/bands/batch={batch}")
-        sh.write.mode("overwrite").parquet(f"{path}/shingles/batch={batch}")
-    finally:
-        sh.unpersist()
-
-
-def minhash_incremental_vs_index(
-    new_df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    mode: str | None = None,
-    exclude_batch: str | None = None,
-) -> DataFrame:
-    """:func:`minhash_lsh_incremental` against a PERSISTED index
-    (:func:`save_minhash_index`) instead of re-deriving the landed
-    corpus' bands and shingles — the shape the daily loop actually runs:
-    shingle the batch, join its bands against the stored band relation,
-    verify against the stored shingle sets, then (caller's move) append
-    the admitted docs back into the index.
-
-    ``exclude_batch`` drops one ``batch=<label>`` partition from the
-    landed side — a retrying micro-batch whose own append already landed
-    must not screen against itself. Verification is SIDED
-    (:func:`verify_jaccard_sided`): a batch doc_id that re-uses a landed
-    id (re-crawl of the same key) compares new-content against
-    landed-content exactly once instead of fanning out through a unioned
-    shingle relation. The returned (small, per-new-doc) aggregate is
-    materialised eagerly so the batch shingle cache can be released
-    before returning — per-micro-batch callers do not accumulate
-    shingle-sized cached blocks."""
-    spark = new_df.sparkSession
-    sh_new = shingles(new_df, text_col, id_col)
-    from pyspark.storagelevel import StorageLevel
-
-    sh_new = sh_new.persist(StorageLevel.MEMORY_AND_DISK)
-    mode = _resolve_mode(mode)
-    try:
-        banded_landed = spark.read.parquet(f"{path}/bands")
-        sh_landed = spark.read.parquet(f"{path}/shingles")
-        if exclude_batch is not None:
-            banded_landed = banded_landed.filter(
-                F.col("batch") != exclude_batch
-            )
-            sh_landed = sh_landed.filter(F.col("batch") != exclude_batch)
-        # forgotten docs never match (logical erasure — pushed filter /
-        # broadcast anti-join, the landed side still never shuffles)
-        ts = minhash_tombstone_ids(spark, path=path)
-        if ts:
-            banded_landed = _without_tombstoned_ids(banded_landed, ts)
-            sh_landed = _without_tombstoned_ids(sh_landed, ts)
-        return _screen_new_vs_landed(
-            sh_new, banded_landed, sh_landed, threshold, mode
-        )
-    finally:
-        sh_new.unpersist()
-
-
 def _screen_new_vs_landed(
     sh_new: DataFrame,
     banded_landed: DataFrame,
@@ -728,10 +599,11 @@ def _screen_new_vs_landed(
     mode: str,
     materialize: bool = True,
 ) -> DataFrame:
-    """Shared screen core of the two persisted-index variants: band the
-    (already persisted) batch shingles, bucket-join against the landed
-    band relation, verify sided, aggregate per new doc, and materialise
-    the small result eagerly so callers can release the batch cache.
+    """Screen core of :func:`minhash_incremental_vs_bucketed_index`:
+    band the (already persisted) batch shingles, bucket-join against the
+    landed band relation, verify sided, aggregate per new doc, and
+    materialise the small result eagerly so callers can release the
+    batch cache.
 
     Hot-band note: a landed band bucket of size B fans out B landed
     candidates per matching batch doc — linear in the BATCH (not the
@@ -775,10 +647,13 @@ def save_minhash_index_bucketed(
     batch: str | None = None,
     dedup_exact: bool = False,
 ) -> None:
-    """The 100 TB layout of :func:`save_minhash_index`: bands and
-    shingles land as BUCKETED tables (``<prefix>_bands`` bucketed+sorted
-    by (band_id, band_key), ``<prefix>_shingles`` by id), so the daily screen's two
-    index-side joins read pre-shuffled, pre-sorted buckets — NO Exchange
+    """Persist the landed corpus' MinHash state so daily ingest never
+    re-shingles the corpus: bands (what candidate generation joins
+    against) and shingles (what exact-Jaccard verification needs for the
+    landed side of each candidate) land as BUCKETED tables
+    (``<prefix>_bands`` bucketed+sorted by (band_id, band_key),
+    ``<prefix>_shingles`` by id), so the daily screen's two index-side
+    joins read pre-shuffled, pre-sorted buckets — NO Exchange
     (and no sort) ever touches the corpus-sized index side again; only
     the day's batch shuffles. This is the same play the fact-fact
     bucketed join proves (tests/test_bucketing.py), applied to the
@@ -786,12 +661,15 @@ def save_minhash_index_bucketed(
     an admitted batch (bucketed appends write additional per-bucket
     files — bucket routing stays correct). Size ``n_buckets`` so one
     bucket of the shingle relation fits an executor (the verify join
-    streams bucket pairs).
+    streams bucket pairs). With ``path`` the tables live at
+    ``<path>/bands`` and ``<path>/shingles`` next to the manifest
+    :func:`register_minhash_index_bucketed` reads after a restart.
 
-    Both tables are additionally PARTITIONED by ``batch`` (the same
-    ``batch=<label>`` convention as :func:`save_minhash_index`):
-    partition pruning makes a retried micro-batch's self-exclusion
-    cheap, and :func:`bucketed_index_has_batch` answers "did this
+    Both tables are additionally PARTITIONED by ``batch``
+    (``batch=<label>``; ``"seed"`` for a fresh index, a unique label for
+    an append unless one is given): partition pruning makes a retried
+    micro-batch's self-exclusion cheap, and
+    :func:`bucketed_index_has_batch` answers "did this
     epoch's append already land?" from the catalog — the two hooks the
     streaming ingest screen's replay idempotency needs. Bucket routing
     is per-partition, so scans stay bucket-aware (``Bucketed: true``)
@@ -995,11 +873,18 @@ def minhash_incremental_vs_bucketed_index(
     materialize: bool = True,
     exclude_batch: str | None = None,
 ) -> DataFrame:
-    """:func:`minhash_incremental_vs_index` against the BUCKETED table
-    index (:func:`save_minhash_index_bucketed`): identical results, but
-    the landed band relation and the landed shingle relation are read as
-    co-located buckets, so neither is shuffled (or sorted) by the screen
-    — plan-gated in tests/test_dedup.py. The daily at-scale cost is
+    """:func:`minhash_lsh_incremental` against the PERSISTED index
+    (:func:`save_minhash_index_bucketed`) instead of re-deriving the
+    landed corpus' bands and shingles — the shape the daily loop runs:
+    shingle the batch, join its bands against the stored band relation,
+    verify against the stored shingle sets, then (caller's move) append
+    the admitted docs back into the index. Verification is SIDED
+    (:func:`verify_jaccard_sided`): a batch doc_id that re-uses a landed
+    id (re-crawl of the same key) compares new content against landed
+    content exactly once. The landed band relation and the landed
+    shingle relation are read as co-located buckets, so neither is
+    shuffled (or sorted) by the screen — plan-gated in
+    tests/test_dedup.py. The daily at-scale cost is
     exactly: shingle the batch, shuffle THE BATCH into the index's
     bucket layout twice (bands + verify), stream bucket pairs.
 
@@ -1023,7 +908,7 @@ def minhash_incremental_vs_bucketed_index(
             sh_landed = sh_landed.filter(F.col("batch") != exclude_batch)
         # forgotten docs never match (logical erasure — pushed filter /
         # broadcast anti-join, bucket-join co-location preserved)
-        ts = minhash_tombstone_ids(spark, table_prefix=table_prefix)
+        ts = minhash_tombstone_ids(spark, table_prefix)
         if ts:
             banded_landed = _without_tombstoned_ids(banded_landed, ts)
             sh_landed = _without_tombstoned_ids(sh_landed, ts)
@@ -1119,7 +1004,7 @@ def compact_minhash_index_bucketed(
         # physical erasure: the rewrite is the moment tombstoned docs'
         # band/shingle rows actually leave the files (the screens have
         # hidden them since the forget call)
-        ts_vals = minhash_tombstone_ids(spark, table_prefix=table_prefix)
+        ts_vals = minhash_tombstone_ids(spark, table_prefix)
         for table, keys, leaf in specs:
             tmp = f"{table}__compacting"
             spark.sql(f"DROP TABLE IF EXISTS {tmp}")
@@ -1175,13 +1060,14 @@ def compact_minhash_index_bucketed(
 
 
 # ---------------------------------------------------------------------------
-# right-to-erasure: tombstones on the persisted MinHash indexes
+# right-to-erasure: tombstones on the persisted MinHash index
 # ---------------------------------------------------------------------------
 
-# above this many forgotten ids the screen-side exclusion switches from a
-# pushed Not(In(id, ...)) scan filter to a broadcast anti-join (the same
-# trade as the ANN ledger, similarity._TOMBSTONE_ISIN_CAP)
-_TS_ISIN_CAP = 4096
+# above this many forgotten ids the index-side exclusion switches from a
+# pushed Not(In(id, ...)) scan filter to a broadcast anti-join — a literal
+# list this long would bloat every query plan, while the anti-join's only
+# Exchange carries the (small) ledger side. Shared with the ANN index.
+_TOMBSTONE_ISIN_CAP = 4096
 
 
 def _coerce_forget_ids(ids) -> "tuple[list, str]":
@@ -1203,10 +1089,12 @@ def _without_tombstoned_ids(
     """Exclude (or with ``invert`` select) ledgered ids from an
     index-side relation without shuffling it: small ledgers push as a
     ``Not(In(...))`` scan filter, large ones broadcast-anti-join — the
-    bucketed screens' no-index-Exchange plans hold either way."""
+    bucketed MinHash screens' and the ANN serves' no-index-Exchange
+    plans hold either way. ``col`` is ``"id"`` for the MinHash index,
+    ``"nid"`` for the ANN index."""
     if not ts_vals:
         return df.filter(F.lit(False)) if invert else df
-    if len(ts_vals) <= _TS_ISIN_CAP:
+    if len(ts_vals) <= _TOMBSTONE_ISIN_CAP:
         cond = F.col(col).isin(ts_vals)
         return df.filter(cond if invert else ~cond)
     typ = "bigint" if isinstance(ts_vals[0], int) else "string"
@@ -1218,162 +1106,85 @@ def _without_tombstoned_ids(
     )
 
 
-def minhash_tombstone_ids(
-    spark, path: str | None = None, table_prefix: str | None = None
-) -> list:
-    """The sorted forgotten doc ids of a persisted MinHash index —
-    catalog-table ledger for the bucketed layout (``table_prefix``),
-    path-rooted parquet for the plain layout (``path``); empty when
-    nothing was ever forgotten or the ledger was cleared."""
-    if table_prefix is not None:
-        if not spark.catalog.tableExists(f"{table_prefix}_tombstones"):
-            return []
-        rows = spark.table(f"{table_prefix}_tombstones").collect()
-    elif path is not None:
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/tombstones"
-        )
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
-            return []
-        rows = spark.read.parquet(f"{path}/tombstones").collect()
-    else:
-        raise ValueError("pass path or table_prefix")
+def minhash_tombstone_ids(spark, table_prefix: str) -> list:
+    """The sorted forgotten doc ids of the persisted MinHash index
+    (ledger table ``<table_prefix>_tombstones``); empty when nothing was
+    ever forgotten or the ledger was cleared."""
+    if not spark.catalog.tableExists(f"{table_prefix}_tombstones"):
+        return []
+    rows = spark.table(f"{table_prefix}_tombstones").collect()
     return sorted(r["id"] for r in rows)
 
 
 def forget_from_minhash_index(
     spark,
     ids,
+    table_prefix: str,
     path: str | None = None,
-    table_prefix: str | None = None,
 ) -> dict:
     """Right-to-erasure for the persisted MinHash index: record ``ids``
-    in the index's tombstone ledger so every incremental screen stops
-    matching against them immediately (logical erasure — a pushed scan
-    filter, the index never shuffles); the bucketed layout's compaction
-    (:func:`compact_minhash_index_bucketed`) then drops their band and
+    in the index's tombstone ledger (``<table_prefix>_tombstones``) so
+    every incremental screen stops matching against them immediately
+    (logical erasure — a pushed scan filter, the index never shuffles);
+    :func:`compact_minhash_index_bucketed` then drops their band and
     shingle rows physically and clears the ledger once no replayable
-    epoch is kept back. The plain (non-bucketed) layout stays
-    logical-only until its next re-seed — its maintenance story has no
-    in-place rewrite by design.
-
-    ``table_prefix`` targets the bucketed catalog-table index (ledger =
-    ``<prefix>_tombstones``, recorded in the ``path`` manifest when
-    given, so :func:`register_minhash_index_bucketed` restores it after
-    a driver restart); ``path`` alone targets the plain parquet index
-    (ledger = ``<path>/tombstones``). Idempotent: re-forgetting is a
-    no-op. Returns ``{"requested", "new", "already", "landed_docs"}``."""
+    epoch is kept back. With ``path`` the ledger is recorded in the
+    index manifest, so :func:`register_minhash_index_bucketed` restores
+    it after a driver restart. Idempotent: re-forgetting is a no-op.
+    Returns ``{"requested", "new", "already", "landed_docs"}``."""
     want, typ = _coerce_forget_ids(ids)
-    if table_prefix is not None:
-        if not spark.catalog.tableExists(f"{table_prefix}_bands"):
-            raise FileNotFoundError(
-                f"no bucketed MinHash index under prefix "
-                f"{table_prefix!r} — seed it (save_minhash_index_"
-                f"bucketed) or rebuild the catalog "
-                f"(register_minhash_index_bucketed) first"
-            )
-        existing = set(
-            minhash_tombstone_ids(spark, table_prefix=table_prefix)
+    if not spark.catalog.tableExists(f"{table_prefix}_bands"):
+        raise FileNotFoundError(
+            f"no bucketed MinHash index under prefix "
+            f"{table_prefix!r} — seed it (save_minhash_index_"
+            f"bucketed) or rebuild the catalog "
+            f"(register_minhash_index_bucketed) first"
         )
-        new = [v for v in want if v not in existing]
-        merged = sorted(existing.union(want))
-        if new:
-            staging = f"{table_prefix}_tombstones__staging"
-            spark.sql(f"DROP TABLE IF EXISTS {staging}")
-            w = (
-                spark.createDataFrame(
-                    [(v,) for v in merged], f"id {typ}"
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .format("parquet")
-            )
-            if path is not None:
-                import uuid
+    existing = set(minhash_tombstone_ids(spark, table_prefix))
+    new = [v for v in want if v not in existing]
+    merged = sorted(existing.union(want))
+    if new:
+        staging = f"{table_prefix}_tombstones__staging"
+        spark.sql(f"DROP TABLE IF EXISTS {staging}")
+        w = (
+            spark.createDataFrame([(v,) for v in merged], f"id {typ}")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .format("parquet")
+        )
+        if path is not None:
+            import uuid
 
-                w = w.option(
-                    "path", f"{path}/tombstones_c{uuid.uuid4().hex[:8]}"
-                )
-            w.saveAsTable(staging)
-            live = f"{table_prefix}_tombstones"
-            old_loc = _table_location(spark, live)
-            spark.sql(f"DROP TABLE IF EXISTS {live}")
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {live}")
-            new_loc = _table_location(spark, live)
-            if old_loc is not None and old_loc != new_loc:
-                _hfs_delete(spark, old_loc)
-            if path is not None:
-                manifest = _read_index_manifest(spark, path)
-                bands_t = spark.table(f"{table_prefix}_bands")
-                sh_t = spark.table(f"{table_prefix}_shingles")
-                _write_index_manifest(
-                    spark,
-                    path,
-                    _index_manifest(
-                        spark, table_prefix, manifest["n_buckets"],
-                        bands_ddl=bands_t.drop("batch")
-                        ._jdf.schema().toDDL(),
-                        shingles_ddl=sh_t.drop("batch")
-                        ._jdf.schema().toDDL(),
-                    ),
-                )
-        landed = (
-            _without_tombstoned_ids(
-                spark.table(f"{table_prefix}_shingles"), merged,
-                invert=True,
+            w = w.option(
+                "path", f"{path}/tombstones_c{uuid.uuid4().hex[:8]}"
             )
-            .select("id").distinct().count()
+        w.saveAsTable(staging)
+        live = f"{table_prefix}_tombstones"
+        old_loc = _table_location(spark, live)
+        spark.sql(f"DROP TABLE IF EXISTS {live}")
+        spark.sql(f"ALTER TABLE {staging} RENAME TO {live}")
+        new_loc = _table_location(spark, live)
+        if old_loc is not None and old_loc != new_loc:
+            _hfs_delete(spark, old_loc)
+        if path is not None:
+            manifest = _read_index_manifest(spark, path)
+            bands_t = spark.table(f"{table_prefix}_bands")
+            sh_t = spark.table(f"{table_prefix}_shingles")
+            _write_index_manifest(
+                spark,
+                path,
+                _index_manifest(
+                    spark, table_prefix, manifest["n_buckets"],
+                    bands_ddl=bands_t.drop("batch")._jdf.schema().toDDL(),
+                    shingles_ddl=sh_t.drop("batch")._jdf.schema().toDDL(),
+                ),
+            )
+    landed = (
+        _without_tombstoned_ids(
+            spark.table(f"{table_prefix}_shingles"), merged, invert=True
         )
-    else:
-        if path is None:
-            raise ValueError("pass path or table_prefix")
-        jvm = spark._jvm
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(HPath(f"{path}/bands")):
-            raise FileNotFoundError(
-                f"no MinHash index at {path} — nothing to forget from"
-            )
-        existing = set(minhash_tombstone_ids(spark, path=path))
-        new = [v for v in want if v not in existing]
-        merged = sorted(existing.union(want))
-        if new:
-            tmp = f"{path}/_tombstones_tmp"
-            _hfs_delete(spark, tmp)
-            spark.createDataFrame(
-                [(v,) for v in merged], f"id {typ}"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            n_out = spark.read.parquet(tmp).count()
-            if n_out != len(merged):
-                raise RuntimeError(
-                    f"tombstone write verification failed: "
-                    f"{len(merged)} in, {n_out} out — staged at {tmp}, "
-                    f"ledger untouched"
-                )
-            trash = f"{path}/_tombstones_trash"
-            _hfs_delete(spark, trash)
-            live = f"{path}/tombstones"
-            if fs.exists(HPath(live)) and not fs.rename(
-                HPath(live), HPath(trash)
-            ):
-                raise RuntimeError(
-                    f"forget_from_minhash_index: rename {live} -> "
-                    f"{trash} failed"
-                )
-            if not fs.rename(HPath(tmp), HPath(live)):
-                raise RuntimeError(
-                    f"forget_from_minhash_index: rename {tmp} -> {live} "
-                    f"failed; previous ledger preserved at {trash}"
-                )
-            _hfs_delete(spark, trash)
-        landed = (
-            _without_tombstoned_ids(
-                spark.read.parquet(f"{path}/shingles"), merged,
-                invert=True,
-            )
-            .select("id").distinct().count()
-        )
+        .select("id").distinct().count()
+    )
     return {
         "requested": len(want),
         "new": len(new),

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..session import release_registry
+from .compaction import _hfs_delete, _swap_in
+from .dedup import _without_tombstoned_ids
 
 
 # ---------------------------------------------------------------------------
@@ -1260,7 +1262,8 @@ def embedding_gram_fast(
 # Persisted ANN index with incremental ingest + screen-delta (r13).
 #
 # The embedding counterpart of the persisted MinHash index
-# (dedup.py:save_minhash_index / minhash_incremental_vs_index) — the
+# (dedup.py:save_minhash_index_bucketed /
+# minhash_incremental_vs_bucketed_index) — the
 # reference's incremental `sync` concept (cmd/dbmask/main.go:230-315)
 # lifted to the vector domain: land a corpus' IVF state ONCE, then each
 # day's delta screens against it and appends back, without ever
@@ -1320,8 +1323,6 @@ def save_ann_index(
     it would silently re-meaning every landed code). ADC queries then
     read m bytes + a norm per vector instead of the full float array
     (:func:`ann_ivf_pq_topk_vs_index`)."""
-    from .dedup import _hfs_delete
-
     spark = emb.sparkSession
     if batch is None:
         if append:
@@ -1513,7 +1514,9 @@ def ann_screen_vs_index(
         landed = landed.filter(F.col("batch") != exclude_batch)
     # forgotten subjects never match (logical erasure — a pushed scan
     # filter / broadcast anti-join, the index still never shuffles)
-    landed = _ann_without_tombstones(landed, spark, path)
+    landed = _without_tombstoned_ids(
+        landed, ann_tombstone_ids(spark, path), col="nid"
+    )
     scored_arr = _centroid_scored_array(cent_rows, "qv", "_qnrm")
     nprobe = min(int(nprobe), len(cent_rows))
     probe = f"slice(reverse(array_sort({scored_arr})), 1, {nprobe})"
@@ -1649,13 +1652,6 @@ def compact_ann_index(spark, path: str, keep_batches: tuple = ()) -> dict:
     is non-atomic, so (like the MinHash compaction) run this where
     foreachBatch runs — between micro-batches; moved-aside data lives
     under ``<path>/_compact_trash`` until the swap completes."""
-    from .dedup import _hfs_delete
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(f"{path}/vectors")
-    fs = root.getFileSystem(hconf)
     batches = ann_index_batches(spark, path)
     fold = [b for b in batches if b not in tuple(keep_batches)]
     keep = [b for b in batches if b in tuple(keep_batches)]
@@ -1695,7 +1691,7 @@ def compact_ann_index(spark, path: str, keep_batches: tuple = ()) -> dict:
     removed = 0
     rows_keep = rows_in
     if ts:
-        src = _ann_without_tombstones(src, tombstone_ids=ts)
+        src = _without_tombstoned_ids(src, ts, col="nid")
         rows_keep = src.count()
         removed = rows_in - rows_keep
     tmp = f"{path}/_compact_tmp/batch={dest}"
@@ -1714,35 +1710,13 @@ def compact_ann_index(spark, path: str, keep_batches: tuple = ()) -> dict:
             f"{removed} tombstoned, {rows_out} out (expected "
             f"{rows_keep}) — staged output left at {tmp}, index untouched"
         )
-    trash = HPath(f"{path}/_compact_trash")
-    _hfs_delete(spark, f"{path}/_compact_trash")
-    fs.mkdirs(trash)
-
-    def _rename(src: str, dst: str) -> None:
-        # the Hadoop FS rename contract REPORTS failure as a boolean,
-        # it does not throw — an unchecked rename here would silently
-        # drop index partitions
-        if not fs.rename(HPath(src), HPath(dst)):
-            raise RuntimeError(
-                f"ann index compaction: rename {src} -> {dst} failed; "
-                f"moved-aside partitions remain under {path}/_compact_trash"
-            )
-
-    for b in fold:
-        _rename(
-            f"{path}/vectors/batch={b}", f"{path}/_compact_trash/batch={b}"
-        )
-    dest_dir = f"{path}/vectors/batch={dest}"
-    if fs.exists(HPath(dest_dir)):
-        # rename into an EXISTING directory nests the source inside it
-        # instead of failing — refuse before any data can be mislaid
-        raise RuntimeError(
-            f"ann index compaction: destination {dest_dir} already "
-            f"exists; moved-aside partitions remain under "
-            f"{path}/_compact_trash"
-        )
-    _rename(tmp, dest_dir)
-    _hfs_delete(spark, f"{path}/_compact_trash")
+    # the folded partitions move aside; kept labels never collide with
+    # dest (chosen above), and the swap refuses one that does
+    _swap_in(
+        spark, tmp, f"{path}/vectors/batch={dest}",
+        trash=f"{path}/_compact_trash",
+        aside=[f"{path}/vectors/batch={b}" for b in fold],
+    )
     _hfs_delete(spark, f"{path}/_compact_tmp")
     if removed and not keep:
         # every landed row passed the tombstone filter, so every
@@ -1762,12 +1736,6 @@ def compact_ann_index(spark, path: str, keep_batches: tuple = ()) -> dict:
 # ---------------------------------------------------------------------------
 # right-to-erasure: tombstones on the persisted ANN index
 # ---------------------------------------------------------------------------
-
-# above this many tombstoned ids the serve-side exclusion switches from a
-# pushed Not(In(nid, ...)) scan filter to a broadcast anti-join — a literal
-# list this long would bloat every query plan, while the anti-join's only
-# Exchange carries the (small) tombstone side
-_TOMBSTONE_ISIN_CAP = 4096
 
 
 def ann_tombstone_ids(spark, path: str) -> "list[int]":
@@ -1818,8 +1786,6 @@ def forget_from_ann_index(spark, path: str, ids) -> dict:
         raise FileNotFoundError(
             f"no ANN index at {path} — nothing to forget from"
         )
-    from .dedup import _hfs_delete
-
     existing = set(ann_tombstone_ids(spark, path))
     new = [i for i in want if i not in existing]
     merged = sorted(existing.union(want))
@@ -1835,26 +1801,16 @@ def forget_from_ann_index(spark, path: str, ids) -> dict:
                 f"tombstone write verification failed: {len(merged)} "
                 f"in, {n_out} out — staged at {tmp}, ledger untouched"
             )
-        # swap order keeps a readable ledger at every crash point:
-        # old -> trash (old still complete), tmp -> live, drop trash
-        trash = f"{path}/_tombstones_trash"
-        _hfs_delete(spark, trash)
+        # old ledger aside, staged one in, then the old one dropped: a
+        # readable ledger survives every crash point
         live = f"{path}/tombstones"
-        if fs.exists(HPath(live)) and not fs.rename(
-            HPath(live), HPath(trash)
-        ):
-            raise RuntimeError(
-                f"forget_from_ann_index: rename {live} -> {trash} failed"
-            )
-        if not fs.rename(HPath(tmp), HPath(live)):
-            raise RuntimeError(
-                f"forget_from_ann_index: rename {tmp} -> {live} failed; "
-                f"previous ledger preserved at {trash}"
-            )
-        _hfs_delete(spark, trash)
+        _swap_in(
+            spark, tmp, live, trash=f"{path}/_tombstones_trash",
+            aside=[live],
+        )
     landed = (
-        _ann_without_tombstones(
-            spark.read.parquet(f"{path}/vectors"), tombstone_ids=merged,
+        _without_tombstoned_ids(
+            spark.read.parquet(f"{path}/vectors"), merged, col="nid",
             invert=True,
         ).count()
     )
@@ -1864,35 +1820,6 @@ def forget_from_ann_index(spark, path: str, ids) -> dict:
         "already": len(want) - len(new),
         "landed": landed,
     }
-
-
-def _ann_without_tombstones(
-    landed: DataFrame,
-    spark=None,
-    path: str | None = None,
-    tombstone_ids: "list[int] | None" = None,
-    invert: bool = False,
-) -> DataFrame:
-    """Exclude tombstoned ``nid`` rows from a landed-index relation
-    without ever shuffling it: small ledgers become a pushed
-    ``Not(In(nid, ...))`` parquet scan filter (PushedFilters — the
-    zero-index-side-Exchange plan gates hold unchanged), large ones a
-    broadcast LEFT ANTI join whose only Exchange carries the tombstones.
-    ``invert=True`` returns the HIDDEN rows instead (reporting)."""
-    ts = (
-        tombstone_ids
-        if tombstone_ids is not None
-        else ann_tombstone_ids(spark, path)
-    )
-    if not ts:
-        return landed.filter(F.lit(False)) if invert else landed
-    if len(ts) <= _TOMBSTONE_ISIN_CAP:
-        cond = F.col("nid").isin([int(i) for i in ts])
-        return landed.filter(cond if invert else ~cond)
-    sess = landed.sparkSession
-    tsdf = sess.createDataFrame([(int(i),) for i in ts], "nid bigint")
-    how = "left_semi" if invert else "left_anti"
-    return landed.join(F.broadcast(tsdf), "nid", how)
 
 
 def mutual_top1_pairs(
@@ -2771,7 +2698,9 @@ def ann_ivf_pq_topk_vs_index(
     # forgotten subjects never serve (logical erasure; the rescore
     # twin's refine stage re-reads only THIS stage's survivors, so one
     # exclusion covers both)
-    landed = _ann_without_tombstones(landed, spark, path)
+    landed = _without_tombstoned_ids(
+        landed, ann_tombstone_ids(spark, path), col="nid"
+    )
     q_rows = [
         (int(r[id_col]), [float(v) for v in r[vec_col]])
         for r in new_emb.select(id_col, vec_col).collect()

@@ -34,13 +34,6 @@ def tokens_column(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
-def token_count(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return df.select(
-        id_col,
-        F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("long").alias("n_tokens"),
-    )
-
-
 def quality_score_column(text: Column) -> Column:
     """The combined quality score as a single Column (exact integer
     intermediates, final double arithmetic — bit-identical cross-engine).

@@ -31,7 +31,7 @@ from .. import dump as dump_mod
 from .topo import sort_tables_by_dependency
 
 
-# Wide-table codegen window, measured (tools/bench_wide.py, 100k rows,
+# Wide-table codegen window, measured (SCALING_wide_r11.json, 100k rows,
 # all-faker configs, local[32]): Spark silently drops whole-stage
 # codegen for plans past spark.sql.codegen.maxFields (default 100), so a
 # 150-column masked projection runs interpreted — raising the limit won
@@ -467,9 +467,9 @@ class Engine:
         simple-stream-reader wrapper prefetches a single
         ``maxRowsPerBatch`` batch and plans availableNow against exactly
         that, so a 6M-row backlog would drain 10k rows per run (found by
-        tools/bench_stream_tail.py, r9 — the original e2e table was
-        smaller than one batch and never hit it). The fix is the loop
-        the checkpoint already makes safe: rerun availableNow until a
+        the r9 stream-tail drain probe, SCALING_r9.json — the original
+        e2e table was smaller than one batch and never hit it). The fix is
+        the loop the checkpoint already makes safe: rerun availableNow until a
         run commits zero input rows; each run resumes after the last
         committed rowid, so the loop is exactly-once end to end.
         Returns the last (terminated) StreamingQuery; ``once=False``

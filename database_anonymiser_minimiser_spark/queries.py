@@ -113,10 +113,6 @@ def _ts(col: str, alias: str | None = None) -> F.Column:
     return F.date_format(F.col(col), "yyyy-MM-dd HH:mm:ss").alias(alias or col)
 
 
-def _duck_ts(col: str, alias: str | None = None) -> str:
-    return f"strftime(\"{col}\", '%Y-%m-%d %H:%M:%S') AS {alias or col}"
-
-
 # ===========================================================================
 # Core parity: scans / projections / minimisation (SURVEY §2.1, §2.2, §2.6)
 # ===========================================================================
@@ -7362,7 +7358,7 @@ def q_salted_agg_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This registration gives the mitigation itself an oracle-graded
     gate on real corpora (its unit tests use a 1000-row toy; the
-    r10 skewed-corpus probe, tools/bench_skew.py, exercises it on a
+    r10 skewed-corpus probe, SCALING_skew_r10.json, exercises it on a
     zipfian sf1 where the hottest user owns ~25% of rows). The sum
     runs in DECIMAL so the two-phase split is exact and
     order-independent — the salted result is bitwise equal to a plain

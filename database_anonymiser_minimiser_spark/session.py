@@ -112,7 +112,7 @@ def _parse_mem_mb(mem: str) -> int:
 def _local_lowmem_conf(mem: str) -> dict[str, str]:
     """Local single-JVM twin of ``deployment_profile``'s spill rule.
 
-    r11 (tools/bench_lowmem.py, PERFORMANCE.md §memory envelope): the
+    r11 (SCALING_lowmem_r11.json, PERFORMANCE.md §memory envelope): the
     merge of a heavy spill pass opens a ReadAheadInputStream PER SPILL
     FILE — multi-MB non-spillable heap buffers that OOM'd
     HashAggregate.finishAggregate at 1 GB AND 2 GB total heap, while
@@ -609,7 +609,7 @@ def deployment_profile(
     target_bytes = target_partition_mb * 1024 * 1024
     shuffle_parts = max(2 * total_cores, total_input_bytes // target_bytes)
     overhead_mb = max(2048, int(executor_mem_gb * 1024 * 0.25))
-    # Spill-merge buffer wall (r11, tools/bench_lowmem.py): merging a
+    # Spill-merge buffer wall (r11, SCALING_lowmem_r11.json): merging a
     # heavy spill pass opens a ReadAheadInputStream PER SPILL FILE, each
     # a multi-MB non-spillable heap buffer — at sf1 the degenerate
     # ngram regime OOM'd a 1 GB JVM in HashAggregate.finishAggregate on

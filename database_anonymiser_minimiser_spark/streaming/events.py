@@ -650,7 +650,6 @@ def run_streaming_neardup_ingest(
     new_spool_dir: str,
     index_path: str,
     threshold: float = 0.5,
-    layout: str = "bucketed",
     table_prefix: str = "neardup_index",
     n_buckets: int = 16,
     compact_every: int | None = None,
@@ -660,11 +659,12 @@ def run_streaming_neardup_ingest(
 ) -> "list[tuple[int, int, int, float]]":
     """STREAMING near-dup ingest screen: each arriving micro-batch of
     documents is checked against the persisted MinHash index
-    (operators/dedup.py: save_minhash_index / minhash_incremental_vs_index)
-    and then APPENDED to it — so later batches screen against everything
-    that arrived before them, which is the arrival-order semantics a real
-    ingest pipeline needs (the batch query `dedup_minhash_incremental`
-    screens one delta against a fixed corpus; this is the continuous
+    (operators/dedup.py: save_minhash_index_bucketed /
+    minhash_incremental_vs_bucketed_index) and then APPENDED to it — so
+    later batches screen against everything that arrived before them,
+    which is the arrival-order semantics a real ingest pipeline needs
+    (the batch query `dedup_minhash_incremental` screens one delta
+    against a fixed corpus; this is the continuous
     version of the same operator, stateful through the on-disk index
     rather than the state store — index size is corpus-bound, executor
     state is zero).
@@ -678,30 +678,26 @@ def run_streaming_neardup_ingest(
     never races with the next batch's screen.
 
     Replay-idempotent: foreachBatch re-runs a failed micro-batch with
-    the SAME epoch_id, so (a) the index append is a targeted overwrite
-    of the epoch's own ``batch=e<epoch>`` partition in the partitioned
-    layout, and in the bucketed layout an append that already landed is
-    detected from the catalog (``bucketed_index_has_batch`` — saveAsTable
-    commits atomically, a visible partition means the whole append
-    landed) and skipped, (b) the screen excludes that partition (present
-    only on a retry whose append already landed — a batch must not
-    screen against itself), and (c) any flags the failed attempt emitted
-    for the epoch are dropped before the deterministic re-emit.
+    the SAME epoch_id, so (a) an epoch's ``batch=e<epoch>`` append that
+    already landed is detected from the catalog
+    (``bucketed_index_has_batch`` — saveAsTable commits atomically, a
+    visible partition means the whole append landed) and skipped, (b)
+    the screen excludes that partition (present only on a retry whose
+    append already landed — a batch must not screen against itself),
+    and (c) any flags the failed attempt emitted for the epoch are
+    dropped before the deterministic re-emit.
 
-    ``layout`` selects the index representation:
+    The index lives at ``index_path`` as batch-partitioned BUCKETED
+    tables (``<table_prefix>_bands`` / ``_shingles`` in
+    ``<index_path>/bands`` and ``/shingles``, with the manifest at
+    ``<index_path>/_index_manifest.json``), so the per-micro-batch
+    screen reads the corpus-sized landed side as co-located buckets
+    with NO index-side Exchange — only the day's batch shuffles
+    (plan-gated in tests/test_streaming.py and tests/test_dedup.py).
+    ``forget --index minhash`` and ``compact --index minhash`` take the
+    same path.
 
-    - ``"bucketed"`` (the default — the 100 TB shape): the index lives
-      as batch-partitioned BUCKETED tables (``<table_prefix>_bands`` /
-      ``_shingles`` under ``<index_path>/bucketed``), so the
-      per-micro-batch screen reads the corpus-sized landed side as
-      co-located buckets with NO index-side Exchange — only the day's
-      batch shuffles (plan-gated in tests/test_streaming.py and
-      tests/test_dedup.py).
-    - ``"partitioned"``: the plain batch-partitioned parquet index
-      (save_minhash_index) — no catalog/warehouse requirement, the
-      screen shuffles the index side per micro-batch.
-
-    ``compact_every`` (bucketed layout only): when the index holds more
+    ``compact_every``: when the index holds more
     than this many batch partitions, the sink compacts them after the
     epoch's append (`compact_minhash_index_bucketed`), keeping the
     current epoch's partition separate so the replay contract above
@@ -733,37 +729,22 @@ def run_streaming_neardup_ingest(
         bucketed_index_has_batch,
         compact_minhash_index_bucketed,
         minhash_incremental_vs_bucketed_index,
-        minhash_incremental_vs_index,
         register_minhash_index_bucketed,
-        save_minhash_index,
         save_minhash_index_bucketed,
     )
 
-    if layout not in ("bucketed", "partitioned"):
-        raise ValueError(
-            f"layout must be 'bucketed' or 'partitioned', got {layout!r}"
-        )
     if resume and checkpoint is None:
         raise ValueError("resume=True requires a checkpoint directory")
-    bucketed = layout == "bucketed"
-    if bucketed:
-        if resume:
-            # restart: catalog entries may be gone; the data is not
-            register_minhash_index_bucketed(
-                spark, table_prefix, f"{index_path}/bucketed"
-            )
-        else:
-            save_minhash_index_bucketed(
-                spark.read.parquet(landed_path),
-                table_prefix,
-                n_buckets=n_buckets,
-                path=f"{index_path}/bucketed",
-                batch="seed",
-                dedup_exact=dedup_seed,
-            )
-    elif not resume:
-        save_minhash_index(
-            spark.read.parquet(landed_path), index_path,
+    if resume:
+        # restart: catalog entries may be gone; the data is not
+        register_minhash_index_bucketed(spark, table_prefix, index_path)
+    else:
+        save_minhash_index_bucketed(
+            spark.read.parquet(landed_path),
+            table_prefix,
+            n_buckets=n_buckets,
+            path=index_path,
+            batch="seed",
             dedup_exact=dedup_seed,
         )
     schema = spark.read.parquet(new_spool_dir).schema
@@ -779,16 +760,9 @@ def run_streaming_neardup_ingest(
             return
         label = f"e{int(epoch_id)}"
         flagged[:] = [t for t in flagged if t[0] != int(epoch_id)]
-        if bucketed:
-            res = minhash_incremental_vs_bucketed_index(
-                batch_df, table_prefix, threshold=threshold,
-                exclude_batch=label,
-            )
-        else:
-            res = minhash_incremental_vs_index(
-                batch_df, index_path, threshold=threshold,
-                exclude_batch=label,
-            )
+        res = minhash_incremental_vs_bucketed_index(
+            batch_df, table_prefix, threshold=threshold, exclude_batch=label
+        )
         try:
             for r in res.collect():
                 flagged.append(
@@ -799,26 +773,20 @@ def run_streaming_neardup_ingest(
         # admit the whole batch (audit semantics: flags recorded, corpus
         # keeps everything); an enforcing pipeline would append only the
         # unflagged survivors here
-        if bucketed:
-            if not bucketed_index_has_batch(spark, table_prefix, label):
-                save_minhash_index_bucketed(
-                    batch_df, table_prefix, n_buckets=n_buckets,
-                    path=f"{index_path}/bucketed", append=True, batch=label,
+        if not bucketed_index_has_batch(spark, table_prefix, label):
+            save_minhash_index_bucketed(
+                batch_df, table_prefix, n_buckets=n_buckets,
+                path=index_path, append=True, batch=label,
+            )
+        if compact_every is not None:
+            n_parts = len(
+                spark.sql(f"SHOW PARTITIONS {table_prefix}_bands").collect()
+            )
+            if n_parts > compact_every:
+                compact_minhash_index_bucketed(
+                    spark, table_prefix, n_buckets=n_buckets,
+                    path=index_path, keep_batches=(label,),
                 )
-            if compact_every is not None:
-                n_parts = len(
-                    spark.sql(
-                        f"SHOW PARTITIONS {table_prefix}_bands"
-                    ).collect()
-                )
-                if n_parts > compact_every:
-                    compact_minhash_index_bucketed(
-                        spark, table_prefix, n_buckets=n_buckets,
-                        path=f"{index_path}/bucketed",
-                        keep_batches=(label,),
-                    )
-        else:
-            save_minhash_index(batch_df, index_path, append=True, batch=label)
 
     writer = stream.writeStream.foreachBatch(sink).trigger(availableNow=True)
     if checkpoint is not None:

@@ -70,17 +70,62 @@ def test_compact_cli(spark, tmp_path, capsys):
 
 
 def test_compact_cli_in_place(spark, tmp_path, capsys):
-    """Without --out the verb delegates to the in-place hive-aware
-    crash-safe form (dump.compact_parquet): same path, fewer files,
-    rows preserved."""
+    """Without --out the verb compacts in place (staged sibling
+    directory, checked swap): same path, fewer files, rows verified."""
     from database_anonymiser_minimiser_spark.cli import main
 
     frag = str(tmp_path / "inplace")
     spark.range(4_000).repartition(16).write.parquet(frag)
     assert main(["compact", "--path", frag]) == 0
     printed = capsys.readouterr().out
-    assert "in place: 16 -> 1 file(s)" in printed
+    assert "in place: 16 -> 1 file(s), 4000 row(s) verified" in printed
     assert spark.read.parquet(frag).count() == 4_000
+
+
+def _partitioned(spark, path):
+    spark.range(3_000).selectExpr(
+        "id", "CAST(id % 5 AS STRING) AS v", "CAST(id % 3 AS INT) AS part"
+    ).repartition(12).write.partitionBy("part").parquet(path)
+
+
+def test_compact_out_keeps_hive_partitions(spark, tmp_path):
+    """With --out, a dataset partitioned by ``part`` keeps its part=
+    directories, its schema and its row count."""
+    import os
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    _partitioned(spark, src)
+    stats = compact_dataset(spark, src, out)
+    assert sorted(d for d in os.listdir(out) if "=" in d) == [
+        "part=0", "part=1", "part=2"
+    ]
+    before, after = spark.read.parquet(src), spark.read.parquet(out)
+    assert after.schema == before.schema
+    assert stats["rows"] == after.count() == 3_000
+    assert stats["files_after"] == 3  # one file per partition directory
+    assert sorted(map(tuple, after.collect())) == sorted(
+        map(tuple, before.collect())
+    )
+
+
+def test_compact_in_place_file_uri_keeps_partitions(spark, tmp_path):
+    """Without --out, a file:// URI of a hive-partitioned dataset is
+    compacted in place: partitions kept, fewer files, rows verified, no
+    staging directory left behind."""
+    import os
+
+    path = str(tmp_path / "lake")
+    _partitioned(spark, path)
+    want = sorted(map(tuple, spark.read.parquet(path).collect()))
+    n_before, _ = dataset_file_stats(spark, path)
+    stats = compact_dataset(spark, "file://" + path)
+    assert stats["files_before"] == n_before > stats["files_after"] == 3
+    assert stats["rows"] == 3_000
+    assert sorted(d for d in os.listdir(path) if "=" in d) == [
+        "part=0", "part=1", "part=2"
+    ]
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
+    assert sorted(os.listdir(tmp_path)) == ["lake"]
 
 
 def test_cli_compact_index_minhash_e2e(spark, tmp_path, capsys):

@@ -351,103 +351,102 @@ def test_minhash_incremental_flags_only_new_vs_landed(spark):
     assert got2[7][0] == 2 and got2[7][1] == 1.0
 
 
-def test_minhash_index_lifecycle_matches_direct_operator(spark, tmp_path):
-    """The persisted-index ingest loop (r9): build the landed index once,
-    screen a batch against it (must equal the direct two-DataFrame
-    operator exactly), append the admitted batch, and verify the NEXT
-    batch sees the previously-admitted docs — the daily-ingest cycle the
-    incremental operator's docstring promises, as running code."""
-    idx = str(tmp_path / "mh_index")
-    landed = spark.createDataFrame(
-        [(100, BASE), (101, "unrelated landed content about engines")],
-        ["doc_id", "text"],
-    )
-    batch1 = spark.createDataFrame(
-        [(0, BASE.replace("jumps", "leaps")), (1, "fresh unseen words entirely")],
-        ["doc_id", "text"],
-    )
-    D.save_minhash_index(landed, idx)
-    via_index = sorted(
-        tuple(r)
-        for r in D.minhash_incremental_vs_index(batch1, idx, threshold=0.4).collect()
-    )
-    direct = sorted(
-        tuple(r)
-        for r in D.minhash_lsh_incremental(batch1, landed, threshold=0.4).collect()
-    )
-    assert via_index == direct and len(via_index) == 1  # doc 0 flagged
+def _seed_bucketed(spark, prefix, landed, path):
+    for t in (f"{prefix}_bands", f"{prefix}_shingles"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    D.save_minhash_index_bucketed(landed, prefix, n_buckets=4, path=path)
 
-    # admit batch1 (both docs) and screen a second batch: doc 7 must now
-    # match doc 1's text, which only exists in the APPENDED index rows
-    D.save_minhash_index(batch1, idx, append=True)
-    got2 = {
-        r["doc_id"]: r["best_jaccard"]
-        for r in D.minhash_incremental_vs_index(
-            spark.createDataFrame(
-                [(7, "fresh unseen words entirely")], ["doc_id", "text"]
-            ),
-            idx,
-            threshold=0.4,
-        ).collect()
+
+def _drop_bucketed(spark, prefix):
+    for t in (f"{prefix}_bands", f"{prefix}_shingles"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _screen_bucketed(new, prefix, **kw):
+    res = D.minhash_incremental_vs_bucketed_index(
+        new, prefix, threshold=0.4, **kw
+    )
+    got = {
+        r["doc_id"]: (r["n_dups"], r["best_jaccard"]) for r in res.collect()
     }
-    assert got2 == {7: 1.0}
+    res.unpersist()
+    return got
 
 
 def test_minhash_index_append_replay_is_idempotent(spark, tmp_path):
-    """ADVICE r9 (streaming/events.py): a retried micro-batch re-appends
-    its rows to the index, permanently inflating n_dups for all later
-    batches. The fix writes each append into its own batch=<label>
-    partition as a targeted overwrite — replaying the SAME label must
-    leave the index (and every later screen) unchanged."""
-    idx = str(tmp_path / "mh_idx")
-    landed = spark.createDataFrame([(100, BASE)], ["doc_id", "text"])
-    batch = spark.createDataFrame(
-        [(0, BASE.replace("jumps", "leaps"))], ["doc_id", "text"]
+    """ADVICE r9 (streaming/events.py): a retried micro-batch must not
+    re-append its rows to the index, or every later batch's n_dups is
+    inflated for good. Replayed for real: the last epoch's commit is
+    removed from the checkpoint, so the restarted screen re-runs that
+    epoch with the same id; its append is found already landed
+    (``bucketed_index_has_batch``) and skipped, its screen excludes its
+    own partition, and its flags come out as before."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_anonymiser_minimiser_spark.streaming.events import (
+        run_streaming_neardup_ingest,
     )
-    D.save_minhash_index(landed, idx)
-    D.save_minhash_index(batch, idx, append=True, batch="e0")
-    bands_once = spark.read.parquet(f"{idx}/bands").count()
-    # replay the same epoch (foreachBatch retry): same label, same rows
-    D.save_minhash_index(batch, idx, append=True, batch="e0")
-    assert spark.read.parquet(f"{idx}/bands").count() == bands_once
-    # a later batch near-dupping BOTH landed and e0 sees each ONCE
-    probe = spark.createDataFrame(
-        [(7, BASE.replace("jumps", "hops"))], ["doc_id", "text"]
-    )
-    got = {
-        r["doc_id"]: r["n_dups"]
-        for r in D.minhash_incremental_vs_index(
-            probe, idx, threshold=0.4
-        ).collect()
-    }
-    assert got == {7: 2}  # landed 100 + admitted 0, no replay inflation
+
+    def write(path, rows):
+        pq.write_table(
+            pa.table({"doc_id": [r[0] for r in rows],
+                      "text": [r[1] for r in rows]}), path)
+
+    landed = str(tmp_path / "landed.parquet")
+    write(landed, [(100, BASE)])
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    write(spool / "part0.parquet", [(0, BASE.replace("jumps", "leaps"))])
+    prefix, idx, chk = "t_mh_replay", str(tmp_path / "idx"), tmp_path / "chk"
+    _drop_bucketed(spark, prefix)
+    kw = dict(threshold=0.4, table_prefix=prefix, n_buckets=4,
+              checkpoint=str(chk))
+    try:
+        first = run_streaming_neardup_ingest(
+            spark, landed, str(spool), idx, **kw
+        )
+        assert [(e, d, n) for e, d, n, _j in first] == [(0, 0, 1)]
+        assert D.bucketed_index_has_batch(spark, prefix, "e0")
+        bands_once = spark.table(f"{prefix}_bands").count()
+        for name in ("0", ".0.crc"):  # epoch 0 never committed
+            (chk / "commits" / name).unlink(missing_ok=True)
+        replay = run_streaming_neardup_ingest(
+            spark, landed, str(spool), idx, resume=True, **kw
+        )
+        assert replay == first
+        assert spark.table(f"{prefix}_bands").count() == bands_once
+        # a later doc near-dupping BOTH landed 100 and admitted 0 sees
+        # each ONCE
+        probe = spark.createDataFrame(
+            [(7, BASE.replace("jumps", "hops"))], ["doc_id", "text"]
+        )
+        assert _screen_bucketed(probe, prefix)[7][0] == 2
+    finally:
+        _drop_bucketed(spark, prefix)
 
 
 def test_minhash_vs_index_exclude_batch_skips_own_partition(spark, tmp_path):
     """A retrying epoch whose append already landed must not screen
     against itself: exclude_batch drops exactly its own partition, so the
     retry's screen equals the original (pre-append) screen."""
-    idx = str(tmp_path / "mh_idx2")
+    prefix = "t_mh_excl"
     landed = spark.createDataFrame([(100, BASE)], ["doc_id", "text"])
     batch = spark.createDataFrame(
         [(0, BASE.replace("jumps", "leaps"))], ["doc_id", "text"]
     )
-    D.save_minhash_index(landed, idx)
-    before = sorted(
-        tuple(r)
-        for r in D.minhash_incremental_vs_index(
-            batch, idx, threshold=0.4
-        ).collect()
-    )
-    D.save_minhash_index(batch, idx, append=True, batch="e0")
-    # without the exclusion the batch would self-match at jaccard 1.0
-    retry = sorted(
-        tuple(r)
-        for r in D.minhash_incremental_vs_index(
-            batch, idx, threshold=0.4, exclude_batch="e0"
-        ).collect()
-    )
-    assert retry == before
+    path = str(tmp_path / "mh_idx2")
+    _seed_bucketed(spark, prefix, landed, path)
+    try:
+        before = _screen_bucketed(batch, prefix)
+        D.save_minhash_index_bucketed(
+            batch, prefix, n_buckets=4, path=path, append=True, batch="e0"
+        )
+        # without the exclusion the batch self-matches at jaccard 1.0
+        assert _screen_bucketed(batch, prefix)[0][1] == 1.0
+        assert _screen_bucketed(batch, prefix, exclude_batch="e0") == before
+    finally:
+        _drop_bucketed(spark, prefix)
 
 
 def test_minhash_incremental_recrawl_id_not_double_counted(spark, tmp_path):
@@ -471,22 +470,19 @@ def test_minhash_incremental_recrawl_id_not_double_counted(spark, tmp_path):
     assert n == 2  # landed 100 and 102, each counted ONCE
     assert 0.4 <= j < 1.0  # new-content vs landed-content, not new-vs-new
     # and the persisted-index path agrees
-    idx = str(tmp_path / "mh_idx3")
-    D.save_minhash_index(landed, idx)
-    via = {
-        r["doc_id"]: (r["n_dups"], r["best_jaccard"])
-        for r in D.minhash_incremental_vs_index(
-            batch, idx, threshold=0.4
-        ).collect()
-    }
-    assert via == got
+    prefix = "t_mh_recrawl"
+    _seed_bucketed(spark, prefix, landed, str(tmp_path / "mh_idx3"))
+    try:
+        assert _screen_bucketed(batch, prefix) == got
+    finally:
+        _drop_bucketed(spark, prefix)
 
 
 def test_minhash_bucketed_index_lifecycle_and_plan(spark, tmp_path):
     """r10 (r9 verdict item 4): the persisted MinHash index as BUCKETED
     tables — the daily screen must (a) produce results identical to the
-    parquet-path index and the direct operator, (b) read BOTH index
-    relations bucket-aware with ZERO Exchange on the index side (only
+    direct operator, (b) read BOTH index relations bucket-aware with
+    ZERO Exchange on the index side (only
     the day's batch shuffles — the corpus-sized landed side is never
     re-shuffled), and (c) keep screening correctly after a bucketed
     APPEND of an admitted batch."""
@@ -891,50 +887,47 @@ def test_dedup_exact_seed_preserves_verdicts_and_collapses_hot_bands(
     }
     assert kept[template] == 0 and kept[BASE] == 100 and len(kept) == 3
 
-    idx_plain = str(tmp_path / "idx_plain")
-    idx_dedup = str(tmp_path / "idx_dedup")
-    D.save_minhash_index(landed, idx_plain)
-    D.save_minhash_index(landed, idx_dedup, dedup_exact=True)
+    plain_prefix, dedup_prefix = "t_mh_seed_plain", "t_mh_seed_dedup"
+    _seed_bucketed(spark, plain_prefix, landed, str(tmp_path / "idx_plain"))
+    for t in (f"{dedup_prefix}_bands", f"{dedup_prefix}_shingles"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    D.save_minhash_index_bucketed(
+        landed, dedup_prefix, n_buckets=4, path=str(tmp_path / "idx_dedup"),
+        dedup_exact=True,
+    )
+    try:
+        plain = _screen_bucketed(batch, plain_prefix)
+        dedup = _screen_bucketed(batch, dedup_prefix)
+        # (a) verdict + best_jaccard parity
+        assert set(plain) == set(dedup) == {500, 501}
+        assert all(plain[d][1] == dedup[d][1] for d in plain)
+        # (b) copies vs contents
+        assert plain[500][0] == n_copies and dedup[500][0] == 1
+        assert plain[501] == dedup[501]
 
-    plain = {
-        r["doc_id"]: (r["n_dups"], r["best_jaccard"])
-        for r in D.minhash_incremental_vs_index(
-            batch, idx_plain, threshold=0.4
-        ).collect()
-    }
-    dedup = {
-        r["doc_id"]: (r["n_dups"], r["best_jaccard"])
-        for r in D.minhash_incremental_vs_index(
-            batch, idx_dedup, threshold=0.4
-        ).collect()
-    }
-    # (a) verdict + best_jaccard parity
-    assert set(plain) == set(dedup) == {500, 501}
-    assert all(plain[d][1] == dedup[d][1] for d in plain)
-    # (b) copies vs contents
-    assert plain[500][0] == n_copies and dedup[500][0] == 1
-    assert plain[501] == dedup[501]
+        # (c) hot bands gone: max band-bucket size in the landed relation
+        from pyspark.sql import functions as F
 
-    # (c) hot bands gone: max band-bucket size in the landed relation
-    from pyspark.sql import functions as F
+        def max_bucket(prefix):
+            return (
+                spark.table(f"{prefix}_bands")
+                .groupBy("band_id", "band_key")
+                .count()
+                .agg(F.max("count"))
+                .collect()[0][0]
+            )
 
-    def max_bucket(path):
-        return (
-            spark.read.parquet(f"{path}/bands")
-            .groupBy("band_id", "band_key")
-            .count()
-            .agg(F.max("count"))
-            .collect()[0][0]
-        )
-
-    assert max_bucket(idx_plain) >= n_copies
-    assert max_bucket(idx_dedup) == 1
+        assert max_bucket(plain_prefix) >= n_copies
+        assert max_bucket(dedup_prefix) == 1
+    finally:
+        _drop_bucketed(spark, plain_prefix)
+        _drop_bucketed(spark, dedup_prefix)
 
 
 def test_dedup_exact_seed_bucketed_layout(spark, tmp_path):
-    """The bucketed (streaming-default) layout honours dedup_exact the
-    same way: canonical rows only in the shingle table, verdict parity
-    against the plain-layout deduped index."""
+    """The bucketed index honours dedup_exact at the table level:
+    canonical rows only in the shingle table, verdict parity with the
+    direct operator over the exact-deduplicated corpus."""
     import uuid
 
     template = (
@@ -962,12 +955,10 @@ def test_dedup_exact_seed_bucketed_layout(spark, tmp_path):
                 batch, prefix, threshold=0.4
             ).collect()
         }
-        idx_plain = str(tmp_path / "plain")
-        D.save_minhash_index(landed, idx_plain, dedup_exact=True)
         want = {
             r["doc_id"]: (r["n_dups"], r["best_jaccard"])
-            for r in D.minhash_incremental_vs_index(
-                batch, idx_plain, threshold=0.4
+            for r in D.minhash_lsh_incremental(
+                batch, D.dedup_exact_for_index(landed), threshold=0.4
             ).collect()
         }
         assert got == want == {500: (1, want[500][1])}

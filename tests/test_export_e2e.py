@@ -325,9 +325,11 @@ def test_export_parquet_max_records_per_file(spark, sf_dir, tmp_path):
 
 
 def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path):
-    """Small-file compaction: many part files -> ~target-sized few, same
-    rows, shuffle-free (coalesce)."""
-    from database_anonymiser_minimiser_spark.dump import compact_parquet
+    """Small-file compaction in place: many part files -> ~target-sized
+    few, same rows."""
+    from database_anonymiser_minimiser_spark.operators.compaction import (
+        compact_dataset,
+    )
 
     src = spark.read.parquet(f"{sf_dir}/orders.parquet")
     out = str(tmp_path / "orders_small_files")
@@ -338,7 +340,7 @@ def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path):
     assert before >= 16
     n_rows = src.count()
 
-    after = compact_parquet(spark, out, target_file_bytes=512 * 1024 * 1024)
+    after = compact_dataset(spark, out, target_mb=512)["files_after"]
     assert after < before
     assert spark.read.parquet(out).count() == n_rows
 
@@ -349,7 +351,9 @@ def test_compact_parquet_preserves_hive_partitions(spark, sf_dir, tmp_path):
     fold partition columns into the data files."""
     import os
 
-    from database_anonymiser_minimiser_spark.dump import compact_parquet
+    from database_anonymiser_minimiser_spark.operators.compaction import (
+        compact_dataset,
+    )
 
     src = spark.read.parquet(f"{sf_dir}/orders.parquet")
     out = str(tmp_path / "orders_parts")
@@ -360,7 +364,7 @@ def test_compact_parquet_preserves_hive_partitions(spark, sf_dir, tmp_path):
     )
     assert statuses
 
-    compact_parquet(spark, out, target_file_bytes=512 * 1024 * 1024)
+    compact_dataset(spark, out, target_mb=512)
 
     after_dirs = sorted(
         d for d in os.listdir(out) if d.startswith("o_orderstatus=")
@@ -883,7 +887,8 @@ configuration:
 
 
 def test_stream_once_drains_backlog_larger_than_one_batch(spark, tmp_path):
-    """r9 regression (found by tools/bench_stream_tail.py): Spark's
+    """r9 regression (found by the stream-tail drain probe in
+    SCALING_r9.json): Spark's
     simple-stream-reader wrapper plans availableNow against ONE
     prefetched maxRowsPerBatch batch, so a single run of the old code
     drained only the first batch of a large backlog. `once=True` must

@@ -162,10 +162,8 @@ def test_ann_forget_plan_and_large_ledger(spark, sf_dir, tmp_path):
     assert "Not(In(nid" in squashed or "NOT(In(nid" in squashed, plan
     small = sorted(tuple(r) for r in lazy.collect())
 
-    import database_anonymiser_minimiser_spark.operators.similarity as sim
-
-    prev = sim._TOMBSTONE_ISIN_CAP
-    sim._TOMBSTONE_ISIN_CAP = 1
+    prev = D._TOMBSTONE_ISIN_CAP
+    D._TOMBSTONE_ISIN_CAP = 1
     try:
         big = sorted(
             tuple(r)
@@ -174,7 +172,7 @@ def test_ann_forget_plan_and_large_ledger(spark, sf_dir, tmp_path):
             ).collect()
         )
     finally:
-        sim._TOMBSTONE_ISIN_CAP = prev
+        D._TOMBSTONE_ISIN_CAP = prev
     assert small == big
 
 
@@ -200,49 +198,12 @@ def test_ann_forget_refusals(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_minhash_plain_forget(spark, tmp_path):
-    """Plain (path-rooted) index: a forgotten landed doc stops matching
-    the incremental screen; others unaffected; idempotent."""
-    path = str(tmp_path / "mh")
-    landed = spark.createDataFrame(
-        [(100, BASE), (101, "unrelated landed content about engines")],
-        ["doc_id", "text"],
-    )
-    D.save_minhash_index(landed, path, mode="md5")
-    probe = spark.createDataFrame(
-        [(0, BASE.replace("jumps", "leaps"))], ["doc_id", "text"]
-    )
-
-    def screen():
-        res = D.minhash_incremental_vs_index(
-            probe, path, threshold=0.4, mode="md5"
-        )
-        got = sorted(tuple(r) for r in res.collect())
-        res.unpersist()
-        return got
-
-    got = screen()
-    assert len(got) == 1 and got[0][:2] == (0, 1) and got[0][2] > 0.4
-    stats = D.forget_from_minhash_index(spark, [100], path=path)
-    assert stats == {
-        "requested": 1, "new": 1, "already": 0, "landed_docs": 1,
-    }
-    assert screen() == []
-    assert D.forget_from_minhash_index(spark, [100], path=path)[
-        "new"
-    ] == 0
-    assert D.minhash_tombstone_ids(spark, path=path) == [100]
-    # fresh re-seed clears the ledger
-    D.save_minhash_index(landed, path, mode="md5")
-    assert D.minhash_tombstone_ids(spark, path=path) == []
-    assert screen() != []
-
-
 def test_minhash_bucketed_forget_compact_restart(spark, tmp_path):
     """Bucketed index: forget hides immediately with the bucketed scans
-    un-shuffled; compaction removes band+shingle rows physically and
-    closes the ledger (full fold) or keeps it (kept epoch); the ledger
-    survives a catalog rebuild from the manifest (driver restart)."""
+    un-shuffled and is idempotent; compaction removes band+shingle rows
+    physically and closes the ledger (full fold) or keeps it (kept
+    epoch); the ledger survives a catalog rebuild from the manifest
+    (driver restart); a fresh re-seed clears it."""
     prefix = "t_forget_mhb"
     for t in (
         f"{prefix}_bands", f"{prefix}_shingles", f"{prefix}_tombstones"
@@ -283,6 +244,13 @@ def test_minhash_bucketed_forget_compact_restart(spark, tmp_path):
     assert stats["new"] == 1 and stats["landed_docs"] == 1
     hidden = screen().get(0, 0)
     assert hidden == n0 - 1  # exactly doc 100 vanished
+    # forgetting again changes nothing
+    again = D.forget_from_minhash_index(
+        spark, [100], path=wh, table_prefix=prefix
+    )
+    assert again["new"] == 0 and again["already"] == 1
+    assert D.minhash_tombstone_ids(spark, table_prefix=prefix) == [100]
+    assert screen().get(0, 0) == hidden
 
     # restart: drop the catalog, rebuild from the manifest under a NEW
     # prefix — the tombstone table must come back with it
@@ -313,6 +281,13 @@ def test_minhash_bucketed_forget_compact_restart(spark, tmp_path):
         .filter(F.col("id") == 100).count() == 0
     )
     assert screen(prefix2).get(0, 0) == hidden
+    # a fresh re-seed is a new corpus: its ledger starts empty
+    D.forget_from_minhash_index(spark, [101], path=wh, table_prefix=prefix2)
+    D.save_minhash_index_bucketed(
+        landed, prefix2, n_buckets=4, mode="md5", path=wh, batch="seed"
+    )
+    assert D.minhash_tombstone_ids(spark, table_prefix=prefix2) == []
+    assert screen(prefix2) == {0: 1}  # doc 100 matches again
     for t in (
         f"{prefix2}_bands", f"{prefix2}_shingles", f"{prefix2}_tombstones"
     ):
@@ -412,6 +387,57 @@ def test_cli_forget_e2e(spark, sf_dir, tmp_path, capsys):
     )
     _, err = capsys.readouterr()
     assert rc == 2 and "no MinHash index" in err
+
+
+def test_cli_screen_forget_compact_share_one_index_path(
+    spark, tmp_path, capsys
+):
+    """`screen --index D`, then `forget --index minhash --path D`, then
+    `compact --index minhash --path D`: the three verbs take the same
+    path, and the forgotten landed doc leaves the index files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_anonymiser_minimiser_spark import cli
+
+    def write(path, rows):
+        pq.write_table(
+            pa.table({"doc_id": [r[0] for r in rows],
+                      "text": [r[1] for r in rows]}), path)
+
+    tables = [
+        f"{p}_{leaf}"
+        for p in ("neardup_index", "dbmask_maint")
+        for leaf in ("bands", "shingles", "tombstones")
+    ]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    landed = str(tmp_path / "landed.parquet")
+    write(landed, [(100, BASE), (101, "other landed content")])
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    write(spool / "part0.parquet", [(0, BASE.replace("jumps", "leaps"))])
+    idx = str(tmp_path / "idx")
+    try:
+        assert cli.main(
+            ["screen", "--landed", landed, "--spool", str(spool),
+             "--index", idx, "--threshold", "0.4"]
+        ) == 0
+        assert capsys.readouterr().out.startswith("0\t0\t1\t")
+        assert cli.main(
+            ["forget", "--index", "minhash", "--path", idx, "--ids", "100"]
+        ) == 0
+        assert "1 landed doc(s) hidden" in capsys.readouterr().out
+        assert cli.main(
+            ["compact", "--index", "minhash", "--path", idx]
+        ) == 0
+        assert "2 -> 1 batch partition(s)" in capsys.readouterr().out
+        assert D.minhash_tombstone_ids(spark, "dbmask_maint") == []
+        ids = {r["id"] for r in spark.table("dbmask_maint_shingles").collect()}
+        assert ids == {0, 101}
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 @pytest.mark.slow  # r15 full-tier (scale/fuzz/e2e twin; see conftest)

@@ -107,7 +107,7 @@ def test_get_spark_reuses_session_from_other_thread(spark):
 def test_profile_disables_spill_readahead_below_1g_per_task():
     """r11 memory-envelope finding: spill-merge ReadAheadInputStream
     buffers are non-spillable heap and OOM'd a small-heap JVM in the
-    heavy-spill regime (tools/bench_lowmem.py, sf1); below 1 GB/task the
+    heavy-spill regime (SCALING_lowmem_r11.json, sf1); below 1 GB/task the
     profile turns read-ahead off, above it the default stays."""
     from database_anonymiser_minimiser_spark.session import deployment_profile
 

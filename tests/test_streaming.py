@@ -566,12 +566,12 @@ def test_stream_join_bucket_is_floor_based_for_negative_timestamps(spark):
 
 
 @pytest.mark.slow  # r15 full-tier (scale/fuzz/e2e twin; see conftest)
-def test_streaming_neardup_ingest_layouts_agree_and_replay_idempotent(
+def test_streaming_neardup_ingest_matches_arrival_order_and_replay_idempotent(
     spark, tmp_path
 ):
-    """r11 (r10 verdict item 4): the ingest screen's DEFAULT path is the
-    bucketed index; it must (a) produce exactly the flags the plain
-    partitioned-parquet layout produces, (b) skip a replayed epoch's
+    """r11 (r10 verdict item 4): the ingest screen over the bucketed
+    index must (a) produce exactly the flags of the direct operator run
+    batch by batch in arrival order, (b) skip a replayed epoch's
     append (catalog-detected) so duplicate band/shingle rows can never
     inflate later screens, and (c) keep the zero-index-side-Exchange
     property for the per-micro-batch screen INCLUDING the retry shape
@@ -612,13 +612,21 @@ def test_streaming_neardup_ingest_layouts_agree_and_replay_idempotent(
     prefix = "t_ndup_par"
     got_bucketed = run_streaming_neardup_ingest(
         spark, landed, str(spool), str(tmp_path / "idx_b"),
-        threshold=0.4, layout="bucketed", table_prefix=prefix, n_buckets=4,
+        threshold=0.4, table_prefix=prefix, n_buckets=4,
     )
-    got_plain = run_streaming_neardup_ingest(
-        spark, landed, str(spool), str(tmp_path / "idx_p"),
-        threshold=0.4, layout="partitioned",
-    )
-    assert sorted(got_bucketed) == sorted(got_plain)
+    # (a) the direct operator in arrival order over a growing corpus
+    landed_df = spark.createDataFrame(landed_rows, ["doc_id", "text"])
+    expected = []
+    for epoch, rows in enumerate([b1_rows, b2_rows]):
+        bdf = spark.createDataFrame(rows, ["doc_id", "text"])
+        expected += [
+            (epoch, r["doc_id"], r["n_dups"], r["best_jaccard"])
+            for r in D.minhash_lsh_incremental(
+                bdf, landed_df, threshold=0.4
+            ).collect()
+        ]
+        landed_df = landed_df.unionAll(bdf)
+    assert sorted(got_bucketed) == sorted(expected)
     assert {d for _, d, _, _ in got_bucketed} == {0, 7}
 
     # (b) replay idempotency: both epochs' partitions landed; a retry of

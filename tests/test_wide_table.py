@@ -5,7 +5,7 @@ Enterprise schemas run to hundreds of columns; every other test uses the
 <=16-column TPC-H tables. Spark's codegen has two cliffs on this axis —
 whole-stage codegen silently disables past spark.sql.codegen.maxFields
 (default 100), and a wide-enough generated method blows the JVM 64KB
-bytecode limit and falls back per job (tools/bench_wide.py measured the
+bytecode limit and falls back per job (SCALING_wide_r11.json holds the
 resulting win/loss curve; plans/plan.py:_wide_codegen applies it). The
 correctness invariant gated here: the MASKED VALUES are identical in
 every codegen regime — compiled, split, or interpreted fallback.
