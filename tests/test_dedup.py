@@ -373,6 +373,45 @@ def _screen_bucketed(new, prefix, **kw):
     return got
 
 
+def test_minhash_index_lifecycle_matches_direct_operator(spark, tmp_path):
+    """The persisted-index ingest loop (r9): build the landed index once,
+    screen a batch against it (must equal the direct two-DataFrame
+    operator exactly), append the admitted batch, and verify the NEXT
+    batch sees the previously-admitted docs — the daily-ingest cycle the
+    incremental operator's docstring promises, as running code."""
+    prefix, path = "t_mh_life", str(tmp_path / "mh_index")
+    landed = spark.createDataFrame(
+        [(100, BASE), (101, "unrelated landed content about engines")],
+        ["doc_id", "text"],
+    )
+    batch1 = spark.createDataFrame(
+        [(0, BASE.replace("jumps", "leaps")), (1, "fresh unseen words entirely")],
+        ["doc_id", "text"],
+    )
+    _seed_bucketed(spark, prefix, landed, path)
+    try:
+        via_index = _screen_bucketed(batch1, prefix)
+        direct = {
+            r["doc_id"]: (r["n_dups"], r["best_jaccard"])
+            for r in D.minhash_lsh_incremental(
+                batch1, landed, threshold=0.4
+            ).collect()
+        }
+        assert via_index == direct and list(via_index) == [0]
+
+        # admit batch1 (both docs) and screen a second batch: doc 7 must
+        # match doc 1's text, which only exists in the APPENDED index rows
+        D.save_minhash_index_bucketed(
+            batch1, prefix, n_buckets=4, path=path, append=True, batch="e0"
+        )
+        probe = spark.createDataFrame(
+            [(7, "fresh unseen words entirely")], ["doc_id", "text"]
+        )
+        assert _screen_bucketed(probe, prefix) == {7: (1, 1.0)}
+    finally:
+        _drop_bucketed(spark, prefix)
+
+
 def test_minhash_index_append_replay_is_idempotent(spark, tmp_path):
     """ADVICE r9 (streaming/events.py): a retried micro-batch must not
     re-append its rows to the index, or every later batch's n_dups is

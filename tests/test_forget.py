@@ -198,12 +198,65 @@ def test_ann_forget_refusals(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def test_minhash_plain_forget(spark, tmp_path):
+    """Path-rooted index: a forgotten landed doc stops matching the
+    incremental screen; others unaffected; idempotent; a fresh re-seed
+    clears the ledger."""
+    prefix, path = "t_forget_mh", str(tmp_path / "mh")
+    tables = [f"{prefix}_{leaf}" for leaf in ("bands", "shingles", "tombstones")]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    landed = spark.createDataFrame(
+        [(100, BASE), (101, "unrelated landed content about engines")],
+        ["doc_id", "text"],
+    )
+    D.save_minhash_index_bucketed(
+        landed, prefix, n_buckets=4, mode="md5", path=path
+    )
+    probe = spark.createDataFrame(
+        [(0, BASE.replace("jumps", "leaps"))], ["doc_id", "text"]
+    )
+
+    def screen():
+        res = D.minhash_incremental_vs_bucketed_index(
+            probe, prefix, threshold=0.4, mode="md5"
+        )
+        got = sorted(tuple(r) for r in res.collect())
+        res.unpersist()
+        return got
+
+    try:
+        got = screen()
+        assert len(got) == 1 and got[0][:2] == (0, 1) and got[0][2] > 0.4
+        stats = D.forget_from_minhash_index(
+            spark, [100], path=path, table_prefix=prefix
+        )
+        assert stats == {
+            "requested": 1, "new": 1, "already": 0, "landed_docs": 1,
+        }
+        assert screen() == []
+        again = D.forget_from_minhash_index(
+            spark, [100], path=path, table_prefix=prefix
+        )
+        assert again["new"] == 0 and again["already"] == 1
+        assert D.minhash_tombstone_ids(spark, table_prefix=prefix) == [100]
+        assert screen() == []
+        # fresh re-seed clears the ledger
+        D.save_minhash_index_bucketed(
+            landed, prefix, n_buckets=4, mode="md5", path=path
+        )
+        assert D.minhash_tombstone_ids(spark, table_prefix=prefix) == []
+        assert screen() == got
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_minhash_bucketed_forget_compact_restart(spark, tmp_path):
     """Bucketed index: forget hides immediately with the bucketed scans
-    un-shuffled and is idempotent; compaction removes band+shingle rows
-    physically and closes the ledger (full fold) or keeps it (kept
-    epoch); the ledger survives a catalog rebuild from the manifest
-    (driver restart); a fresh re-seed clears it."""
+    un-shuffled; compaction removes band+shingle rows physically and
+    closes the ledger (full fold) or keeps it (kept epoch); the ledger
+    survives a catalog rebuild from the manifest (driver restart)."""
     prefix = "t_forget_mhb"
     for t in (
         f"{prefix}_bands", f"{prefix}_shingles", f"{prefix}_tombstones"
@@ -244,13 +297,6 @@ def test_minhash_bucketed_forget_compact_restart(spark, tmp_path):
     assert stats["new"] == 1 and stats["landed_docs"] == 1
     hidden = screen().get(0, 0)
     assert hidden == n0 - 1  # exactly doc 100 vanished
-    # forgetting again changes nothing
-    again = D.forget_from_minhash_index(
-        spark, [100], path=wh, table_prefix=prefix
-    )
-    assert again["new"] == 0 and again["already"] == 1
-    assert D.minhash_tombstone_ids(spark, table_prefix=prefix) == [100]
-    assert screen().get(0, 0) == hidden
 
     # restart: drop the catalog, rebuild from the manifest under a NEW
     # prefix — the tombstone table must come back with it
@@ -281,13 +327,6 @@ def test_minhash_bucketed_forget_compact_restart(spark, tmp_path):
         .filter(F.col("id") == 100).count() == 0
     )
     assert screen(prefix2).get(0, 0) == hidden
-    # a fresh re-seed is a new corpus: its ledger starts empty
-    D.forget_from_minhash_index(spark, [101], path=wh, table_prefix=prefix2)
-    D.save_minhash_index_bucketed(
-        landed, prefix2, n_buckets=4, mode="md5", path=wh, batch="seed"
-    )
-    assert D.minhash_tombstone_ids(spark, table_prefix=prefix2) == []
-    assert screen(prefix2) == {0: 1}  # doc 100 matches again
     for t in (
         f"{prefix2}_bands", f"{prefix2}_shingles", f"{prefix2}_tombstones"
     ):
