@@ -613,6 +613,27 @@ def _print_releases(engine: Engine, specs) -> None:
             print("\t".join(str(r[c]) for c in cols))
 
 
+_MAINT_PREFIX = "dbmask_maint"
+
+
+def _register_maint_index(spark, path: str) -> str:
+    """Register the MinHash index at ``path`` for a maintenance verb
+    (``forget``, ``compact``) and return its catalog prefix. Catalog
+    entries are session-local, so they are rebuilt from the index's
+    manifest. Entries left under the prefix by an earlier call in the
+    same session, possibly for another index, are dropped first:
+    registration skips tables that exist, so the verb would otherwise
+    act on that earlier index and write its tables into this index's
+    manifest. The tables are external (their files live under the
+    index path), so dropping an entry leaves the files in place."""
+    from .operators.dedup import register_minhash_index_bucketed
+
+    for leaf in ("bands", "shingles", "tombstones"):
+        spark.sql(f"DROP TABLE IF EXISTS {_MAINT_PREFIX}_{leaf}")
+    register_minhash_index_bucketed(spark, _MAINT_PREFIX, path)
+    return _MAINT_PREFIX
+
+
 def _parse_forget_ids(args) -> "tuple[list, str | None]":
     """Shared id-list parsing for both forget modes: --ids and/or
     --ids-file, all-digit lists coerced to ints."""
@@ -715,16 +736,10 @@ def main(argv: list[str] | None = None) -> int:
                     from .operators.dedup import (
                         _read_index_manifest,
                         compact_minhash_index_bucketed,
-                        register_minhash_index_bucketed,
                     )
 
                     manifest = _read_index_manifest(spark, args.path)
-                    # fresh-session maintenance: catalog entries are
-                    # session-local, rebuild them from the manifest
-                    prefix = "dbmask_maint"
-                    register_minhash_index_bucketed(
-                        spark, prefix, args.path
-                    )
+                    prefix = _register_maint_index(spark, args.path)
                     n_parts = len(
                         spark.sql(
                             f"SHOW PARTITIONS {prefix}_bands"
@@ -789,15 +804,9 @@ def main(argv: list[str] | None = None) -> int:
                 stats = forget_from_ann_index(spark, args.path, ids)
                 hidden = f"{stats['landed']} landed vector row(s) hidden"
             else:
-                from .operators.dedup import (
-                    forget_from_minhash_index,
-                    register_minhash_index_bucketed,
-                )
+                from .operators.dedup import forget_from_minhash_index
 
-                # fresh-session maintenance: catalog entries are
-                # session-local, rebuild them from the manifest
-                prefix = "dbmask_maint"
-                register_minhash_index_bucketed(spark, prefix, args.path)
+                prefix = _register_maint_index(spark, args.path)
                 stats = forget_from_minhash_index(
                     spark, ids, table_prefix=prefix, path=args.path
                 )

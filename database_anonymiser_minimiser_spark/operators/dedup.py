@@ -1287,6 +1287,82 @@ def _adaptive_df_cap(
     return float(max_df)
 
 
+def _rare_pair_counts(inv: DataFrame, rare: DataFrame, keep_pair: str) -> DataFrame:
+    """The candidate core the Jaccard and containment indexes share:
+    every unordered pair of docs sharing a rare shingle, as (id_a < id_b,
+    na, nb, ra, rb, c) — the docs' shingle-set sizes n, their rare-
+    shingle counts r and c = |rare(A) ∩ rare(B)|. ``inv`` is the (id, n,
+    sh) inverted index, ``rare`` the (sh, df_count) rare set and
+    ``keep_pair`` the SQL predicate over ``p.x`` / ``p.y`` that a pair
+    must pass inside the bucket pass."""
+    from pyspark.sql import Window
+
+    # per-doc rare-shingle count r rides a window over the index itself:
+    # one row per doc would have been broadcast-able at test scale, but
+    # its cardinality is O(#docs with a rare shingle) — at billions of
+    # docs that exceeds any broadcast/driver budget. A partitionBy(id)
+    # window is one bounded shuffle (id keys, count fits the partial
+    # agg) and scales with the cluster instead of the driver.
+    #
+    # Candidate generation keys on xxhash64(shingle), not the string:
+    # rarity/df/r are still computed on exact strings (the semantic rule
+    # is untouched), but the dominant Theta(sum df^2) shuffle+compare
+    # moves from ~50-byte string keys to 8-byte longs. A hash collision
+    # can only ADD candidate pairs (same hash, different shingle) and
+    # only INFLATE the shared-count c — both keep the pruned candidate
+    # set a superset of the string-keyed one — and the full-array verify
+    # is exact, so the RESULT is provably identical, collisions or not.
+    #
+    # df_count == 1 rows are dropped AFTER r is counted: a df=1 shingle
+    # exists in exactly one document, so it can never be SHARED — it
+    # contributes zero candidate pairs, yet under the old self-join every
+    # such row was shuffled into both join sides. r (the per-doc rare
+    # count feeding the intersection upper bound) still counts ALL rare
+    # shingles, so the bound — and the verified result — is unchanged.
+    inv_rare = (
+        inv.join(rare, "sh")
+        .withColumn("r", F.count(F.lit(1)).over(Window.partitionBy("id")))
+        .filter(F.col("df_count") >= 2)
+        .withColumn("shh", F.xxhash64("sh"))
+        .select("id", "n", "r", "shh")
+    )
+    # r15: the pair generation is ONE bucket pass (groupBy(shh) +
+    # collect_list + in-bucket combinations) instead of a hash self-join.
+    # AQE never reused the two identical join-side exchanges at runtime
+    # (the t_closeness/AQE reuse gap, confirmed in the committed r14
+    # plan: the explode + rare join + window subtree appears TWICE), so
+    # the self-join paid the inverted index twice plus a SortMergeJoin
+    # sort on both sides. The bucket pass shuffles the index ONCE and
+    # emits exactly the same (a.id < b.id) pair multiset the join
+    # produced — each bucket holds each doc at most once (shingles are
+    # array_distinct per doc), so in-bucket combinations == the join's
+    # per-bucket cross product under a < b. Buckets are df-capped, so
+    # per-row pair arrays are bounded; the per-ELEMENT slice keeps peak
+    # memory O(bucket), not O(bucket^2), in the quantile-fallback regime.
+    pair_arr_sql = (
+        "filter(transform(slice(xs, i + 2, size(xs) - i - 1), y -> "
+        "IF(x.id < y.id, named_struct('x', x, 'y', y), "
+        "named_struct('x', y, 'y', x))), "
+        f"p -> {keep_pair})"
+    )
+    return (
+        inv_rare.groupBy("shh")
+        .agg(F.collect_list(F.struct("id", "n", "r")).alias("xs"))
+        .filter(F.size("xs") >= 2)
+        .select("xs", F.posexplode("xs").alias("i", "x"))
+        .select(F.explode(F.expr(pair_arr_sql)).alias("p"))
+        .groupBy(
+            F.col("p.x.id").alias("id_a"),
+            F.col("p.y.id").alias("id_b"),
+            F.col("p.x.n").alias("na"),
+            F.col("p.y.n").alias("nb"),
+            F.col("p.x.r").alias("ra"),
+            F.col("p.y.r").alias("rb"),
+        )
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1294,37 +1370,27 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int = 100,
     max_df_quantile: float | None = None,
-    mode: str = "stop_shingle",
     fallback_quantile: float = 0.9,
 ) -> DataFrame:
     """Exact-verified near-dup pairs from an inverted shingle index.
 
-    Two candidate-generation modes, both ending in the same exact
-    full-set Jaccard verification (reported values are always exact):
-
-    - ``mode="stop_shingle"`` (default): candidates = pairs sharing >=1
-      *rare* shingle (document frequency <= max_df, or <= the
-      ``max_df_quantile`` quantile of the df distribution — the
-      corpus-relative form). Recall of pairs sharing NO rare shingle is
-      sacrificed (overwhelmingly sub-threshold pairs); in exchange the
-      count-then-verify intersection bound prunes candidates before the
-      array-verify joins. The measured worst case (uniform-df synthetic
-      corpus, sf1) runs ~2x faster than prefix mode here.
-    - ``mode="prefix"``: the classic prefix filter
-      (``ngram_jaccard_pairs_prefix``) — COMPLETE, no recall knob; the
-      index stays sparse on realistic Zipf-vocabulary corpora where df
-      concentrates in a small head. Prefer it when recall guarantees
-      matter or vocabulary grows with the corpus (Heaps' law).
-
-    See PERFORMANCE.md "Measured scaling" for the head-to-head numbers
-    that motivated keeping both.
+    Candidates = pairs sharing >=1 *rare* shingle (document frequency
+    <= max_df, or <= the ``max_df_quantile`` quantile of the df
+    distribution — the corpus-relative form), each verified by exact
+    full-set Jaccard (reported values are always exact). Recall of pairs
+    sharing NO rare shingle is sacrificed (overwhelmingly sub-threshold
+    pairs); in exchange the count-then-verify intersection bound prunes
+    candidates before the array-verify joins. The measured worst case
+    (uniform-df synthetic corpus, sf1) runs ~2x faster than the
+    complete prefix filter, :func:`ngram_jaccard_pairs_prefix` — prefer
+    that one when recall guarantees matter or vocabulary grows with the
+    corpus (Heaps' law). See PERFORMANCE.md "Measured scaling" for the
+    head-to-head numbers that motivated keeping both.
     """
     # numpy scalars reach SQL text below; their repr is not SQL
     threshold, fallback_quantile = float(threshold), float(fallback_quantile)
     if max_df_quantile is not None:
         max_df_quantile = float(max_df_quantile)
-    if mode == "prefix":
-        return ngram_jaccard_pairs_prefix(df, text_col, id_col, threshold)
     keep = release_registry("dedup.ngram_jaccard_pairs")
     shingled = keep(shingles(df, text_col, id_col))
     # shingle-set size rides the inverted index (one extra int through
@@ -1383,36 +1449,6 @@ def ngram_jaccard_pairs(
             dfs.filter(F.col("df_count") <= F.lit(capval))
             .select("sh", "df_count")
         )
-    # per-doc rare-shingle count r rides a window over the index itself:
-    # one row per doc would have been broadcast-able at test scale, but
-    # its cardinality is O(#docs with a rare shingle) — at billions of
-    # docs that exceeds any broadcast/driver budget. A partitionBy(id)
-    # window is one bounded shuffle (id keys, count fits the partial
-    # agg) and scales with the cluster instead of the driver.
-    from pyspark.sql import Window
-
-    # Candidate generation keys on xxhash64(shingle), not the string:
-    # rarity/df/r are still computed on exact strings (the semantic rule
-    # is untouched), but the dominant Theta(sum df^2) shuffle+compare
-    # moves from ~50-byte string keys to 8-byte longs. A hash collision
-    # can only ADD candidate pairs (same hash, different shingle) and
-    # only INFLATE the shared-count c — both keep the pruned candidate
-    # set a superset of the string-keyed one — and the full-array verify
-    # is exact, so the RESULT is provably identical, collisions or not.
-    #
-    # df_count == 1 rows are dropped AFTER r is counted: a df=1 shingle
-    # exists in exactly one document, so it can never be SHARED — it
-    # contributes zero candidate pairs, yet under the old self-join every
-    # such row was shuffled into both join sides. r (the per-doc rare
-    # count feeding the intersection upper bound) still counts ALL rare
-    # shingles, so the bound — and the verified result — is unchanged.
-    inv_rare = (
-        inv.join(rare, "sh")
-        .withColumn("r", F.count(F.lit(1)).over(Window.partitionBy("id")))
-        .filter(F.col("df_count") >= 2)
-        .withColumn("shh", F.xxhash64("sh"))
-        .select("id", "n", "r", "shh")
-    )
     # Count-then-verify: the old `.distinct()` shuffled every co-occurring
     # pair straight into the expensive array-verify joins (at sf0.1 that
     # was ~850k pairs for a ~1k-pair result — verify was 90% of the
@@ -1426,45 +1462,13 @@ def ngram_jaccard_pairs(
     # byte-identical. On corpora where most shingles are rare the bound
     # is nearly exact and verify degenerates to confirming true pairs.
     #
-    # r15: the pair generation is ONE bucket pass (groupBy(shh) +
-    # collect_list + in-bucket combinations) instead of a hash self-join.
-    # AQE never reused the two identical join-side exchanges at runtime
-    # (the t_closeness/AQE reuse gap, confirmed in the committed r14
-    # plan: the explode + rare join + window subtree appears TWICE), so
-    # the self-join paid the inverted index twice plus a SortMergeJoin
-    # sort on both sides. The bucket pass shuffles the index ONCE and
-    # emits exactly the same (a.id < b.id, size-compatible) pair
-    # multiset the join produced — each bucket holds each doc at most
-    # once (shingles are array_distinct per doc), so in-bucket
-    # combinations == the join's per-bucket cross product under a < b.
-    # Buckets are df-capped (<= capval rows), so per-row pair arrays are
-    # bounded; the per-ELEMENT slice keeps peak memory O(bucket), not
-    # O(bucket^2), in the quantile-fallback regime.
-    size_ok_sql = (
-        f"CAST(least(p.x.n, p.y.n) AS DOUBLE) >= "
-        f"{threshold!r} * greatest(p.x.n, p.y.n) - 1e-9"
-    )
-    pair_arr_sql = (
-        "filter(transform(slice(xs, i + 2, size(xs) - i - 1), y -> "
-        "IF(x.id < y.id, named_struct('x', x, 'y', y), "
-        "named_struct('x', y, 'y', x))), "
-        f"p -> p.x.id <> p.y.id AND {size_ok_sql})"
-    )
-    pair_counts = (
-        inv_rare.groupBy("shh")
-        .agg(F.collect_list(F.struct("id", "n", "r")).alias("xs"))
-        .filter(F.size("xs") >= 2)
-        .select("xs", F.posexplode("xs").alias("i", "x"))
-        .select(F.explode(F.expr(pair_arr_sql)).alias("p"))
-        .groupBy(
-            F.col("p.x.id").alias("id_a"),
-            F.col("p.y.id").alias("id_b"),
-            F.col("p.x.n").alias("na"),
-            F.col("p.y.n").alias("nb"),
-            F.col("p.x.r").alias("ra"),
-            F.col("p.y.r").alias("rb"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
+    # Size-incompatible pairs (J >= t forces min(|A|,|B|) >= t *
+    # max(|A|,|B|)) are dropped inside the bucket pass.
+    pair_counts = _rare_pair_counts(
+        inv,
+        rare,
+        "p.x.id <> p.y.id AND CAST(least(p.x.n, p.y.n) AS DOUBLE) >= "
+        f"{threshold!r} * greatest(p.x.n, p.y.n) - 1e-9",
     )
     inter_ub = F.col("c") + F.least(
         F.col("na") - F.col("ra"), F.col("nb") - F.col("rb")
@@ -1521,22 +1525,10 @@ def ngram_containment_pairs(
         dfs.filter(F.col("df_count") <= F.lit(capval))
         .select("sh", "df_count")
     )
-    from pyspark.sql import Window
-
-    # df=1 rows dropped after r is counted; ONE bucket pass replaces the
-    # hash self-join — see ngram_jaccard_pairs (r15), the shared
-    # restructure rationale. The DIRECTED relation emits BOTH
-    # orientations of each in-bucket combination, each gated by its own
-    # size necessary condition (|A∩B| >= t·|A| and |A∩B| <= |B| =>
-    # |B| >= t·|A|), exactly the old join's (a.id != b.id) & size_ok
-    # ordered-pair multiset.
-    inv_rare = (
-        inv.join(rare, "sh")
-        .withColumn("r", F.count(F.lit(1)).over(Window.partitionBy("id")))
-        .filter(F.col("df_count") >= 2)
-        .withColumn("shh", F.xxhash64("sh"))
-        .select("id", "n", "r", "shh")
-    )
+    # The DIRECTED relation emits BOTH orientations of each in-bucket
+    # combination, each gated by its own size necessary condition
+    # (|A∩B| >= t·|A| and |A∩B| <= |B| => |B| >= t·|A|), exactly the old
+    # join's (a.id != b.id) & size_ok ordered-pair multiset.
     # The shared-shingle count c is SYMMETRIC, so the bucket pass
     # aggregates each UNORDERED pair once (the Jaccard core's shape —
     # half the generated structs and half the aggregation input of an
@@ -1546,28 +1538,7 @@ def ngram_containment_pairs(
     # directed size_ok and count bound are per-ordered-pair constants,
     # and for t <= 1 the (small -> large) orientation always satisfies
     # the size condition, so no unordered pair can be pre-pruned.
-    pair_arr_sql = (
-        "filter(transform(slice(xs, i + 2, size(xs) - i - 1), y -> "
-        "IF(x.id < y.id, named_struct('x', x, 'y', y), "
-        "named_struct('x', y, 'y', x))), "
-        "p -> p.x.id <> p.y.id)"
-    )
-    pair_counts = (
-        inv_rare.groupBy("shh")
-        .agg(F.collect_list(F.struct("id", "n", "r")).alias("xs"))
-        .filter(F.size("xs") >= 2)
-        .select("xs", F.posexplode("xs").alias("i", "x"))
-        .select(F.explode(F.expr(pair_arr_sql)).alias("p"))
-        .groupBy(
-            F.col("p.x.id").alias("id_a"),
-            F.col("p.y.id").alias("id_b"),
-            F.col("p.x.n").alias("na"),
-            F.col("p.y.n").alias("nb"),
-            F.col("p.x.r").alias("ra"),
-            F.col("p.y.r").alias("rb"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    pair_counts = _rare_pair_counts(inv, rare, "p.x.id <> p.y.id")
     both = pair_counts.select(
         F.explode(
             F.array(
@@ -1615,7 +1586,6 @@ def ngram_jaccard_pairs_prefix(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    positional: bool = False,
 ) -> DataFrame:
     """EXACT near-dup pairs via prefix filtering over the shingle index.
 
@@ -1670,7 +1640,7 @@ def ngram_jaccard_pairs_prefix(
     pfx = ranked.filter(
         F.col("rk")
         <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + F.lit(1)
-    ).select("id", "n", "sh", "rk")
+    ).select("id", "n", "sh")
     a, b = pfx.alias("a"), pfx.alias("b")
     # J >= t forces min(|A|,|B|) >= t * max(|A|,|B|): size-incompatible
     # pairs are rejected inside the join predicate (1e-9 covers float
@@ -1684,51 +1654,11 @@ def ngram_jaccard_pairs_prefix(
         & (F.col("a.id") < F.col("b.id"))
         & size_ok
     )
-    if positional:
-        # PPJoin positional filter: for a shared shingle at positions
-        # (pa, pb) of the two docs' identically-ordered shingle lists,
-        # every shared element is either <= it in the global order (at
-        # most min(pa, pb) of those, itself included) or > it (at most
-        # min(n_a - pa, n_b - pb)), so |A o B| <= min(pa,pb) +
-        # min(n_a-pa, n_b-pb); J >= t needs overlap >= t(n_a+n_b)/(1+t).
-        # MIN of the bound over the shared prefix shingles prunes pairs
-        # that provably cannot reach the required overlap — EXACT
-        # (equality-tested vs the plain path). MEASURED SLOWER on the
-        # bench corpus (sf1 183.5s vs 71.9s plain, PERFORMANCE.md):
-        # uniform doc sizes and half-length prefixes keep the bound
-        # above the requirement for almost every candidate, so the
-        # 5-column agg rows cost more than the pruning saves. On Zipf
-        # corpora (early prefix positions, varied sizes) the bound
-        # bites; kept behind this flag for that regime, default off.
-        ub_s = F.least(F.col("a.rk"), F.col("b.rk")) + F.least(
-            F.col("a.n") - F.col("a.rk"), F.col("b.n") - F.col("b.rk")
-        )
-        cands = (
-            a.join(b, join_cond)
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.n").alias("n_a"),
-                F.col("b.n").alias("n_b"),
-                ub_s.alias("ub_s"),
-            )
-            .groupBy("id_a", "id_b", "n_a", "n_b")
-            .agg(F.min("ub_s").alias("ub"))
-            .filter(
-                F.col("ub").cast("double")
-                >= F.lit(threshold)
-                * (F.col("n_a") + F.col("n_b"))
-                / F.lit(1.0 + threshold)
-                - F.lit(1e-9)
-            )
-            .select("id_a", "id_b")
-        )
-    else:
-        cands = (
-            a.join(b, join_cond)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
+    cands = (
+        a.join(b, join_cond)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
     return verify_jaccard(cands, shingled, threshold)
 
 

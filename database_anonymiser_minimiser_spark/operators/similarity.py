@@ -16,6 +16,22 @@ Floating-point discipline: embeddings are cast float->double *before*
 multiplication and folded strictly left-to-right, matching the DuckDB
 oracle's ``list_reduce`` fold — the doubles come out bit-identical, so
 even ranks-by-cosine compare exactly across engines.
+
+Every top-k operator here is score, rank per query, cut, and each
+decision it shares with the others is stated once:
+
+- ``_top_k``: the per-query cut — ``row_number`` over ``query_id``
+  ordered by the score, ties to the lower ``neighbor_id``, ``rank <= k``;
+- ``_table_rows``: the one driver-side form of a centroid table, a PQ
+  codebook or a query batch — ``(id, [float])`` pairs sorted by id;
+  ``_smallest_ids`` is the deterministic stand-in table an index seeds
+  from when none is given;
+- ``_probe_queries`` / ``_nearest_cells``: a query's ``nprobe`` nearest
+  IVF cells, in SQL over centroid literals or on the driver;
+- ``_adc_queries``: the PQ/ADC lookup tables as one broadcast literal
+  relation plus the ``element_at`` score, for every PQ serve;
+- ``_rescore_top_k``: the exact cosine rescore of a shortlist;
+- ``_lsh_topk``: the one LSH body, single- and multi-probe.
 """
 
 from __future__ import annotations
@@ -59,6 +75,145 @@ def _duck_norm(a: str) -> str:
 
 
 # ---------------------------------------------------------------------------
+# shared kernels
+# ---------------------------------------------------------------------------
+
+
+def _top_k(
+    cand: DataFrame,
+    k: int,
+    score: str,
+    ascending: bool = False,
+    keep_score: bool = False,
+) -> DataFrame:
+    """The per-query top-k cut: number each query's candidates by
+    ``score`` (descending, or ascending for a distance), ties to the
+    lower ``neighbor_id``, as ``rank`` and keep ``rank <= k``. Returns
+    (query_id, neighbor_id[, score], rank); the DuckDB twins state the
+    same ``row_number`` window."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    cols = ["query_id", "neighbor_id"] + ([score] if keep_score else [])
+    return cand.select(*cols, F.row_number().over(w).alias("rank")).filter(
+        F.col("rank") <= int(k)
+    )
+
+
+def _table_rows(rows) -> "list[tuple[int, list[float]]]":
+    """The one driver-side form of a centroid table, a PQ codebook or a
+    query batch: ``(id, [float, ...])`` pairs sorted by id. Takes a
+    ``(cid, cv)`` DataFrame (collected here), or rows given as
+    ``(id, vector)`` tuples/Rows or ``{"cid", "cv"}`` dicts. Python
+    floats are IEEE doubles, so literals and driver-side folds over
+    these vectors equal the engines' folds over the stored values."""
+    if isinstance(rows, DataFrame):
+        rows = rows.select("cid", "cv").collect()
+    pairs = (
+        (r["cid"], r["cv"]) if isinstance(r, dict) else (r[0], r[1])
+        for r in rows
+    )
+    return sorted(
+        ((int(i), [float(v) for v in vec]) for i, vec in pairs),
+        key=lambda r: r[0],
+    )
+
+
+def _probe_queries(queries: DataFrame, cent_rows, nprobe: int) -> DataFrame:
+    """(query_id, qv, _qnrm) -> one row per probed cell ``qcid``: the
+    ``nprobe`` nearest centroids by (cosine DESC, cid ASC), ranked in
+    one projection over the centroid literals (array_sort ascending by
+    (ccos, negcid), then reversed). The query side is a handful of
+    rows, so the full scored array is cheap here."""
+    scored_arr = _centroid_scored_array(cent_rows, "qv", "_qnrm")
+    nprobe = min(int(nprobe), len(cent_rows))
+    probe = f"slice(reverse(array_sort({scored_arr})), 1, {nprobe})"
+    return queries.select(
+        "query_id",
+        "qv",
+        "_qnrm",
+        # coalesce keeps the element non-nullable: the cid == qcid
+        # join then infers no IsNotNull(qcid), which would otherwise
+        # re-evaluate the probe scoring below this projection
+        F.expr(f"transform({probe}, s -> coalesce(s.cid, -1))").alias("qcids"),
+    ).select("query_id", "qv", "_qnrm", F.explode("qcids").alias("qcid"))
+
+
+def _nearest_cells(qv: "list[float]", cent_rows, nprobe: int) -> "list[int]":
+    """Driver-side twin of :func:`_probe_queries` for one query vector:
+    the ``nprobe`` cells by cosine DESC (the engines' fold order), lowest
+    cid on ties."""
+    scored = sorted(
+        ((_py_cos(qv, cv), -cid) for cid, cv in cent_rows), reverse=True
+    )
+    return [-negcid for _cos, negcid in scored[: int(nprobe)]]
+
+
+def _adc_queries(spark, code_rows, q_rows, m: int, probes=None):
+    """The ADC kernel every PQ serve shares. ``code_rows`` is the
+    codebook and ``q_rows`` the query batch, both in the
+    :func:`_table_rows` form; ``probes`` optionally maps each query id
+    to its probe cells. Returns ``(queries, score)``:
+
+    - ``queries``: one broadcastable literal relation — per query (per
+      query and probe cell when ``probes`` is given, with ``qcid``) its
+      BIGINT ``query_id`` (the type the oracle surfaces; a bare literal
+      would bind INT) and the m lookup tables ``t0..t{m-1}``, each
+      entry the driver-side squared L2 of a query subvector to one
+      codebook subvector, folded as the engines fold;
+    - ``score``: ``_adc``, the m table lookups summed left-to-right in
+      subspace order, as the oracle folds ``list(d ORDER BY s)``.
+
+    Codes are positional: codebook entry j (ascending cid) is table
+    slot j+1, so the codebook ids must be exactly 0..K-1."""
+    m = int(m)
+    if [c for c, _ in code_rows] != list(range(len(code_rows))):
+        raise ValueError("pq codebook ids must be 0..K-1 for table lookup")
+    dsub = len(code_rows[0][1]) // m
+    elems = []
+    for qid, qv in q_rows:
+        tables = []
+        for s in range(m):
+            qsub = _pq_sub(qv, s, dsub)
+            tab = ", ".join(
+                f"CAST({_py_sq_dist(qsub, _pq_sub(cv, s, dsub))!r} AS DOUBLE)"
+                for _c, cv in code_rows
+            )
+            tables.append(f"array({tab}) AS t{s}")
+        head = f"struct(CAST({qid} AS BIGINT) AS query_id, "
+        for cell in [None] if probes is None else probes[qid]:
+            qcid = "" if cell is None else f"{cell} AS qcid, "
+            elems.append(head + qcid + ", ".join(tables) + ")")
+    queries = spark.range(1).select(
+        F.explode(F.expr("array(" + ", ".join(elems) + ")")).alias("q")
+    ).select("q.*")
+    score = F.expr(" + ".join(f"element_at(t{s}, c{s} + 1)" for s in range(m)))
+    return queries, score.alias("_adc")
+
+
+def _rescore_top_k(
+    vecs: DataFrame, pairs: DataFrame, queries: DataFrame, k: int, nnorm
+) -> DataFrame:
+    """The exact rescore stage: the shortlisted ``pairs`` (query_id,
+    neighbor_id) fetch their neighbours' float vectors from ``vecs``
+    (nid, _nv, ...) and their queries' from ``queries`` (query_id, _qv),
+    both small sides broadcast so the vector side streams unshuffled;
+    each pair is scored by exact cosine with the proven ascending-index
+    dot/norm folds and cut by :func:`_top_k`. ``nnorm`` is the
+    neighbour's norm: the fold itself, or the one the index stored at
+    write time (the same fold). Returns (query_id, neighbor_id, cosine,
+    rank)."""
+    cos = F.expr(_spark_dot("_nv", "_qv")) / (
+        nnorm * F.expr(_spark_norm("_qv"))
+    )
+    scored = (
+        vecs.join(F.broadcast(pairs), F.col("nid") == F.col("neighbor_id"))
+        .join(F.broadcast(queries), "query_id")
+        .select("query_id", "neighbor_id", cos.alias("cosine"))
+    )
+    return _top_k(scored, k, "cosine", keep_score=True)
+
+
+# ---------------------------------------------------------------------------
 # brute-force cosine top-k
 # ---------------------------------------------------------------------------
 
@@ -98,15 +253,7 @@ def topk_cosine(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.select(
-            "query_id", "neighbor_id", F.row_number().over(w).alias("rank")
-        )
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, "cosine")
 
 
 def topk_cosine_numpy(
@@ -206,16 +353,12 @@ def topk_cosine_numpy(
     cos = F.when(denom != 0, F.expr(_spark_dot("qv", "nv")) / denom).otherwise(
         F.lit(0.0)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
+    scored = (
         nv.join(F.broadcast(cand), nv.nid == F.col("neighbor_id"))
         .join(F.broadcast(qv), F.col("query_id") == F.col("qid"))
         .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select("query_id", "neighbor_id", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
     )
+    return _top_k(scored, k, "cosine")
 
 
 def duck_topk_cosine_sql(
@@ -414,16 +557,15 @@ def _centroid_scored_array(cent_rows, vec_col: str, norm_col: str) -> str:
     (``_py_norm``); the row norm is referenced as ``norm_col``, computed
     once in a separate projection (HOF folds neither constant-fold nor
     benefit from codegen subexpression elimination, so every repeated
-    fold here would be paid per row x per centroid)."""
+    fold here would be paid per row x per centroid). ``cent_rows`` is in
+    the :func:`_table_rows` form."""
     elems = []
-    for r in sorted(cent_rows, key=lambda r: r["cid"]):
-        cv = list(r["cv"])
+    for cid, cv in cent_rows:
         arr = _centroid_literal(cv)
         ccos = (
             f"({_spark_dot(vec_col, arr)} / "
             f"({norm_col} * CAST({_py_norm(cv)!r} AS DOUBLE)))"
         )
-        cid = int(r["cid"])
         elems.append(
             f"struct({ccos} AS ccos, {-cid} AS negcid, {cid} AS cid)"
         )
@@ -459,8 +601,11 @@ def assign_to_centroids(
     ``greatest`` — bit-identical output (equality-tested per chunk
     size), still map-side. Only if even chunking is impractical
     (k * dim in the 10^7 range) fall back to a broadcast-join
-    assignment and accept the row multiplication it brings."""
-    scored = _centroid_scored_array(cent_rows, "nv", "nrm")
+    assignment and accept the row multiplication it brings.
+
+    ``cent_rows``: the centroid table in any form :func:`_table_rows`
+    takes."""
+    scored = _centroid_scored_array(_table_rows(cent_rows), "nv", "nrm")
     # coalesce with an unreachable sentinel: the scored array is a
     # non-empty literal, so array_max(...).cid is never null in practice
     # — but Catalyst cannot prove that, marks cid NULLABLE, and every
@@ -502,7 +647,7 @@ def assign_to_centroids_chunked(
     Keeps every generated expression under the Janino/analysis ceiling
     documented above while staying map-side: still no join, no row
     multiplication, no shuffle."""
-    rows = sorted(cent_rows, key=lambda r: r["cid"])
+    rows = _table_rows(cent_rows)
     chunks = [rows[i : i + chunk_size] for i in range(0, len(rows), chunk_size)]
     df = emb.select(
         F.col(id_col).alias("nid"),
@@ -552,12 +697,9 @@ def train_ivf_centroids(
     keep their previous centroid. Deterministic: first-k init by id,
     cosine ties break on lowest cid."""
     spark = emb.sparkSession
-    cent_rows = [
-        {"cid": int(r[id_col]), "cv": list(r[vec_col])}
-        for r in emb.filter(F.col(id_col) < num_centroids)
-        .select(id_col, vec_col)
-        .collect()
-    ]
+    cent_rows = _table_rows(
+        emb.filter(F.col(id_col) < num_centroids).select(id_col, vec_col).collect()
+    )
     for _ in range(iters):
         assigned = assign_to_centroids(emb, cent_rows, id_col, vec_col)
         means = (
@@ -570,14 +712,9 @@ def train_ivf_centroids(
             .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("s"))
             .select("cid", F.transform("s", lambda x: x["v"]).alias("cv"))
         )
-        updated = {r["cid"]: list(r["cv"]) for r in means.collect()}
-        cent_rows = [
-            {"cid": r["cid"], "cv": updated.get(r["cid"], r["cv"])}
-            for r in cent_rows
-        ]
-    return spark.createDataFrame(
-        [(r["cid"], r["cv"]) for r in cent_rows], "cid int, cv array<double>"
-    )
+        updated = dict(_table_rows(means))
+        cent_rows = [(cid, updated.get(cid, cv)) for cid, cv in cent_rows]
+    return spark.createDataFrame(cent_rows, "cid int, cv array<double>")
 
 
 def save_centroids(centroids: DataFrame, path: str) -> None:
@@ -626,44 +763,22 @@ def ann_ivf_topk(
     Work per query: nprobe * |corpus| / num_centroids on average, vs
     |corpus| for brute force. Recall loss at cell boundaries is the IVF
     trade-off — raise ``nprobe`` to recover it."""
-    if centroids is None:
-        cent_rows = [
-            {"cid": int(r[id_col]), "cv": list(r[vec_col])}
-            for r in emb.filter(F.col(id_col) < num_centroids)
-            .select(id_col, vec_col)
-            .collect()
-        ]
-    else:
-        cent_rows = [
-            {"cid": int(r["cid"]), "cv": list(r["cv"])}
-            for r in centroids.collect()
-        ]
+    cent_rows = _table_rows(
+        emb.filter(F.col(id_col) < num_centroids).select(id_col, vec_col).collect()
+        if centroids is None
+        else centroids
+    )
     assigned = assign_to_centroids(emb, cent_rows, id_col, vec_col)
-    # queries probe their top-nprobe cells (nprobe=1 == their own cell):
-    # array_sort ascending by (ccos, negcid) then reverse == ccos DESC,
-    # cid ASC — the same ranking the round-2 window produced. The query
-    # side is a handful of rows, so the full scored array is cheap here.
-    scored_arr = _centroid_scored_array(cent_rows, "qv", "_qnrm")
-    probe = f"slice(reverse(array_sort({scored_arr})), 1, {int(nprobe)})"
-    queries = (
-        emb.filter(F.col(id_col).isin(query_ids))
-        .select(
+    # queries probe their top-nprobe cells (nprobe=1 == their own cell),
+    # ranked (ccos DESC, cid ASC) — the ranking the round-2 window produced
+    queries = _probe_queries(
+        emb.filter(F.col(id_col).isin(query_ids)).select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
             F.expr(_spark_norm(vec_col)).alias("_qnrm"),
-        )
-        .select(
-            "query_id",
-            "qv",
-            "_qnrm",
-            # coalesce keeps the element non-nullable: the cid == qcid
-            # join then infers no IsNotNull(qcid), which would otherwise
-            # re-evaluate the probe scoring below this projection
-            F.expr(
-                f"transform({probe}, s -> coalesce(s.cid, -1))"
-            ).alias("qcids"),
-        )
-        .select("query_id", "qv", "_qnrm", F.explode("qcids").alias("qcid"))
+        ),
+        cent_rows,
+        nprobe,
     )
     # both norms ride in from the pre-join projections — one dot fold
     # per candidate pair; same op order as the oracle, bit-identical
@@ -673,12 +788,7 @@ def ann_ivf_topk(
         .filter(F.col("nid") != F.col("query_id"))
         .select("query_id", F.col("nid").alias("neighbor_id"), cos_q.alias("cosine"))
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return cand.select(
-        "query_id", "neighbor_id", F.row_number().over(w_rank).alias("rank")
-    ).filter(F.col("rank") <= k)
+    return _top_k(cand, k, "cosine")
 
 
 def duck_ann_ivf_sql(
@@ -728,38 +838,7 @@ def ann_lsh_topk(
     query; exact re-rank inside the bucket. Misses neighbors across the
     bucket boundary — the accepted ANN trade-off (multi-probe extends
     recall; see docstring tests)."""
-    planes = _hyperplanes(num_planes, dim)
-    bucketed = emb.select(
-        F.col(id_col).alias("nid"),
-        F.col(vec_col).alias("nv"),
-        F.expr(_spark_norm(vec_col)).alias("nnrm"),
-        F.expr(_bucket_expr_spark(vec_col, planes)).cast("int").alias("bucket"),
-    )
-    queries = bucketed.filter(F.col("nid").isin(query_ids)).select(
-        F.col("nid").alias("query_id"),
-        F.col("nv").alias("qv"),
-        F.col("nnrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    # norms folded once per row before the join (projection barrier);
-    # per-pair cost is one dot fold — identical doubles to the inline
-    # form, so the oracle's all-inline cosine compares bit-exact
-    cos = F.expr(_spark_dot("qv", "nv")) / (F.col("qnrm") * F.col("nnrm"))
-    scored = (
-        bucketed.join(
-            F.broadcast(queries), F.col("bucket") == F.col("qbucket")
-        )
-        .filter(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id", F.col("nid").alias("neighbor_id"), cos.alias("cosine")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        "query_id", "neighbor_id", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= k)
+    return _lsh_topk(emb, query_ids, k, num_planes, dim, id_col, vec_col, ())
 
 
 def duck_ann_lsh_sql(
@@ -808,6 +887,25 @@ def ann_lsh_multiprobe_topk(
     once map-side; only the tiny query side explodes to its probe list
     and broadcasts; each corpus vector lives in exactly ONE bucket, so
     probe buckets are disjoint and no candidate dedup pass is needed."""
+    return _lsh_topk(
+        emb, query_ids, k, num_planes, dim, id_col, vec_col, range(num_planes)
+    )
+
+
+def _lsh_topk(
+    emb: DataFrame,
+    query_ids: list[int],
+    k: int,
+    num_planes: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    flips,
+) -> DataFrame:
+    """The one LSH body: the corpus is bucketed once map-side; each
+    query probes its own bucket plus, for each plane index in
+    ``flips``, the bucket with that signature bit flipped; candidates
+    are re-ranked by exact cosine and cut by :func:`_top_k`."""
     planes = _hyperplanes(num_planes, dim)
     bucketed = emb.select(
         F.col(id_col).alias("nid"),
@@ -815,9 +913,7 @@ def ann_lsh_multiprobe_topk(
         F.expr(_spark_norm(vec_col)).alias("nnrm"),
         F.expr(_bucket_expr_spark(vec_col, planes)).cast("int").alias("bucket"),
     )
-    probes = ", ".join(
-        ["qbucket"] + [f"qbucket ^ {1 << p}" for p in range(num_planes)]
-    )
+    probes = ", ".join(["qbucket"] + [f"qbucket ^ {1 << p}" for p in flips])
     queries = (
         bucketed.filter(F.col("nid").isin(query_ids))
         .select(
@@ -833,18 +929,16 @@ def ann_lsh_multiprobe_topk(
             F.explode(F.expr(f"array({probes})")).alias("pbucket"),
         )
     )
+    # norms folded once per row before the join (projection barrier);
+    # per-pair cost is one dot fold — identical doubles to the inline
+    # form, so the oracle's all-inline cosine compares bit-exact
     cos = F.expr(_spark_dot("qv", "nv")) / (F.col("qnrm") * F.col("nnrm"))
     scored = (
         bucketed.join(F.broadcast(queries), F.col("bucket") == F.col("pbucket"))
         .filter(F.col("nid") != F.col("query_id"))
         .select("query_id", F.col("nid").alias("neighbor_id"), cos.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        "query_id", "neighbor_id", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= k)
+    return _top_k(scored, k, "cosine")
 
 
 def duck_ann_lsh_multiprobe_sql(
@@ -968,36 +1062,20 @@ def ann_int8_topk(
         F.sqrt(F.col("qself").cast("double"))
         * F.sqrt(F.col("nself").cast("double"))
     )
-    w8 = Window.partitionBy("query_id").orderBy(
-        F.col("icos").desc(), F.col("neighbor_id")
-    )
-    cand = (
+    scored = (
         quant.crossJoin(F.broadcast(queries))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", icos.alias("icos"))
-        .withColumn("crank", F.row_number().over(w8))
-        .filter(F.col("crank") <= k * refine)
-        .select("query_id", "neighbor_id")
     )
+    cand = _top_k(scored, k * refine, "icos").select("query_id", "neighbor_id")
     # rerank: fetch full vectors for the tiny candidate set only
-    nv = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-    qv = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
+    nvec = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("_nv"))
+    qvec = emb.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
-    cos = F.expr(_spark_dot("qv", "nv")) / (
-        F.expr(_spark_norm("qv")) * F.expr(_spark_norm("nv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        nv.join(F.broadcast(cand), nv.nid == cand.neighbor_id)
-        .join(F.broadcast(qv), F.col("query_id") == qv.qid)
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rescore_top_k(
+        nvec, cand, qvec, k, F.expr(_spark_norm("_nv"))
+    ).select("query_id", "neighbor_id", "rank")
 
 
 def duck_ann_int8_sql(
@@ -1345,18 +1423,9 @@ def save_ann_index(
             # (not `id < k`, which silently selects nothing when the
             # corpus' ids do not start at 0) — pass train_ivf_centroids
             # output for k-means cells
-            centroids = (
-                emb.orderBy(id_col)
-                .limit(num_centroids)
-                .select(
-                    F.col(id_col).cast("int").alias("cid"),
-                    F.col(vec_col).cast("array<double>").alias("cv"),
-                )
-            )
+            centroids = _smallest_ids(emb, num_centroids, id_col, vec_col)
         cent = centroids
-    cent_rows = [
-        {"cid": int(r["cid"]), "cv": list(r["cv"])} for r in cent.collect()
-    ]
+    cent_rows = _table_rows(cent)
     if not cent_rows:
         raise ValueError(
             "ann index has an empty centroid table — seed it from a "
@@ -1401,37 +1470,21 @@ def save_ann_index(
     rows = None
     if pq_m is not None:
         if append:
-            cb = spark.read.parquet(f"{path}/pq_codebook")
+            rows = _table_rows(spark.read.parquet(f"{path}/pq_codebook"))
         else:
             if pq_codebook is None:
-                pq_codebook = (
-                    emb.orderBy(id_col)
-                    .limit(num_codes)
-                    .select(
-                        F.col(id_col).cast("int").alias("cid"),
-                        F.col(vec_col).cast("array<double>").alias("cv"),
-                    )
-                )
+                pq_codebook = _smallest_ids(emb, num_codes, id_col, vec_col)
             # cid is a CODE SLOT, not a corpus id: ADC tables index it
             # positionally (element_at(t, code+1)), so the persisted
             # codebook MUST be labelled 0..K-1 — a corpus whose
             # smallest ids are not contiguous (found live: even-id
             # landed corpora) would otherwise seed an unservable index.
-            # Relabel deterministically in ascending original-cid order
-            # (a K-row window — the codebook is bytes).
-            cb = pq_codebook.select(
-                (
-                    F.row_number().over(Window.orderBy("cid")) - 1
-                ).alias("cid"),
-                "cv",
-            )
-        rows = sorted(
-            ({"cid": int(r["cid"]), "cv": list(r["cv"])} for r in cb.collect()),
-            key=lambda r: r["cid"],
-        )
+            # Relabel in ascending original-cid order on the driver
+            # (the codebook is bytes).
+            rows = list(enumerate(cv for _cid, cv in _table_rows(pq_codebook)))
         if not rows:
             raise ValueError("ann index has an empty PQ codebook")
-        d = len(rows[0]["cv"])
+        d = len(rows[0][1])
         if d % pq_m:
             raise ValueError(f"dim {d} not divisible by pq_m={pq_m}")
     if not append:
@@ -1443,13 +1496,11 @@ def save_ann_index(
         # validated rows, so exactly what was checked is what lands.
         _hfs_delete(spark, path)
         spark.createDataFrame(
-            [(r["cid"], r["cv"]) for r in cent_rows],
-            "cid int, cv array<double>",
+            cent_rows, "cid int, cv array<double>"
         ).write.mode("overwrite").parquet(f"{path}/centroids")
         if pq_m is not None:
             spark.createDataFrame(
-                [(r["cid"], r["cv"]) for r in rows],
-                "cid int, cv array<double>",
+                rows, "cid int, cv array<double>"
             ).write.mode("overwrite").parquet(f"{path}/pq_codebook")
     if pq_m is not None:
         assigned = assigned.select(
@@ -1460,6 +1511,15 @@ def save_ann_index(
         )
     assigned.write.mode("overwrite").partitionBy("cid").parquet(
         f"{path}/vectors/batch={batch}"
+    )
+
+
+def _smallest_ids(emb: DataFrame, n: int, id_col: str, vec_col: str) -> DataFrame:
+    """The deterministic stand-in table (cid int, cv array<double>): the
+    ``n`` vectors with the smallest ids."""
+    return emb.orderBy(id_col).limit(n).select(
+        F.col(id_col).cast("int").alias("cid"),
+        F.col(vec_col).cast("array<double>").alias("cv"),
     )
 
 
@@ -1500,10 +1560,7 @@ def ann_screen_vs_index(
     tests/test_similarity.py; smaller nprobe trades recall at cell
     boundaries for reading fewer lists, the IVF contract."""
     spark = new_emb.sparkSession
-    cent_rows = [
-        {"cid": int(r["cid"]), "cv": list(r["cv"])}
-        for r in load_centroids(spark, f"{path}/centroids").collect()
-    ]
+    cent_rows = _table_rows(load_centroids(spark, f"{path}/centroids"))
     if not cent_rows:
         raise ValueError(
             f"ann index at {path} has an empty centroid table — it was "
@@ -1517,27 +1574,14 @@ def ann_screen_vs_index(
     landed = _without_tombstoned_ids(
         landed, ann_tombstone_ids(spark, path), col="nid"
     )
-    scored_arr = _centroid_scored_array(cent_rows, "qv", "_qnrm")
-    nprobe = min(int(nprobe), len(cent_rows))
-    probe = f"slice(reverse(array_sort({scored_arr})), 1, {nprobe})"
-    queries = (
+    queries = _probe_queries(
         new_emb.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
             F.expr(_spark_norm(vec_col)).alias("_qnrm"),
-        )
-        .select(
-            "query_id",
-            "qv",
-            "_qnrm",
-            # coalesce keeps the element non-nullable: the cid == qcid
-            # join then infers no IsNotNull(qcid), which would otherwise
-            # re-evaluate the probe scoring below this projection
-            F.expr(
-                f"transform({probe}, s -> coalesce(s.cid, -1))"
-            ).alias("qcids"),
-        )
-        .select("query_id", "qv", "_qnrm", F.explode("qcids").alias("qcid"))
+        ),
+        cent_rows,
+        nprobe,
     )
     cos = F.expr(_spark_dot("qv", "nv")) / (F.col("_qnrm") * F.col("nrm"))
     return (
@@ -1822,6 +1866,31 @@ def forget_from_ann_index(spark, path: str, ids) -> dict:
     }
 
 
+def _bitext_candidates(
+    a_df: DataFrame, b_df: DataFrame, cent_rows, id_col: str, vec_col: str,
+    owner: str,
+) -> DataFrame:
+    """(a_id, b_id, cosine) for every cross-side pair sharing an IVF
+    cell, persisted through ``owner``'s release registry (the bitext
+    operators read it from two windows)."""
+    a = assign_to_centroids(a_df, cent_rows, id_col, vec_col).select(
+        F.col("nid").alias("a_id"),
+        F.col("nv").alias("av"),
+        F.col("nrm").alias("anrm"),
+        "cid",
+    )
+    b = assign_to_centroids(b_df, cent_rows, id_col, vec_col).select(
+        F.col("nid").alias("b_id"),
+        F.col("nv").alias("bv"),
+        F.col("nrm").alias("bnrm"),
+        "cid",
+    )
+    cos = F.expr(_spark_dot("av", "bv")) / (F.col("anrm") * F.col("bnrm"))
+    return release_registry(owner)(
+        a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine"))
+    )
+
+
 def mutual_top1_pairs(
     a_df: DataFrame,
     b_df: DataFrame,
@@ -1850,19 +1919,6 @@ def mutual_top1_pairs(
     break (cosine DESC, id ASC) on both sides, so the pair set is
     deterministic and cross-engine exact (the oracle mirrors the
     assignment, the fold order, and the tie-break)."""
-    a = assign_to_centroids(a_df, cent_rows, id_col, vec_col).select(
-        F.col("nid").alias("a_id"),
-        F.col("nv").alias("av"),
-        F.col("nrm").alias("anrm"),
-        "cid",
-    )
-    b = assign_to_centroids(b_df, cent_rows, id_col, vec_col).select(
-        F.col("nid").alias("b_id"),
-        F.col("nv").alias("bv"),
-        F.col("nrm").alias("bnrm"),
-        "cid",
-    )
-    cos = F.expr(_spark_dot("av", "bv")) / (F.col("anrm") * F.col("bnrm"))
     # persist the candidate relation: it feeds BOTH top-1 windows, and
     # Catalyst does not reuse subtrees across join sides (the
     # PERFORMANCE.md "persist any relation feeding >= 2 plan subtrees"
@@ -1870,8 +1926,8 @@ def mutual_top1_pairs(
     # TWICE per call. Post-projection rows are (id, id, cosine) — the
     # float arrays are projected away, so the cached bytes are pair-count
     # x 24B, MEMORY_AND_DISK so big cells spill instead of OOM.
-    cand = release_registry("similarity.mutual_top1_pairs")(
-        a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine"))
+    cand = _bitext_candidates(
+        a_df, b_df, cent_rows, id_col, vec_col, "similarity.mutual_top1_pairs"
     )
     w_a = Window.partitionBy("a_id").orderBy(
         F.col("cosine").desc(), F.col("b_id")
@@ -1926,19 +1982,6 @@ def bitext_margin_pairs(
     the margin's operation order is identical in both SQLs, so every
     step is an exactly-rounded IEEE operation applied in the same
     order — hash-identical, same discipline as the DP family."""
-    a = assign_to_centroids(a_df, cent_rows, id_col, vec_col).select(
-        F.col("nid").alias("a_id"),
-        F.col("nv").alias("av"),
-        F.col("nrm").alias("anrm"),
-        "cid",
-    )
-    b = assign_to_centroids(b_df, cent_rows, id_col, vec_col).select(
-        F.col("nid").alias("b_id"),
-        F.col("nv").alias("bv"),
-        F.col("nrm").alias("bnrm"),
-        "cid",
-    )
-    cos = F.expr(_spark_dot("av", "bv")) / (F.col("anrm") * F.col("bnrm"))
     # the candidate relation feeds the per-a AND per-b views; naively
     # expressing mutuality + neighbourhoods as four consumers of one
     # ranked relation recomputes the corpus-sized candidate join FOUR
@@ -1950,8 +1993,8 @@ def bitext_margin_pairs(
     # cosine) rows (arrays projected away before the cache). The
     # mutuality check is a key join of the two grid-sized aggregates.
     # Plan-gated in tests/test_plans.py.
-    cand = release_registry("similarity.bitext_margin_pairs")(
-        a.join(b, "cid").select("a_id", "b_id", cos.alias("cosine"))
+    cand = _bitext_candidates(
+        a_df, b_df, cent_rows, id_col, vec_col, "similarity.bitext_margin_pairs"
     )
     w_a = Window.partitionBy("a_id").orderBy(
         F.col("cosine").desc(), F.col("b_id")
@@ -2165,17 +2208,13 @@ def train_pq_codebook(
     argmin ties to the lowest code, empty cells keep their previous
     centroid."""
     spark = emb.sparkSession
-    seed = sorted(
-        (int(r[id_col]), [float(v) for v in r[vec_col]])
-        for r in emb.orderBy(id_col)
-        .limit(num_codes)
-        .select(id_col, vec_col)
-        .collect()
+    seed = _table_rows(
+        emb.orderBy(id_col).limit(num_codes).select(id_col, vec_col).collect()
     )
     if not seed:
         raise ValueError("train_pq_codebook: empty corpus")
-    rows = [{"cid": j, "cv": cv} for j, (_orig, cv) in enumerate(seed)]
-    d = len(rows[0]["cv"])
+    rows = [(j, cv) for j, (_orig, cv) in enumerate(seed)]
+    d = len(rows[0][1])
     if d % m:
         raise ValueError(
             f"train_pq_codebook: dim {d} not divisible by m={m}"
@@ -2204,13 +2243,11 @@ def train_pq_codebook(
             .agg(F.avg("v").alias("mv"))
             .collect()
         )
-        new = {r["cid"]: list(r["cv"]) for r in rows}
+        new = {cid: list(cv) for cid, cv in rows}
         for rec in cells:
             new[int(rec["code"])][int(rec["pos"])] = float(rec["mv"])
-        rows = [{"cid": j, "cv": new[j]} for j in sorted(new)]
-    return spark.createDataFrame(
-        [(r["cid"], r["cv"]) for r in rows], "cid int, cv array<double>"
-    )
+        rows = sorted(new.items())
+    return spark.createDataFrame(rows, "cid int, cv array<double>")
 
 
 def pq_encode(
@@ -2231,13 +2268,10 @@ def pq_encode(
     vector instead of 4*d — the scan an ADC query pays drops ~32x (the
     codes relation is what you persist next to the IVF index for the
     classic IVF-PQ layout)."""
-    rows = sorted(
-        ({"cid": int(r[0]), "cv": list(r[1])} for r in code_rows),
-        key=lambda r: r["cid"],
-    )
+    rows = _table_rows(code_rows)
     if not rows:
         raise ValueError("pq_encode: empty codebook")
-    d = len(rows[0]["cv"])
+    d = len(rows[0][1])
     if d % m:
         raise ValueError(f"pq_encode: dim {d} not divisible by m={m}")
     dsub = d // m
@@ -2252,17 +2286,16 @@ def pq_encode(
 def _pq_code_cols(rows, m: int, dsub: int, vec_expr: str):
     """The m per-subspace code Columns (argmin squared-L2 against the
     sorted codebook literals, ties to the lowest cid) over ``vec_expr``
-    — shared by :func:`pq_encode` and the IVF-PQ composition."""
+    — shared by :func:`pq_encode` and the IVF-PQ composition. ``rows``
+    is the codebook in the :func:`_table_rows` form."""
     code_cols = []
     for s in range(m):
         elems = []
-        for r in rows:
-            sub = _pq_sub(r["cv"], s, dsub)
+        for cid, cv in rows:
             sl = f"slice({vec_expr}, {s * dsub + 1}, {dsub})"
-            negd = f"-({_pq_dist_expr(sl, sub)})"
+            negd = f"-({_pq_dist_expr(sl, _pq_sub(cv, s, dsub))})"
             elems.append(
-                f"struct({negd} AS negd, {-r['cid']} AS negcid, "
-                f"{r['cid']} AS cid)"
+                f"struct({negd} AS negd, {-cid} AS negcid, {cid} AS cid)"
             )
         scored = "array(" + ", ".join(elems) + ")"
         code_cols.append(
@@ -2302,16 +2335,12 @@ def ann_pq_adc_topk(
     if codebook is not None:
         # a trained codebook (train_pq_codebook output or any
         # (cid, cv) relation labelled 0..K-1) replaces the stand-in
-        code_rows = [
-            (int(r["cid"]), [float(v) for v in r["cv"]])
-            for r in codebook.collect()
-        ]
-        q_rows = [
-            (int(r[id_col]), [float(v) for v in r[vec_col]])
-            for r in emb.filter(F.col(id_col).isin(query_ids))
+        code_rows = _table_rows(codebook)
+        q_rows = _table_rows(
+            emb.filter(F.col(id_col).isin(query_ids))
             .select(id_col, vec_col)
             .collect()
-        ]
+        )
     else:
         # ONE bounded collect serves both the stand-in codebook and the
         # query vectors (r14: two separate collects = two scan jobs of
@@ -2325,70 +2354,17 @@ def ann_pq_adc_topk(
             .select(id_col, vec_col)
             .collect()
         )
-        code_rows = [
-            (int(r[id_col]), list(r[vec_col]))
-            for r in both
-            if int(r[id_col]) < num_codes
-        ]
+        code_rows = _table_rows(r for r in both if int(r[id_col]) < num_codes)
         qset = set(query_ids)
-        q_rows = [
-            (int(r[id_col]), [float(v) for v in r[vec_col]])
-            for r in both
-            if int(r[id_col]) in qset
-        ]
+        q_rows = _table_rows(r for r in both if int(r[id_col]) in qset)
     codes = pq_encode(emb, code_rows, m=m, id_col=id_col, vec_col=vec_col)
-    rows = sorted(code_rows)
-    d = len(rows[0][1])
-    dsub = d // m
-    # one struct literal per query: its id + the m ADC lookup tables
-    q_elems = []
-    for qid, qv in sorted(q_rows):
-        tables = []
-        for s in range(m):
-            qsub = _pq_sub(qv, s, dsub)
-            tab = [
-                _py_sq_dist(qsub, _pq_sub(cv, s, dsub)) for _cid, cv in rows
-            ]
-            tables.append(
-                "array("
-                + ", ".join(f"CAST({t!r} AS DOUBLE)" for t in tab)
-                + f") AS t{s}"
-            )
-        q_elems.append(
-            # BIGINT, matching the id column the oracle surfaces — a
-            # bare int literal would bind INT and diverge in Arrow bytes
-            f"struct(CAST({qid} AS BIGINT) AS query_id, "
-            + ", ".join(tables)
-            + ")"
-        )
-    queries = emb.sparkSession.range(1).select(
-        F.explode(F.expr("array(" + ", ".join(q_elems) + ")")).alias("q")
-    ).select("q.*")
-    # ADC score: m table lookups summed LEFT-ASSOCIATIVELY in subspace
-    # order — the oracle folds list(d ORDER BY s) the same way. Codes
-    # are positional: centroid j (ascending cid order) is table slot
-    # j+1, valid because the codebook is embedded sorted by cid and
-    # cids are 0..K-1 (asserted below).
-    if [c for c, _ in rows] != list(range(len(rows))):
-        raise ValueError("pq codebook ids must be 0..K-1 for table lookup")
-    score = " + ".join(
-        f"element_at(t{s}, c{s} + 1)" for s in range(m)
-    )
+    queries, score = _adc_queries(emb.sparkSession, code_rows, q_rows, m)
     cand = (
         codes.crossJoin(F.broadcast(queries))
         .filter(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("nid").alias("neighbor_id"),
-            F.expr(score).alias("_adc"),
-        )
+        .select("query_id", F.col("nid").alias("neighbor_id"), score)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_adc").asc(), F.col("neighbor_id").asc()
-    )
-    return cand.select(
-        "query_id", "neighbor_id", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= k)
+    return _top_k(cand, k, "_adc", ascending=True)
 
 
 def duck_ann_pq_adc_sql(
@@ -2498,77 +2474,27 @@ def ann_ivf_pq_topk(
         .select(id_col, vec_col)
         .collect()
     )
-    cent_rows = [
-        {"cid": int(r[id_col]), "cv": list(r[vec_col])}
-        for r in both
-        if int(r[id_col]) < num_centroids
-    ]
-    code_rows = sorted(
-        (int(r[id_col]), [float(v) for v in r[vec_col]])
-        for r in both
-        if int(r[id_col]) < num_codes
-    )
-    if [c for c, _ in code_rows] != list(range(len(code_rows))):
-        raise ValueError("pq codebook ids must be 0..K-1 for table lookup")
-    rows = [{"cid": c, "cv": v} for c, v in code_rows]
-    d = len(code_rows[0][1])
-    dsub = d // m
-    # corpus pass: cell id + m codes in one projection (assign keeps nv)
-    assigned = assign_to_centroids(emb, cent_rows, id_col, vec_col)
-    coded = assigned.select(
-        "nid", "cid", *_pq_code_cols(rows, m, dsub, "nv")
-    )
+    cent_rows = _table_rows(r for r in both if int(r[id_col]) < num_centroids)
+    code_rows = _table_rows(r for r in both if int(r[id_col]) < num_codes)
+    qset = set(query_ids)
+    q_rows = _table_rows(r for r in both if int(r[id_col]) in qset)
     # query side: probe cells AND ADC tables computed driver-side with
     # the engines' exact folds, embedded as one bounded literal relation
-    qset = set(query_ids)
-    q_rows = [
-        (int(r[id_col]), [float(v) for v in r[vec_col]])
-        for r in both
-        if int(r[id_col]) in qset
-    ]
-    nprobe = min(int(nprobe), len(cent_rows))
-    q_elems = []
-    for qid, qv in sorted(q_rows):
-        scored = sorted(
-            ((_py_cos(qv, c["cv"]), -c["cid"]) for c in cent_rows),
-            reverse=True,
-        )
-        probes = [-negcid for _cc, negcid in scored[:nprobe]]
-        tables = []
-        for s in range(m):
-            qsub = _pq_sub(qv, s, dsub)
-            tab = [
-                _py_sq_dist(qsub, _pq_sub(cv, s, dsub)) for _c, cv in code_rows
-            ]
-            tables.append(
-                "array("
-                + ", ".join(f"CAST({t!r} AS DOUBLE)" for t in tab)
-                + f") AS t{s}"
-            )
-        for cell in probes:
-            q_elems.append(
-                f"struct(CAST({qid} AS BIGINT) AS query_id, "
-                f"{cell} AS qcid, " + ", ".join(tables) + ")"
-            )
-    queries = emb.sparkSession.range(1).select(
-        F.explode(F.expr("array(" + ", ".join(q_elems) + ")")).alias("q")
-    ).select("q.*")
-    score = " + ".join(f"element_at(t{s}, c{s} + 1)" for s in range(m))
+    queries, score = _adc_queries(
+        emb.sparkSession, code_rows, q_rows, m,
+        probes={qid: _nearest_cells(qv, cent_rows, nprobe) for qid, qv in q_rows},
+    )
+    # corpus pass: cell id + m codes in one projection (assign keeps nv)
+    dsub = len(code_rows[0][1]) // int(m)
+    coded = assign_to_centroids(emb, cent_rows, id_col, vec_col).select(
+        "nid", "cid", *_pq_code_cols(code_rows, int(m), dsub, "nv")
+    )
     cand = (
         coded.join(F.broadcast(queries), F.col("cid") == F.col("qcid"))
         .filter(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("nid").alias("neighbor_id"),
-            F.expr(score).alias("_adc"),
-        )
+        .select("query_id", F.col("nid").alias("neighbor_id"), score)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_adc").asc(), F.col("neighbor_id").asc()
-    )
-    return cand.select(
-        "query_id", "neighbor_id", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= k)
+    return _top_k(cand, k, "_adc", ascending=True)
 
 
 def duck_ann_ivf_pq_sql(
@@ -2667,10 +2593,7 @@ def ann_ivf_pq_topk_vs_index(
     disk, column-pruned away); ZERO Exchange ever touches the index.
     ``exclude_batch`` as in :func:`ann_screen_vs_index`."""
     spark = new_emb.sparkSession
-    cent_rows = [
-        {"cid": int(r["cid"]), "cv": list(r["cv"])}
-        for r in load_centroids(spark, f"{path}/centroids").collect()
-    ]
+    cent_rows = _table_rows(load_centroids(spark, f"{path}/centroids"))
     try:
         cb = spark.read.parquet(f"{path}/pq_codebook")
     except Exception as exc:
@@ -2678,12 +2601,7 @@ def ann_ivf_pq_topk_vs_index(
             f"no PQ codebook at {path} — seed the index with "
             "save_ann_index(..., pq_m=...) to serve ADC queries"
         ) from exc
-    code_rows = sorted(
-        (int(r["cid"]), [float(v) for v in r["cv"]]) for r in cb.collect()
-    )
-    if [c for c, _ in code_rows] != list(range(len(code_rows))):
-        raise ValueError("pq codebook ids must be 0..K-1 for table lookup")
-    d = len(code_rows[0][1])
+    code_rows = _table_rows(cb)
     m = 0
     landed = spark.read.parquet(f"{path}/vectors")
     while f"c{m}" in landed.columns:
@@ -2692,7 +2610,6 @@ def ann_ivf_pq_topk_vs_index(
         raise ValueError(
             f"index at {path} holds no PQ code columns — re-seed with pq_m"
         )
-    dsub = d // m
     if exclude_batch is not None:
         landed = landed.filter(F.col("batch") != exclude_batch)
     # forgotten subjects never serve (logical erasure; the rescore
@@ -2701,10 +2618,7 @@ def ann_ivf_pq_topk_vs_index(
     landed = _without_tombstoned_ids(
         landed, ann_tombstone_ids(spark, path), col="nid"
     )
-    q_rows = [
-        (int(r[id_col]), [float(v) for v in r[vec_col]])
-        for r in new_emb.select(id_col, vec_col).collect()
-    ]
+    q_rows = _table_rows(new_emb.select(id_col, vec_col).collect())
     if len(q_rows) > 1000:
         # each query embeds m x K doubles of literal table — a corpus
         # passed as the query side would blow the plan; batch the
@@ -2713,59 +2627,21 @@ def ann_ivf_pq_topk_vs_index(
             f"{len(q_rows)} query vectors: ADC retrieval takes a BOUNDED "
             "query batch (<=1000); chunk the callers' loop"
         )
-    nprobe = min(int(nprobe), len(cent_rows))
-    q_elems = []
-    probed_cells: set = set()
-    for qid, qv in sorted(q_rows):
-        scored = sorted(
-            ((_py_cos(qv, c["cv"]), -c["cid"]) for c in cent_rows),
-            reverse=True,
-        )
-        probes = [-negcid for _cc, negcid in scored[:nprobe]]
-        probed_cells.update(probes)
-        tables = []
-        for s in range(m):
-            qsub = _pq_sub(qv, s, dsub)
-            tab = [
-                _py_sq_dist(qsub, _pq_sub(cv, s, dsub))
-                for _c, cv in code_rows
-            ]
-            tables.append(
-                "array("
-                + ", ".join(f"CAST({t!r} AS DOUBLE)" for t in tab)
-                + f") AS t{s}"
-            )
-        for cell in probes:
-            q_elems.append(
-                f"struct(CAST({qid} AS BIGINT) AS query_id, "
-                f"{cell} AS qcid, " + ", ".join(tables) + ")"
-            )
-    queries = spark.range(1).select(
-        F.explode(F.expr("array(" + ", ".join(q_elems) + ")")).alias("q")
-    ).select("q.*")
-    score = " + ".join(f"element_at(t{s}, c{s} + 1)" for s in range(m))
+    probes = {qid: _nearest_cells(qv, cent_rows, nprobe) for qid, qv in q_rows}
+    queries, score = _adc_queries(spark, code_rows, q_rows, m, probes=probes)
     # the probed cells are known DRIVER-side here (unlike the screen,
     # whose delta-derived cells need dynamic pruning), so prune the
     # index scan STATICALLY — PartitionFilters carries the literal cid
     # set and unprobed directories are never even listed
-    probed_cells = sorted(probed_cells)
+    probed_cells = sorted({c for cells in probes.values() for c in cells})
     cand = (
         landed.select("nid", "cid", *[f"c{s}" for s in range(m)])
         .filter(F.col("cid").isin(probed_cells))
         .join(F.broadcast(queries), F.col("cid") == F.col("qcid"))
         .filter(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("nid").alias("neighbor_id"),
-            F.expr(score).alias("_adc"),
-        )
+        .select("query_id", F.col("nid").alias("neighbor_id"), score)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_adc").asc(), F.col("neighbor_id").asc()
-    )
-    return cand.select(
-        "query_id", "neighbor_id", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= k)
+    return _top_k(cand, k, "_adc", ascending=True)
 
 
 def ann_pq_rescore_topk(
@@ -2810,28 +2686,11 @@ def ann_pq_rescore_topk(
         num_codes=num_codes, m=m, nprobe=nprobe,
         id_col=id_col, vec_col=vec_col,
     ).select("query_id", "neighbor_id")
-    nvec = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nv")
-    )
+    nvec = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("_nv"))
     qvec = emb.filter(F.col(id_col).isin(list(query_ids))).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
-    cos = F.expr(_spark_dot("_nv", "_qv")) / (
-        F.expr(_spark_norm("_nv")) * F.expr(_spark_norm("_qv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        nvec.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select(
-            "query_id", "neighbor_id", "cosine",
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= k)
-    )
+    return _rescore_top_k(nvec, short, qvec, k, F.expr(_spark_norm("_nv")))
 
 
 def duck_ann_pq_rescore_sql(
@@ -2898,21 +2757,14 @@ def ann_ivf_pq_topk_rescored_vs_index(
     pairs = sorted(
         (int(r["query_id"]), int(r["neighbor_id"])) for r in short.collect()
     )
-    q_rows = sorted(
-        (int(r[id_col]), [float(v) for v in r[vec_col]])
-        for r in new_emb.select(id_col, vec_col).collect()
-    )
-    empty = (
-        spark.range(0)
-        .select(
+    if not pairs:
+        return spark.range(0).select(
             F.col("id").alias("query_id"),
             F.col("id").alias("neighbor_id"),
             F.col("id").cast("double").alias("cosine"),
             F.col("id").cast("int").alias("rank"),
         )
-    )
-    if not pairs:
-        return empty
+    q_rows = _table_rows(new_emb.select(id_col, vec_col).collect())
     cand_ids = sorted({n for _q, n in pairs})
     pair_elems = ", ".join(
         f"struct(CAST({q} AS BIGINT) AS query_id, "
@@ -2945,21 +2797,4 @@ def ann_ivf_pq_topk_rescored_vs_index(
     vec = landed.filter(F.col("nid").isin(cand_ids)).select(
         "nid", F.col("nv").alias("_nv"), "nrm"
     )
-    cos = F.expr(_spark_dot("_nv", "_qv")) / (
-        F.col("nrm") * F.expr(_spark_norm("_qv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        vec.join(
-            F.broadcast(pairs_df), F.col("nid") == F.col("neighbor_id")
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select(
-            "query_id", "neighbor_id", "cosine",
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= k)
-    )
+    return _rescore_top_k(vec, pairs_df, qdf, k, F.col("nrm"))

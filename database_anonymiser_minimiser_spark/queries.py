@@ -2964,8 +2964,8 @@ def q_dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap widening (1.18x at sf0.1 -> 3.6x at sf1; PERFORMANCE.md
     "measured-and-rejected"), so it stays non-default: its value is the
     provable zero-recall-loss property, not throughput."""
-    return _dd.ngram_jaccard_pairs(
-        load(spark, sf_dir, "documents"), threshold=0.5, mode="prefix"
+    return _dd.ngram_jaccard_pairs_prefix(
+        load(spark, sf_dir, "documents"), threshold=0.5
     )
 
 
@@ -3175,12 +3175,8 @@ def q_bitext_mutual_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py:mutual_top1_pairs): sum(cell_a x cell_b)
     work, never |A| x |B|."""
     emb = load(spark, sf_dir, "embeddings")
-    cent_rows = [
-        {"cid": int(r["vec_id"]), "cv": list(r["embedding"])}
-        for r in emb.filter(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
+    # the first 8 vectors, read as (cid, cv) centroid rows
+    cent_rows = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
     return _sim.mutual_top1_pairs(
         emb.filter(F.col("label") % 2 == 0),
         emb.filter(F.col("label") % 2 == 1),
@@ -3204,12 +3200,8 @@ def q_bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbourhood sums fold in rank order on both engines (the proven
     ordered-fold idiom), so the margin is hash-exact."""
     emb = load(spark, sf_dir, "embeddings")
-    cent_rows = [
-        {"cid": int(r["vec_id"]), "cv": list(r["embedding"])}
-        for r in emb.filter(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
+    # the first 8 vectors, read as (cid, cv) centroid rows
+    cent_rows = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
     return _sim.bitext_margin_pairs(
         emb.filter(F.col("label") % 2 == 0),
         emb.filter(F.col("label") % 2 == 1),

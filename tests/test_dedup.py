@@ -133,7 +133,7 @@ def test_ngram_prefix_filter_complete_vs_brute_force(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").limit(200)
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.5, mode="prefix").collect()
+        for r in D.ngram_jaccard_pairs_prefix(docs, threshold=0.5).collect()
     }
     sh = D.shingles(docs)
     a = sh.selectExpr("id AS ia", "s AS sa")
@@ -149,27 +149,6 @@ def test_ngram_prefix_filter_complete_vs_brute_force(spark, sf_dir):
         .collect()
     }
     assert got == brute
-
-
-def test_ngram_prefix_positional_filter_is_exact(spark, sf_dir):
-    """The PPJoin positional filter (positional=True) prunes candidates
-    only — its result set must equal the plain prefix path exactly
-    (pairs AND jaccard values) on the real corpus."""
-    from database_anonymiser_minimiser_spark.queries import load
-
-    docs = load(spark, sf_dir, "documents").limit(300)
-    plain = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs_prefix(docs, threshold=0.5).collect()
-    }
-    pos = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs_prefix(
-            docs, threshold=0.5, positional=True
-        ).collect()
-    }
-    assert pos == plain
-    assert plain  # non-vacuous: the corpus has near-dup pairs
 
 
 def test_levenshtein_catches_bucket_straddling_pair(spark):

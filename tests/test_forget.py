@@ -479,6 +479,55 @@ def test_cli_screen_forget_compact_share_one_index_path(
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_cli_forget_two_indexes_in_one_process(spark, tmp_path, capsys):
+    """Two `forget --index minhash` calls in one process, on two index
+    paths, each act on their own index: B's manifest still names B's
+    tables, and the doc forgotten in A stays visible in B."""
+    from database_anonymiser_minimiser_spark import cli
+
+    leaves = ("bands", "shingles", "tombstones")
+    tables = [
+        f"{p}_{leaf}"
+        for p in ("dbmask_maint", "t_two_a", "t_two_b", "t_two_check")
+        for leaf in leaves
+    ]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    a, b = str(tmp_path / "A"), str(tmp_path / "B")
+    for prefix, path, other in (
+        ("t_two_a", a, (101, "unrelated landed content about engines")),
+        ("t_two_b", b, (201, "other landed content in the second index")),
+    ):
+        landed = spark.createDataFrame([(100, BASE), other], ["doc_id", "text"])
+        D.save_minhash_index_bucketed(
+            landed, prefix, n_buckets=4, mode="md5", path=path
+        )
+    probe = spark.createDataFrame(
+        [(0, BASE.replace("jumps", "leaps"))], ["doc_id", "text"]
+    )
+    try:
+        for path, victim in ((a, "100"), (b, "201")):
+            assert cli.main(
+                ["forget", "--index", "minhash", "--path", path,
+                 "--ids", victim]
+            ) == 0
+            assert "1 landed doc(s) hidden" in capsys.readouterr().out
+        bands = D._read_index_manifest(spark, b)["tables"]["bands"]
+        assert bands["location"].rstrip("/").endswith("/B/bands")
+        # B as a fresh driver rebuilds it from its manifest alone
+        D.register_minhash_index_bucketed(spark, "t_two_check", b)
+        assert D.minhash_tombstone_ids(spark, "t_two_check") == [201]
+        res = D.minhash_incremental_vs_bucketed_index(
+            probe, "t_two_check", threshold=0.4, mode="md5"
+        )
+        got = [tuple(r) for r in res.collect()]
+        res.unpersist()
+        assert len(got) == 1 and got[0][:2] == (0, 1)
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 @pytest.mark.slow  # r15 full-tier (scale/fuzz/e2e twin; see conftest)
 def test_ann_forget_sequence_invariant(spark, tmp_path):
     """Randomized (seeded) lifecycle fuzz: any interleaving of append /

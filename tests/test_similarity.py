@@ -992,6 +992,39 @@ def test_pq_encode_shape_and_code_domain(spark, sf_dir):
         assert cs == [cid] * 8, (cid, cs)
 
 
+@pytest.mark.parametrize(
+    "cids", [[1, 2, 3, 4], [0, 2, 4, 6], [0, 1, 1, 2]],
+    ids=["offset", "gapped", "duplicate"],
+)
+def test_pq_codebook_ids_must_be_table_slots(spark, sf_dir, tmp_path, cids):
+    """ADC tables index codes positionally (slot j+1 holds cid j), so a
+    codebook whose ids are not 0..K-1 is refused with the same
+    ValueError by the inline PQ serve and by the index serve reading
+    that codebook from disk."""
+    from pyspark.sql import functions as F
+
+    from database_anonymiser_minimiser_spark.queries import load
+
+    emb = load(spark, sf_dir, "embeddings")
+    vecs = [
+        [float(v) for v in r["embedding"]]
+        for r in emb.orderBy("vec_id").limit(len(cids)).collect()
+    ]
+    codebook = spark.createDataFrame(
+        list(zip(cids, vecs)), "cid int, cv array<double>"
+    )
+    with pytest.raises(ValueError, match="0..K-1") as inline:
+        S.ann_pq_adc_topk(emb, [0, 1], k=3, m=8, codebook=codebook)
+    path = str(tmp_path / "idx")
+    S.save_ann_index(emb, path, num_centroids=4, pq_m=8, num_codes=len(cids))
+    # seeding relabels a codebook to 0..K-1, so put the bad one in place
+    codebook.write.mode("overwrite").parquet(f"{path}/pq_codebook")
+    queries = emb.filter(F.col("vec_id") < 2).select("vec_id", "embedding")
+    with pytest.raises(ValueError, match="0..K-1") as served:
+        S.ann_ivf_pq_topk_vs_index(queries, path, k=3)
+    assert str(served.value) == str(inline.value)
+
+
 def test_pq_adc_recall_vs_brute_force(spark, sf_dir):
     """PQ+ADC recall floor against exact cosine top-k, and the ADC
     ranking must equal an independent numpy recomputation of the same
